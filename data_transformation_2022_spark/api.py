@@ -16,10 +16,18 @@ Two deliberate deviations from the reference, per SURVEY watch-list:
   clobbers the session on every upload); sessions are objects, many can
   coexist.
 
-Interactive refinement (addT) is replay-from-root on Spark's lazy DAG:
-decoding a node id re-composes the logical plan, which is exactly the
-reference's ``nid2ndata`` re-execution (``search.py:1801-1810``) done by
-Catalyst instead of hand-rolled memo tables.
+Session state is one ``engine.Executor`` per ingested table — the
+reference's session-lived ``resdatabuffer`` (``search.py:293-298``) and
+``nid2ndata`` (``search.py:1801-1810``). ``_ingest`` builds it and dumps
+column values from its one collected sample; ``search`` hands it to
+``recommend()``, so a re-search (same candidates, confirmed or changed
+clusters, another ``vlist``) is served from the channel-frame and bar
+memos and runs only what is new; ``add_t`` / ``add_v`` take each node's
+full derived frame from ``Executor.steps_frame``, evaluated on the
+driver over the collected sample when the step evaluator proves it
+equal to Spark and replayed with ``apply_tpath`` on the cached sample
+otherwise. The memos live until the Executor is released: on re-ingest
+and on ``close()``, which drop its cached sample and derived bases.
 """
 
 from __future__ import annotations
@@ -29,10 +37,9 @@ from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from .engine import MAX_SERIES, RecommendResult, recommend
-from .operators.steps import RID, Step, apply_tpath, small_input_mode, step_from_dict
+from .engine import MAX_SERIES, Executor, RecommendResult, recommend
+from .operators.steps import RID, Step, apply_tpath, step_from_dict
 from .profiler import TableProfile, profile_table
 from .sources.readers import read_csv, read_json, read_parquet, with_rid
 
@@ -71,7 +78,8 @@ def decode_path(nid: str) -> list[dict[str, Any]]:
 
 
 class EngineSession:
-    """One ingested table + its profile + interactive refinement state."""
+    """One ingested table + its profile + the Executor whose memos serve
+    every search and refinement on it."""
 
     def __init__(self, spark: SparkSession, sample_cap: int = 1000):
         self.spark = spark
@@ -79,7 +87,13 @@ class EngineSession:
         self.df: DataFrame | None = None
         self.profile: TableProfile | None = None
         self.result: RecommendResult | None = None
-        self._sample: DataFrame | None = None
+        self._ex: Executor | None = None
+
+    def close(self) -> None:
+        """Release the table's Executor (cached sample, derived bases)."""
+        if self._ex is not None:
+            self._ex.release()
+            self._ex = None
 
     # ---- EP1: ingest + profile (reference /vis/csv, main.py:40-73) ----
 
@@ -101,10 +115,11 @@ class EngineSession:
         return self._ingest(df)
 
     def _ingest(self, df: DataFrame) -> dict[str, Any]:
+        self.close()
         self.df = with_rid(df)
         self.profile = profile_table(self.df)
-        self._sample = self.df.orderBy(RID).limit(self.sample_cap).cache()
-        sample_pdf = self._sample.toPandas()
+        self._ex = Executor(self.df, self.sample_cap)
+        sample_pdf, _ = self._ex._sample_local()
         body = []
         for name, cp in self.profile.columns.items():
             if name == RID:
@@ -157,7 +172,7 @@ class EngineSession:
             chart_types=chart_types,
             dm_ts=payload.get("dm_ts"),
             slist=payload.get("slist"),
-            sample_cap=self.sample_cap,
+            executor=self._ex,
         )
         ret = json.loads(self.result.to_json())
         # presentation reorder (reference BEAUTIFYCASEFLAG=True default,
@@ -171,9 +186,10 @@ class EngineSession:
     # ---- EP3a: addT (reference /vis/addT, main.py:111-125) ----
 
     def add_t(self, pid: str, t: str, para: dict[str, Any] | None = None) -> dict[str, Any]:
-        """Append one basic transformation to the node ``pid`` and execute
-        the extended path (replay-from-root = Spark lazy DAG)."""
-        if self._sample is None:
+        """Append one basic transformation to the node ``pid`` and return
+        the extended node with a preview of its first 20 rows in RID
+        order (the reference's pandas ``head``)."""
+        if self._ex is None:
             raise RuntimeError("ingest a table before refining")
         para = para or {}
         parent_steps = decode_path(pid)
@@ -186,11 +202,10 @@ class EngineSession:
             args=para.get("args") or [],
         )
         steps = parent_steps + [step.to_dict()]
-        with small_input_mode():  # interactive replay runs on the sample
-            derived = apply_tpath(self._sample, [step_from_dict(s) for s in steps])
+        derived = self._frame(steps)
         nid = path_id(steps)
         cols = [c for c in derived.columns if c != RID]
-        preview = derived.select(cols).limit(20).toPandas().to_dict(orient="list")
+        preview = derived[cols].head(20).to_dict(orient="list")
         node = {"id": nid, "node_type": "D", "label": t, "columns": cols}
         return {
             "result": {
@@ -206,13 +221,9 @@ class EngineSession:
     def add_v(self, vtype: str, channels: dict[str, str]) -> dict[str, Any]:
         """Materialize a chart from chosen channel node ids, unscored
         (reference addvisualization, search.py:1495-1794)."""
-        if self._sample is None:
+        if self._ex is None:
             raise RuntimeError("ingest a table before refining")
-        frames: dict[str, pd.DataFrame] = {}
-        with small_input_mode():
-            for ch, nid in channels.items():
-                steps = [step_from_dict(s) for s in decode_path(nid)]
-                frames[ch] = apply_tpath(self._sample, steps).toPandas()
+        frames = {ch: self._frame(decode_path(nid)) for ch, nid in channels.items()}
 
         if vtype in ("num_scatter", "cat_scatter"):
             data = self._join_channels(frames, ["xy", "color"])
@@ -247,6 +258,12 @@ class EngineSession:
             },
             "highlight": vid,
         }
+
+    def _frame(self, steps: list[dict[str, Any]]) -> pd.DataFrame:
+        """A node's full derived frame from the session memo (read-only);
+        chains the driver-side evaluator cannot prove replay through this
+        module's ``apply_tpath`` on the Executor's cached sample."""
+        return self._ex.steps_frame([step_from_dict(s) for s in steps], apply_tpath)
 
     @staticmethod
     def _join_channels(frames: dict[str, pd.DataFrame], order: list[str]) -> pd.DataFrame:

@@ -30,7 +30,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .ml.coret import CORE_T_RUNNERS
-from .operators.steps import RID, Step, apply_step, apply_tpath, small_input_mode
+from .operators.steps import (
+    RID,
+    Step,
+    apply_step,
+    apply_tpath,
+    small_input_mode,
+    steps_key,
+)
 from .operators.steps_local import eval_steps_local
 from .plans.catalog import CORE_T, VLIST
 from .plans.search import Candidate, enumerate_tpaths
@@ -92,14 +99,26 @@ def _merge_rid(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
             # construction preserves dtypes, column order and the
             # RangeIndex the concat+reset_index form produced. The
             # arrays may VIEW the inputs (copy=False) — safe because
-            # memoized channel frames are read-only by contract (every
-            # downstream consumer copies: sort_values, [[...]] slices,
-            # to_numpy).
+            # memoized channel frames are frozen read-only (_freeze), so
+            # a consumer that wrote into the merge would raise
             data = {c: left[c].to_numpy() for c in left.columns}
             for c in rcols:
                 data[c] = right[c].to_numpy()
             return pd.DataFrame(data, copy=False)
     return left.merge(right, on=RID)
+
+
+def _freeze(pdf: pd.DataFrame | None) -> pd.DataFrame | None:
+    """Mark a memoized frame's backing arrays read-only. Memo entries
+    outlive the search that filled them (a session re-search reuses
+    them) and _merge_rid(copy=False) aliases them, so an in-place write
+    must raise instead of silently corrupting the memo."""
+    if pdf is not None:
+        for blk in pdf._mgr.blocks:
+            arr = getattr(blk.values, "_ndarray", blk.values)
+            if isinstance(arr, np.ndarray):
+                arr.flags.writeable = False
+    return pdf
 
 
 @dataclass
@@ -168,8 +187,14 @@ class Executor:
         self.df = df
         # deterministic sample: limit over the stable row order
         self.sample = df.orderBy(RID).limit(sample_cap).cache()
+        # every memo table below outlives a single recommend(): a
+        # session (api.EngineSession) keeps one Executor per ingested
+        # table, so a re-search and the interactive refinements are memo
+        # hits; collected pandas entries are frozen read-only (_freeze)
         self._frames: dict[tuple, pd.DataFrame | None] = {}
         self._bar_frames: dict[tuple, pd.DataFrame | None] = {}
+        # full derived frames of user-built step chains (steps_frame)
+        self._step_frames: dict[tuple, pd.DataFrame] = {}
         # shared derived-table prefixes on the FULL table, persisted —
         # the reference's resdatabuffer (search.py:293-298): candidates
         # sharing a derivation (e.g. the global rank step) materialize
@@ -222,26 +247,54 @@ class Executor:
                         drop=True
                     )
                     self._sample_types = self.sample.dtypes
-                    self._sample_pdf = pdf
+                    self._sample_pdf = _freeze(pdf)
         return self._sample_pdf, self._sample_types
+
+    def _local_eval(
+        self, steps: list[Step]
+    ) -> tuple[pd.DataFrame, list[tuple[str, str]]] | None:
+        """The chain evaluated by the driver-side evaluator over the
+        collected sample (RID order); None when the evaluator is off or
+        equivalence with the Spark path is not proven."""
+        if not self._local_steps:
+            return None
+        try:
+            pdf, types = self._sample_local()
+            return eval_steps_local(pdf, types, steps)
+        except Exception:
+            return None
 
     def _local_channel_frame(self, cand: Candidate) -> pd.DataFrame | None:
         """Step-only channel frame served by the driver-side evaluator;
         None whenever equivalence with the Spark path is not proven
         (caller falls through to the Spark path)."""
-        if not self._local_steps:
+        res = self._local_eval(cand.steps)
+        if res is None or any(c not in res[0].columns for c in cand.out_cols):
             return None
-        try:
-            pdf, types = self._sample_local()
-            res = eval_steps_local(pdf, types, cand.steps)
-            if res is None:
-                return None
-            dpdf, _ = res
-            if any(c not in dpdf.columns for c in cand.out_cols):
-                return None
-            return dpdf[[RID, *cand.out_cols]].reset_index(drop=True)
-        except Exception:
-            return None
+        return res[0][[RID, *cand.out_cols]].reset_index(drop=True)
+
+    def steps_frame(self, steps: list[Step], replay=apply_tpath) -> pd.DataFrame:
+        """Full derived frame of a step chain over the sample, RID
+        order, memoized for the executor's life — the node data of the
+        interactive refinements (reference nid2ndata, search.py:1801-1810).
+        Served by the driver-side evaluator when it proves equivalence;
+        otherwise ``replay`` (apply_tpath by default; the session API
+        passes its own binding) runs the chain over the cached sample on
+        Spark. Spark-side errors propagate to the caller."""
+        key = steps_key(steps)
+        out = self._step_frames.get(key)
+        if out is None:
+            res = self._local_eval(steps)
+            if res is not None:
+                out = res[0].reset_index(drop=True)
+            else:
+                with small_input_mode():
+                    derived = replay(self.sample, steps)
+                if RID in derived.columns:
+                    derived = derived.orderBy(RID)
+                out = derived.toPandas()
+            out = self._step_frames[key] = _freeze(out)
+        return out
 
     def _local_coret_frame(
         self, cand: Candidate, coret: str
@@ -262,8 +315,7 @@ class Executor:
         try:
             from .ml.coret_local import eval_coret_local
 
-            pdf, types = self._sample_local()
-            res = eval_steps_local(pdf, types, cand.steps)
+            res = self._local_eval(cand.steps)
             if res is None:
                 return None
             dpdf, dtypes = res
@@ -284,18 +336,7 @@ class Executor:
         df = self.sample
         key: tuple = ()
         for s in steps:
-            # args are keyed by (type, repr): distinct values with equal
-            # str() — 1 vs '1', True vs 'True' — must not share a memo slot
-            key = key + (
-                (
-                    s.t,
-                    s.i_type,
-                    tuple(s.i),
-                    s.o_type,
-                    tuple(s.index),
-                    tuple((type(a).__name__, str(a)) for a in s.args),
-                ),
-            )
+            key = key + steps_key([s])
             hit = self._sample_bases.get(key)
             if hit is not None:
                 df = hit
@@ -364,7 +405,7 @@ class Executor:
                             out = res.toPandas() if res is not None else None
         except Exception:
             out = None
-        self._frames[key] = out
+        self._frames[key] = _freeze(out)
         return out
 
     def bar_aggregate(
@@ -398,7 +439,7 @@ class Executor:
                 out = base.groupBy(x_col).agg(*aggs).toPandas()
         except Exception:
             out = None
-        self._bar_frames[key] = out
+        self._bar_frames[key] = _freeze(out)
         return out
 
     def prefetch(
@@ -442,13 +483,14 @@ class Executor:
         uniq_bars: dict[tuple, tuple[str, Candidate | None, str]] = {}
         for x_col, y_cand, agg in bar_jobs:
             key = (x_col, y_cand.signature() if y_cand is not None else None, agg)
-            uniq_bars[key] = (x_col, y_cand, agg)
+            if key not in self._bar_frames:  # memo hit: no job to run
+                uniq_bars[key] = (x_col, y_cand, agg)
 
         # group bar jobs by derived base; within a base, by x column —
         # one GROUPING SETS job per base covers every x
         grouped: dict[tuple, dict[str, list]] = {}
         for key, (x_col, y_cand, agg) in uniq_bars.items():
-            derive_key = _chain_key(
+            derive_key = steps_key(
                 s
                 for s in (y_cand.steps if (agg == "sum" and y_cand) else [])
                 if s.o_type == "append"
@@ -490,7 +532,7 @@ class Executor:
                                 s for s in y_cand.steps if s.o_type == "append"
                             ]
                             if chain:
-                                chains[_chain_key(chain)] = chain
+                                chains[steps_key(chain)] = chain
                             ys = _prefer_derived(y_cand)[:MAX_SERIES]
                             names = []
                             for c in ys:
@@ -563,7 +605,9 @@ class Executor:
                                 pass
                         frames[x] = fr
                 for key, x_col, names in per_entry:
-                    self._bar_frames[key] = frames[x_col][[x_col] + names].copy()
+                    self._bar_frames[key] = _freeze(
+                        frames[x_col][[x_col] + names].copy()
+                    )
             except Exception:
                 # isolate failures: replay each entry through the
                 # original one-agg path so a single bad candidate can't
@@ -610,7 +654,7 @@ class Executor:
             for k in list(null_frames):
                 out = self._local_channel_frame(null_frames[k][0])
                 if out is not None:
-                    self._frames[k] = out
+                    self._frames[k] = _freeze(out)
                     del null_frames[k]
             if len(null_frames) > 1:
                 self._batch_step_frames(null_frames)
@@ -654,11 +698,11 @@ class Executor:
                 if agg == "sum" and y_cand is not None:
                     chain = [s for s in y_cand.steps if s.o_type == "append"]
                     if chain:
-                        chains[_chain_key(chain)] = chain
+                        chains[steps_key(chain)] = chain
             suffix: dict[tuple, set[str]] = {}
             for chain in chains.values():
                 for lvl in range(1, len(chain) + 1):
-                    ns = suffix.setdefault(_chain_key(chain[:lvl]), set())
+                    ns = suffix.setdefault(steps_key(chain[:lvl]), set())
                     for s in chain[lvl:]:
                         ns.update(s.i or [])
                         ns.update(s.index or [])
@@ -666,6 +710,10 @@ class Executor:
             def keep_fn(k: tuple) -> set[str]:
                 return needs | suffix.get(k, set())
 
+            # bases an earlier prefetch on this executor registered are
+            # already materialized; a key evicted and rebuilt since
+            # (_rebuild_base_unpruned) maps to a new DataFrame object
+            known = dict(self._derived_bases)
             for chain in chains.values():
                 self._derived_base(chain, keep_fn=keep_fn)
             _tr(f"table side: {len(chains)} chains registered")
@@ -673,6 +721,8 @@ class Executor:
             for key, base in self._derived_bases.items():
                 if key not in self._persisted_base_keys:
                     continue  # lazy projection: nothing to materialize
+                if known.get(key) is base:
+                    continue
                 by_level.setdefault(len(key), []).append(base)
             # groups with no derivation aggregate self.df directly (the
             # count bars and underived sums) — they don't wait for base
@@ -861,7 +911,7 @@ class Executor:
                             fr[c] = fr[c].astype(want)
                         except (ValueError, TypeError):
                             pass  # genuine nulls: solo toPandas keeps float too
-                self._frames[key] = fr
+                self._frames[key] = _freeze(fr)
 
         # chunked joins: Catalyst analysis of an N-way join tree grows
         # super-linearly in N (a single 24-way join measured ~4.5 s of
@@ -932,11 +982,11 @@ class Executor:
         _rebuild_base_unpruned."""
         if not derive:
             return self.df
-        key = _chain_key(derive)
+        key = steps_key(derive)
         if key not in self._derived_bases:
             parent = self._derived_base(derive[:-1], keep_fn=keep_fn)
             step = derive[-1]
-            parent_key = _chain_key(derive[:-1])
+            parent_key = steps_key(derive[:-1])
             parent_pruned = bool(derive[:-1]) and parent_key in self._pruned_base_keys
             if (
                 step.i_type == "=="
@@ -1009,7 +1059,7 @@ class Executor:
         recommend(), whose registration pass supplies the union of all
         consumers."""
         evicted = {
-            _chain_key(derive[:k_len]) for k_len in range(1, len(derive) + 1)
+            steps_key(derive[:k_len]) for k_len in range(1, len(derive) + 1)
         }
         stale = [
             k
@@ -1026,15 +1076,6 @@ class Executor:
                 except Exception:
                     pass
         return self._derived_base(derive)
-
-
-def _chain_key(steps) -> tuple:
-    """Canonical memo key of an append-step chain — the ONE place the
-    per-step tuple shape lives (_derived_base, prefetch's bar grouping,
-    and the rebuild eviction all key with it)."""
-    return tuple(
-        (s.t, s.i_type, tuple(s.i), s.o_type, tuple(s.index)) for s in steps
-    )
 
 
 def _prefer_derived(cand: Candidate) -> list[str]:
@@ -1055,7 +1096,7 @@ def _entry_name_contents(
 ) -> dict[Any, tuple]:
     """Every column name a bar entry touches on the shared merged base,
     mapped to the CONTENT that must produce it: ``()`` for a column read
-    from the original table, else the ``_chain_key`` of the producing
+    from the original table, else the ``steps_key`` of the producing
     chain PREFIX (lineage-inclusive: step tuples that are themselves
     equal but sit over different upstream derivations map differently,
     because the prefix key embeds the upstream steps).
@@ -1071,11 +1112,11 @@ def _entry_name_contents(
         return named
     chain = [s for s in y_cand.steps if s.o_type == "append"]
     if any(s.i_type != "==" for s in chain):
-        named[_CHAIN_CLASS] = _chain_key(chain)
+        named[_CHAIN_CLASS] = steps_key(chain)
     for i, s in enumerate(chain):
         for n in s.i or []:
             named.setdefault(n, ())  # read from the table unless derived above
-        pk = _chain_key(chain[: i + 1])
+        pk = steps_key(chain[: i + 1])
         for n in s.index or []:
             named[n] = pk
     for n in _prefer_derived(y_cand)[:MAX_SERIES]:
@@ -1122,11 +1163,18 @@ def recommend(
     slist: dict[str, bool] | None = None,
     max_channel_candidates: int = 12,
     max_depth: int = 2,
+    executor: Executor | None = None,
 ) -> RecommendResult:
     """Run the full recommendation pipeline and return ranked charts +
     provenance. ``max_depth`` defaults lower than the reference's 5:
     Pareto-surviving depth>2 chains add cost quadratically and the
-    reference itself prunes most of them."""
+    reference itself prunes most of them.
+
+    ``executor``: an Executor over ``df`` owned by the caller (the
+    session API keeps one per ingested table), whose memo tables serve
+    every frame and bar an earlier call already computed; its sample
+    size wins over ``sample_cap`` and the caller releases it. Without
+    one, recommend() builds its own and releases it before returning."""
     chart_types = chart_types or list(VLIST)
     dm_ts = dm_ts or ["pca", "kmeans", "mds", "dbscan"]
     slist = {**SLIST_DEFAULT, **(slist or {})}
@@ -1134,7 +1182,7 @@ def recommend(
     if profile is None:
         profile = profile_table(df)
     pools = enumerate_tpaths(profile, max_depth=max_depth)
-    ex = Executor(df, sample_cap)
+    ex = executor or Executor(df, sample_cap)
 
     # channel candidate lists: (t-name, Candidate, coret-or-None)
     def num2() -> list[tuple[str, Candidate, str | None]]:
@@ -1421,11 +1469,12 @@ def recommend(
             )
 
     ranked = _rank_dedup(charts)
-    # every downstream artifact is driver-side pandas by now: release the
-    # executor's cached sample and derived bases so repeated recommend()
-    # calls (a serving process, the bench suite) don't accumulate
-    # persisted RDDs and GC pressure
-    ex.release()
+    # every downstream artifact is driver-side pandas by now: release an
+    # executor of our own (cached sample, derived bases) so repeated
+    # recommend() calls (the bench suite) don't accumulate persisted RDDs
+    # and GC pressure; a caller-owned one stays live for its next request
+    if executor is None:
+        ex.release()
     return RecommendResult(ranked, profile, _provenance(ranked))
 
 

@@ -108,6 +108,25 @@ class Step:
         }
 
 
+def steps_key(steps) -> tuple:
+    """Canonical memo key of a step chain — the ONE place the per-step
+    tuple shape lives (candidate signatures, the engine's sample-prefix,
+    derived-base and full-frame memos all key with it). Args are keyed
+    by (type, str): distinct values with equal str() — 1 vs '1', True vs
+    'True' — must not share a memo slot."""
+    return tuple(
+        (
+            s.t,
+            s.i_type,
+            tuple(s.i),
+            s.o_type,
+            tuple(s.index),
+            tuple((type(a).__name__, str(a)) for a in s.args),
+        )
+        for s in steps
+    )
+
+
 def step_from_dict(d: dict[str, Any]) -> Step:
     return Step(
         t=d["t"],

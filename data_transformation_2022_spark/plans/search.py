@@ -27,7 +27,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from ..operators.steps import Step
+from ..operators.steps import Step, steps_key
 from ..profiler import TableProfile
 from .catalog import CLUSTER_OPS_2COL, CLUSTER_OPS_NCOL
 from .load import Load, cal_load, prune_dominated
@@ -49,11 +49,7 @@ class Candidate:
 
     def signature(self) -> tuple:
         """Canonical identity for dedup/memoization."""
-        return (
-            self.family,
-            tuple((s.t, s.i_type, tuple(s.i), s.o_type, tuple(s.index)) for s in self.steps),
-            tuple(self.out_cols),
-        )
+        return (self.family, steps_key(self.steps), tuple(self.out_cols))
 
 
 # ---------------------------------------------------------------------------

@@ -162,7 +162,7 @@ def test_bar_aggregate_rebuilds_pruned_base(spark):
     consumer set) must rebuild the base unpruned and return real sums —
     not fall through the except-to-None path (r8 advice)."""
     from data_transformation_2022_spark.engine import Executor
-    from data_transformation_2022_spark.operators.steps import Step
+    from data_transformation_2022_spark.operators.steps import Step, steps_key
     from data_transformation_2022_spark.plans.search import Candidate
 
     df = spark.createDataFrame(
@@ -175,7 +175,7 @@ def test_bar_aggregate_rebuilds_pruned_base(spark):
         family="sum_bar", steps=[rank], out_cols=["rank a"], derived=["rank a"]
     )
     ex.prefetch(frame_jobs=[], bar_jobs=[("g", cand_a, "sum")])
-    key = (("rank", "==", ("a",), "append", ("rank a",)),)
+    key = steps_key([rank])
     assert key in ex._persisted_base_keys
     # per-level pruning: neither the un-consumed column b NOR the rank
     # input a itself survives (no bar job and no later step reads them)

@@ -1,0 +1,218 @@
+"""Session-lived Executor: one per ingested table, serving every search
+and refinement from its memos (api.EngineSession)."""
+
+from __future__ import annotations
+
+import json
+
+import pytest
+
+from data_transformation_2022_spark.api import EngineSession, _json_default, path_id
+
+# every value is an integer or a short binary fraction, so any
+# summation order gives the same double and payloads compare byte for
+# byte across sessions
+_COLS = ["grp", "a", "c", "d", "f", "h", "k"]
+_ROWS = [
+    [
+        f"g{i % 3}",
+        i % 7,
+        float(i % 13),
+        float((i * 3) % 17),
+        float(1000 + (i * 7) % 19 * 97),
+        float(-500 - (i * 11) % 23 * 3001),
+        float((i * 13) % 29) / 64.0,
+    ]
+    for i in range(150)
+]
+
+_SUM = {"i_type": "==", "i": ["c_acctbal", "c_nationkey"], "o_type": "append", "index": ["bal"]}
+_RANK = {"i_type": "==", "i": ["bal"], "o_type": "append"}
+_SEGMENT = path_id(
+    [{"t": "select", "i_type": "==", "i": ["c_mktsegment"], "o_type": "new_table", "index": [], "args": []}]
+)
+
+
+def _dump(payload) -> str:
+    return json.dumps(payload, sort_keys=True, default=_json_default)
+
+
+def _jobs_submitted(spark) -> int:
+    """Jobs the DAG scheduler has accepted so far, from every thread
+    (the prefetch pools submit off the main thread)."""
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def _table_session(spark) -> EngineSession:
+    s = EngineSession(spark, sample_cap=60)
+    s.ingest_records(_COLS, _ROWS)
+    return s
+
+
+def test_add_t_add_v_identical_without_local_steps(spark, sf_dir, monkeypatch):
+    """A sum→rank chain previews its first 20 rows in RID order, and the
+    add_t / add_v payloads are byte-identical whether the driver-side
+    evaluator serves the chain or Spark replays it."""
+
+    def payloads() -> tuple[str, list]:
+        s = EngineSession(spark, sample_cap=200)
+        s.ingest_path(f"{sf_dir}/customer.parquet")
+        try:
+            first = s.add_t("root", "sum", _SUM)
+            ranked = s.add_t(first["highlight"], "rank", _RANK)
+            line = s.add_v("ord_line", {"y": ranked["highlight"]})
+            bar = s.add_v("count_bar", {"x": _SEGMENT})
+            head = list(s._ex._sample_local()[0]["c_custkey"].head(20))
+            return _dump([first, ranked, line, bar]), [ranked, head]
+        finally:
+            s.close()
+
+    monkeypatch.delenv("SPARK_GRAFT_NO_LOCAL_STEPS", raising=False)
+    local, (ranked, head) = payloads()
+    monkeypatch.setenv("SPARK_GRAFT_NO_LOCAL_STEPS", "1")
+    replayed, _ = payloads()
+    assert local == replayed
+    preview = ranked["result"]["preview"]
+    assert preview["c_custkey"] == head  # RID order, not rank order
+    assert sorted(preview["rank bal"]) != preview["rank bal"]
+
+
+def test_step_args_key_memos_apart(spark, sf_dir):
+    """Steps that differ only in ``args`` are different memo entries."""
+    from data_transformation_2022_spark.operators.steps import Step
+    from data_transformation_2022_spark.plans.search import Candidate
+
+    def cast(to: str) -> Step:
+        return Step(t="astype", i_type="==", i=["c_acctbal"], o_type="append", index=["v"], args=[to])
+
+    s = EngineSession(spark, sample_cap=50)
+    s.ingest_path(f"{sf_dir}/customer.parquet")
+    try:
+        para = {"i_type": "==", "i": ["c_acctbal"], "o_type": "append", "index": ["v"]}
+        as_int = s.add_t("root", "astype", {**para, "args": ["int"]})["result"]["preview"]["v"]
+        as_double = s.add_t("root", "astype", {**para, "args": ["double"]})["result"]["preview"]["v"]
+        assert as_int != as_double
+        assert all(isinstance(v, int) for v in as_int)
+
+        ex = s._ex
+        frames = [
+            ex.channel_frame(Candidate(family="null_num1", steps=[cast(to)], out_cols=["v"]), None)
+            for to in ("int", "double")
+        ]
+        assert str(frames[0]["v"].dtype) == "int64"
+        assert str(frames[1]["v"].dtype) == "float64"
+    finally:
+        s.close()
+
+
+def test_research_matches_fresh_session(spark, monkeypatch):
+    """Re-searching one session — with the clusters it was searched
+    with, with changed clusters (whose chains need rank outputs the
+    first search pruned from its persisted base, so the base is rebuilt
+    unpruned), and with another vlist — answers exactly what a fresh
+    session answers; the memo frames it reuses are read-only."""
+    from data_transformation_2022_spark.engine import Executor
+
+    rebuilds = []
+    rebuild = Executor._rebuild_base_unpruned
+
+    def spy(self, derive):
+        rebuilds.append(derive)
+        return rebuild(self, derive)
+
+    monkeypatch.setattr(Executor, "_rebuild_base_unpruned", spy)
+    payloads = [
+        {"dim_clusters": [["c", "d"]]},
+        {"dim_clusters": [["c", "d"]]},
+        {"dim_clusters": [["h", "k"]]},
+        {"dim_clusters": [["c", "d"]], "vlist": ["line", "bar"]},
+    ]
+    s = _table_session(spark)
+    try:
+        reused = [_dump(s.search(p)) for p in payloads]
+        memo = next(f for f in s._ex._frames.values() if f is not None)
+        with pytest.raises(ValueError, match="read-only"):
+            memo.iloc[0, 0] = -1
+    finally:
+        s.close()
+    assert rebuilds, "changed clusters must take the pruned-base rebuild path"
+    for p, got in zip(payloads, reused):
+        fresh = _table_session(spark)
+        try:
+            assert got == _dump(fresh.search(p)), p
+        finally:
+            fresh.close()
+
+
+def test_identical_research_submits_no_spark_jobs(spark):
+    """Everything an identical re-search needs is in the memos: no bar
+    grouping-sets pass, no base materialisation, no rank boundaries."""
+    s = _table_session(spark)
+    try:
+        first = s.search({})
+        before = _jobs_submitted(spark)
+        again = s.search({})
+        assert _jobs_submitted(spark) == before
+        assert _dump(again) == _dump(first)
+    finally:
+        s.close()
+
+
+def test_add_t_after_search_submits_no_spark_jobs(spark):
+    """A chain the driver-side evaluator proves is served from the
+    session's collected sample without a Spark job."""
+    s = _table_session(spark)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        s.search({"vlist": ["bar"]})
+        sc.setJobGroup("add_t_probe", "add_t after search")
+        try:
+            ret = s.add_t(
+                "root", "sum", {"i_type": "==", "i": ["c", "d"], "o_type": "append", "index": ["cd"]}
+            )
+            s.add_t(ret["highlight"], "rank", {"i_type": "==", "i": ["cd"], "o_type": "append"})
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(tracker.getJobIdsForGroup("add_t_probe")) == []
+    finally:
+        s.close()
+
+
+def test_close_and_reingest_reclaim_spark_storage(spark):
+    """The session's Executor caches the sample and derived bases; a
+    re-ingest and ``close()`` release them, so storage returns to its
+    baseline once references drop."""
+    import gc
+    import time
+
+    import data_transformation_2022_spark.engine as eng
+
+    def cached_rdds() -> int:
+        return sum(
+            1
+            for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+            if info.numCachedPartitions() > 0
+        )
+
+    while eng._PENDING_RELEASES:
+        eng._PENDING_RELEASES.pop().join(timeout=60)
+    base = cached_rdds()
+    s = EngineSession(spark, sample_cap=40)
+    for _ in range(2):  # the second ingest releases the first Executor
+        s.ingest_records(_COLS, _ROWS)
+        s.search({})
+        s.add_t("root", "rank", {"i_type": "==", "i": ["c"], "o_type": "append"})
+    assert cached_rdds() > base
+    s.close()
+    assert s._ex is None
+    while eng._PENDING_RELEASES:
+        eng._PENDING_RELEASES.pop().join(timeout=60)
+    deadline = time.time() + 60
+    while time.time() < deadline:
+        gc.collect()
+        spark.sparkContext._jvm.System.gc()
+        if cached_rdds() <= base:
+            break
+        time.sleep(1.0)
+    assert cached_rdds() <= base, f"closed session leaked cached RDDs: {cached_rdds()} > {base}"

@@ -348,8 +348,7 @@ def test_recommend_identical_with_evaluator_disabled(spark, monkeypatch):
         s = EngineSession(spark, sample_cap=400)
         s.ingest_path(os.path.join(REF, "ie19.csv"))
         out = s.search()
-        if s._sample is not None:
-            s._sample.unpersist()
+        s.close()
         import json
 
         return json.dumps(out, sort_keys=True, default=str)
