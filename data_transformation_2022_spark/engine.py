@@ -21,6 +21,7 @@ The Spark re-architecture of the reference's ``searchobj`` lifecycle
 from __future__ import annotations
 
 import json
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -195,6 +196,8 @@ class Executor:
         self._bar_frames: dict[tuple, pd.DataFrame | None] = {}
         # full derived frames of user-built step chains (steps_frame)
         self._step_frames: dict[tuple, pd.DataFrame] = {}
+        # scagnostics of each scatter xy frame, keyed like _frames
+        self._scagnostics: dict[tuple, dict[str, float]] = {}
         # shared derived-table prefixes on the FULL table, persisted —
         # the reference's resdatabuffer (search.py:293-298): candidates
         # sharing a derivation (e.g. the global rank step) materialize
@@ -462,21 +465,13 @@ class Executor:
         40 one-agg jobs become ~#bases jobs with identical memo
         contents (r12; r8-r11 batched per (base, x) — still ~#bases×#x
         scheduler round-trips, the dominant term of the bar pool's
-        4.5 s at sf0.1)."""
-        import os
-        import time as _time
-        from concurrent.futures import ThreadPoolExecutor
+        4.5 s at sf0.1).
 
-        _trace = bool(os.environ.get("SPARK_GRAFT_ENGINE_TRACE"))
-        _t0 = _time.time()
-
-        def _tr(msg: str) -> None:
-            if _trace:
-                import sys as _sys
-
-                print(f"ENGINE_TRACE {msg}: {_time.time() - _t0:.2f}s",
-                      file=_sys.stderr)
-
+        The frame side and the bar side fill disjoint memo tables, so a
+        caller may also run them as two concurrent calls,
+        ``prefetch(frame_jobs, [])`` and ``prefetch([], bar_jobs)``:
+        recommend() does, and assembles the sample-side charts while the
+        bar jobs run."""
         uniq_frames: dict[tuple, tuple[Candidate, str | None]] = {}
         for cand, coret in frame_jobs:
             uniq_frames[(cand.signature(), coret)] = (cand, coret)
@@ -658,14 +653,12 @@ class Executor:
                     del null_frames[k]
             if len(null_frames) > 1:
                 self._batch_step_frames(null_frames)
-            _tr("batch_step_frames done")
             with ThreadPoolExecutor(workers) as fpool:
                 list(
                     fpool.map(
                         lambda cv: self.channel_frame(*cv), uniq_frames.values()
                     )
                 )
-            _tr(f"frame pool done ({len(uniq_frames)} frames)")
 
         def _table_side() -> None:
             # Column hint for the persisted bases: the bar aggregates
@@ -716,7 +709,6 @@ class Executor:
             known = dict(self._derived_bases)
             for chain in chains.values():
                 self._derived_base(chain, keep_fn=keep_fn)
-            _tr(f"table side: {len(chains)} chains registered")
             by_level: dict[int, list[DataFrame]] = {}
             for key, base in self._derived_bases.items():
                 if key not in self._persisted_base_keys:
@@ -764,7 +756,6 @@ class Executor:
                     group = by_level[level]
                     with ThreadPoolExecutor(min(8, len(group))) as mpool:
                         list(mpool.map(lambda b: b.count(), group))
-                    _tr(f"level {level}: {len(group)} bases materialized")
                     futs += [
                         bpool.submit(_batched_bars, e)
                         for e in sched.pop(level, [])
@@ -773,13 +764,18 @@ class Executor:
                     futs += [bpool.submit(_batched_bars, e) for e in sched[lvl]]
                 for f in futs:
                     f.result()
-            _tr(f"bar pool done ({len(merged)} base jobs / "
-                f"{len(uniq_bars)} bar entries)")
 
+        # a side with no jobs is skipped, not run empty: in recommend()'s
+        # split calls an empty table side would iterate _derived_bases
+        # while the concurrent bar call registers new bases in it
         with ThreadPoolExecutor(2) as sides:
-            for f in [sides.submit(_sample_side), sides.submit(_table_side)]:
+            futs = [
+                sides.submit(side)
+                for side, jobs in ((_sample_side, uniq_frames), (_table_side, uniq_bars))
+                if jobs
+            ]
+            for f in futs:
                 f.result()
-        _tr("prefetch done")
 
     def release(self) -> None:
         """Unpersist everything this executor cached (sample + derived
@@ -842,20 +838,6 @@ class Executor:
         execution-time failure abandons the whole batch — either way the
         per-frame path re-runs whatever is still missing."""
         import functools
-        import os
-        import time as _time
-
-        _trace = bool(os.environ.get("SPARK_GRAFT_ENGINE_TRACE"))
-        _t0 = _time.time()
-
-        def _tr(msg: str) -> None:
-            if _trace:
-                import sys as _sys
-
-                print(
-                    f"ENGINE_TRACE bsf {msg}: {_time.time() - _t0:.2f}s",
-                    file=_sys.stderr,
-                )
 
         pieces, meta = [], []
         for i, (key, (cand, _)) in enumerate(jobs.items()):
@@ -877,7 +859,6 @@ class Executor:
             # so dtypes can be restored after the outer join promotes them
             col_types = [f.dataType.simpleString() for f in sel.schema.fields[2:]]
             meta.append((key, list(cand.out_cols), i, col_types))
-        _tr(f"build ({len(pieces)} pieces)")
         if not pieces:
             return
 
@@ -927,12 +908,9 @@ class Executor:
                     lambda a, b: a.join(b, RID, "outer"), group
                 )
                 pdf = joined.toPandas()
-                _tr(f"chunk@{lo} toPandas")
                 _consume(pdf, gmeta)
             except Exception:
                 return  # group falls through to the per-frame pool path
-
-        from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(4) as pool:
             list(pool.map(_one_group, range(0, len(pieces), CHUNK)))
@@ -1174,7 +1152,14 @@ def recommend(
     session API keeps one per ingested table), whose memo tables serve
     every frame and bar an earlier call already computed; its sample
     size wins over ``sample_cap`` and the caller releases it. Without
-    one, recommend() builds its own and releases it before returning."""
+    one, recommend() builds its own and releases it before returning.
+
+    The full-table bar jobs run on a second thread while this one
+    computes the sample-side channel frames and assembles and scores the
+    scatter, line and category-line charts; the bar charts are assembled
+    after that thread is joined. It is joined on every exit, an
+    exception included. Per-xy scagnostics are memoised on the executor,
+    so a re-search on a caller-owned executor recomputes none."""
     chart_types = chart_types or list(VLIST)
     dm_ts = dm_ts or ["pca", "kmeans", "mds", "dbscan"]
     slist = {**SLIST_DEFAULT, **(slist or {})}
@@ -1220,7 +1205,7 @@ def recommend(
         return {"t": t, "steps": [s.to_dict() for s in cand.steps], "cols": cols}
 
     # materialize candidate lists once, then fill the executor's memo
-    # tables with concurrent Spark jobs before the (serial) assembly
+    # tables with concurrent Spark jobs
     n2, c1, n1, nN, m1 = num2(), cat1(), num1(), numN(), nom1()
     frame_jobs: list[tuple[Candidate, str | None]] = []
     if {"num_scatter", "cat_scatter"} & set(chart_types):
@@ -1243,150 +1228,182 @@ def recommend(
     if "count_bar" in chart_types:
         for _, xc, _c in m1:
             bar_jobs.append((xc.out_cols[0], None, "count"))
-    ex.prefetch(frame_jobs, bar_jobs)
+    # bar charts are assembled last, after the bar thread is joined, so
+    # the chart append order (dedup keep-first, provenance ids) is the
+    # one a single-threaded assembly gives; the with-block joins the
+    # thread on every exit, so no bar job outlives a raising assembly
+    with ThreadPoolExecutor(1, thread_name_prefix="recommend-bars") as bar_pool:
+        bars = bar_pool.submit(ex.prefetch, [], bar_jobs)
+        ex.prefetch(frame_jobs, [])
 
-    # ---- scatters: xy (dim2 num) × color (num or cat) ----
-    if "num_scatter" in chart_types or "cat_scatter" in chart_types:
-        for t, cand, coret in n2:
-            xy = ex.channel_frame(cand, coret)
-            if xy is None or len(xy.columns) != 3:
-                continue
-            cx, cy = [c for c in xy.columns if c != RID]
-            # scagnostics depend only on the xy point cloud — compute the
-            # MST metrics ONCE per xy candidate, not per color pairing
-            # (the reference recomputes per chart; same values, ~#colors×
-            # less MST work)
-            sg_xy = scagnostics(
-                xy[cx].to_numpy(dtype=float), xy[cy].to_numpy(dtype=float)
-            )
-            if "num_scatter" in chart_types:
-                for ct, ccand, ccoret in n1:
-                    col_f = ex.channel_frame(ccand, ccoret)
-                    if col_f is None:
+        # ---- scatters: xy (dim2 num) × color (num or cat) ----
+        if "num_scatter" in chart_types or "cat_scatter" in chart_types:
+            for t, cand, coret in n2:
+                xy = ex.channel_frame(cand, coret)
+                if xy is None or len(xy.columns) != 3:
+                    continue
+                cx, cy = [c for c in xy.columns if c != RID]
+                # scagnostics depend only on the xy point cloud — compute the
+                # MST metrics ONCE per xy frame, not per color pairing (the
+                # reference recomputes per chart; same values, ~#colors×
+                # less MST work), memoised with the frame for a re-search
+                sg_key = (cand.signature(), coret)
+                sg_xy = ex._scagnostics.get(sg_key)
+                if sg_xy is None:
+                    sg_xy = ex._scagnostics[sg_key] = scagnostics(
+                        xy[cx].to_numpy(dtype=float), xy[cy].to_numpy(dtype=float)
+                    )
+                if "num_scatter" in chart_types:
+                    for ct, ccand, ccoret in n1:
+                        col_f = ex.channel_frame(ccand, ccoret)
+                        if col_f is None:
+                            continue
+                        merged = _merge_rid(xy, col_f)
+                        ccol = [c for c in col_f.columns if c != RID][0]
+                        charts.append(
+                            _score_scatter(
+                                "num_scatter", merged, cx, cy, ccol, False, slist,
+                                {"xy": ch_info(t, cand, [cx, cy]), "color": ch_info(ct, ccand, [ccol])},
+                                sg=sg_xy,
+                            )
+                        )
+                if "cat_scatter" in chart_types:
+                    for ct, ccand, ccoret in c1:
+                        col_f = ex.channel_frame(ccand, ccoret)
+                        if col_f is None:
+                            continue
+                        merged = _merge_rid(xy, col_f)
+                        ccol = [c for c in col_f.columns if c != RID][0]
+                        charts.append(
+                            _score_scatter(
+                                "cat_scatter", merged, cx, cy, ccol, True, slist,
+                                {"xy": ch_info(t, cand, [cx, cy]), "color": ch_info(ct, ccand, [ccol])},
+                                sg=sg_xy,
+                            )
+                        )
+
+        # ---- lines ----
+        if "rel_line" in chart_types:
+            for xt, xc, _ in n1:
+                xf = ex.channel_frame(xc, None)
+                if xf is None:
+                    continue
+                xcol = [c for c in xf.columns if c != RID][0]
+                for yt, yc, _ in nN:
+                    yf = ex.channel_frame(yc, None)
+                    if yf is None:
                         continue
-                    merged = _merge_rid(xy, col_f)
-                    ccol = [c for c in col_f.columns if c != RID][0]
+                    ycols = [c for c in _prefer_derived(yc) if c in yf.columns and c != xcol][:MAX_SERIES]
+                    if not ycols:
+                        continue
+                    merged = _merge_rid(xf, yf[[RID] + ycols]).sort_values(xcol)
+                    sc = {}
+                    if slist.get("linearness"):
+                        sc["linearness"] = float(
+                            np.mean([sig_linearness(merged[c].to_numpy(), merged[xcol].to_numpy()) for c in ycols])
+                        )
+                    if slist.get("correlation") and len(ycols) >= 2:
+                        sc["correlation"] = sig_correlation(merged[ycols].to_numpy())
                     charts.append(
-                        _score_scatter(
-                            "num_scatter", merged, cx, cy, ccol, False, slist,
-                            {"xy": ch_info(t, cand, [cx, cy]), "color": ch_info(ct, ccand, [ccol])},
-                            sg=sg_xy,
+                        ChartCandidate(
+                            "rel_line",
+                            {"x": ch_info(xt, xc, [xcol]), "y": ch_info(yt, yc, ycols)},
+                            sc,
+                            float(np.mean(list(sc.values()))) if sc else 0.0,
+                            merged[[xcol] + ycols],
                         )
                     )
-            if "cat_scatter" in chart_types:
-                for ct, ccand, ccoret in c1:
-                    col_f = ex.channel_frame(ccand, ccoret)
-                    if col_f is None:
-                        continue
-                    merged = _merge_rid(xy, col_f)
-                    ccol = [c for c in col_f.columns if c != RID][0]
-                    charts.append(
-                        _score_scatter(
-                            "cat_scatter", merged, cx, cy, ccol, True, slist,
-                            {"xy": ch_info(t, cand, [cx, cy]), "color": ch_info(ct, ccand, [ccol])},
-                            sg=sg_xy,
-                        )
-                    )
 
-    # ---- lines ----
-    if "rel_line" in chart_types:
-        for xt, xc, _ in n1:
-            xf = ex.channel_frame(xc, None)
-            if xf is None:
-                continue
-            xcol = [c for c in xf.columns if c != RID][0]
+        if "ord_line" in chart_types:
             for yt, yc, _ in nN:
                 yf = ex.channel_frame(yc, None)
                 if yf is None:
                     continue
-                ycols = [c for c in _prefer_derived(yc) if c in yf.columns and c != xcol][:MAX_SERIES]
-                if not ycols:
-                    continue
-                merged = _merge_rid(xf, yf[[RID] + ycols]).sort_values(xcol)
+                ycols = [c for c in _prefer_derived(yc) if c in yf.columns][:MAX_SERIES]
+                merged = yf.sort_values(RID)
                 sc = {}
                 if slist.get("linearness"):
-                    sc["linearness"] = float(
-                        np.mean([sig_linearness(merged[c].to_numpy(), merged[xcol].to_numpy()) for c in ycols])
-                    )
+                    sc["linearness"] = float(np.mean([sig_linearness(merged[c].to_numpy()) for c in ycols]))
                 if slist.get("correlation") and len(ycols) >= 2:
                     sc["correlation"] = sig_correlation(merged[ycols].to_numpy())
                 charts.append(
                     ChartCandidate(
-                        "rel_line",
-                        {"x": ch_info(xt, xc, [xcol]), "y": ch_info(yt, yc, ycols)},
+                        "ord_line",
+                        {"y": ch_info(yt, yc, ycols)},
                         sc,
                         float(np.mean(list(sc.values()))) if sc else 0.0,
-                        merged[[xcol] + ycols],
+                        merged[ycols],
                     )
                 )
 
-    if "ord_line" in chart_types:
-        for yt, yc, _ in nN:
-            yf = ex.channel_frame(yc, None)
-            if yf is None:
-                continue
-            ycols = [c for c in _prefer_derived(yc) if c in yf.columns][:MAX_SERIES]
-            merged = yf.sort_values(RID)
-            sc = {}
-            if slist.get("linearness"):
-                sc["linearness"] = float(np.mean([sig_linearness(merged[c].to_numpy()) for c in ycols]))
-            if slist.get("correlation") and len(ycols) >= 2:
-                sc["correlation"] = sig_correlation(merged[ycols].to_numpy())
-            charts.append(
-                ChartCandidate(
-                    "ord_line",
-                    {"y": ch_info(yt, yc, ycols)},
-                    sc,
-                    float(np.mean(list(sc.values()))) if sc else 0.0,
-                    merged[ycols],
-                )
-            )
-
-    # ---- category-split lines (reference rel_cat_line/ord_cat_line,
-    # search.py:1588-1719): one numeric y per nominal category series ----
-    if "rel_cat_line" in chart_types or "ord_cat_line" in chart_types:
-        # the inner (x, y) merge repeats VERBATIM for every grouping
-        # candidate g — memoize it per frame-identity pair (_merge_rid is
-        # pure; channel frames are memoized objects, so ids are stable
-        # for the life of this call). Loop and chart-append order are
-        # untouched (dedup keep-first + provenance ids depend on them).
-        _xy_memo: dict[tuple[int, int], pd.DataFrame] = {}
-        for gt, gc, _ in m1:
-            gf = ex.channel_frame(gc, None)
-            if gf is None:
-                continue
-            gcol = [c for c in gf.columns if c != RID][0]
-            cats = pd.unique(gf[gcol])
-            if not (2 <= len(cats) <= MAX_SERIES):
-                continue  # series cap (reference MAXLINENUMINCHART)
-            for yt, yc, _ in n1:
-                yf = ex.channel_frame(yc, None)
-                if yf is None:
+        # ---- category-split lines (reference rel_cat_line/ord_cat_line,
+        # search.py:1588-1719): one numeric y per nominal category series ----
+        if "rel_cat_line" in chart_types or "ord_cat_line" in chart_types:
+            # the inner (x, y) merge repeats VERBATIM for every grouping
+            # candidate g — memoize it per frame-identity pair (_merge_rid is
+            # pure; channel frames are memoized objects, so ids are stable
+            # for the life of this call). Loop and chart-append order are
+            # untouched (dedup keep-first + provenance ids depend on them).
+            _xy_memo: dict[tuple[int, int], pd.DataFrame] = {}
+            for gt, gc, _ in m1:
+                gf = ex.channel_frame(gc, None)
+                if gf is None:
                     continue
-                ycol = [c for c in yf.columns if c != RID][0]
-                if "rel_cat_line" in chart_types:
-                    for xt, xc, _ in n1:
-                        if xc is yc:
-                            continue
-                        xf = ex.channel_frame(xc, None)
-                        if xf is None:
-                            continue
-                        xcol = [c for c in xf.columns if c != RID][0]
-                        if xcol == ycol:
-                            continue
-                        _mk = (id(xf), id(yf))
-                        _xy = _xy_memo.get(_mk)
-                        if _xy is None:
-                            _xy = _xy_memo[_mk] = _merge_rid(xf, yf)
-                        merged = _merge_rid(_xy, gf).sort_values(xcol)
-                        # pandas == for the mask (None/NA semantics),
-                        # numpy for the slice — same rows in the same
-                        # order as merged.loc[mask, ycol].to_numpy()
+                gcol = [c for c in gf.columns if c != RID][0]
+                cats = pd.unique(gf[gcol])
+                if not (2 <= len(cats) <= MAX_SERIES):
+                    continue  # series cap (reference MAXLINENUMINCHART)
+                for yt, yc, _ in n1:
+                    yf = ex.channel_frame(yc, None)
+                    if yf is None:
+                        continue
+                    ycol = [c for c in yf.columns if c != RID][0]
+                    if "rel_cat_line" in chart_types:
+                        for xt, xc, _ in n1:
+                            if xc is yc:
+                                continue
+                            xf = ex.channel_frame(xc, None)
+                            if xf is None:
+                                continue
+                            xcol = [c for c in xf.columns if c != RID][0]
+                            if xcol == ycol:
+                                continue
+                            _mk = (id(xf), id(yf))
+                            _xy = _xy_memo.get(_mk)
+                            if _xy is None:
+                                _xy = _xy_memo[_mk] = _merge_rid(xf, yf)
+                            merged = _merge_rid(_xy, gf).sort_values(xcol)
+                            # pandas == for the mask (None/NA semantics),
+                            # numpy for the slice — same rows in the same
+                            # order as merged.loc[mask, ycol].to_numpy()
+                            _gs = merged[gcol]
+                            _yv = merged[ycol].to_numpy()
+                            series = [
+                                _yv[(_gs == cat).to_numpy()] for cat in cats
+                            ]
+                            sc = {}
+                            if slist.get("linearness"):
+                                sc["linearness"] = float(
+                                    np.mean([sig_linearness(s) for s in series if len(s) >= 3] or [0.0])
+                                )
+                            charts.append(
+                                ChartCandidate(
+                                    "rel_cat_line",
+                                    {
+                                        "x": ch_info(xt, xc, [xcol]),
+                                        "y": ch_info(yt, yc, [ycol]),
+                                        "color": ch_info(gt, gc, [gcol]),
+                                    },
+                                    sc,
+                                    float(np.mean(list(sc.values()))) if sc else 0.0,
+                                    merged[[xcol, ycol, gcol]],
+                                )
+                            )
+                    if "ord_cat_line" in chart_types:
+                        merged = _merge_rid(yf, gf).sort_values(RID)
                         _gs = merged[gcol]
                         _yv = merged[ycol].to_numpy()
-                        series = [
-                            _yv[(_gs == cat).to_numpy()] for cat in cats
-                        ]
+                        series = [_yv[(_gs == cat).to_numpy()] for cat in cats]
                         sc = {}
                         if slist.get("linearness"):
                             sc["linearness"] = float(
@@ -1394,36 +1411,14 @@ def recommend(
                             )
                         charts.append(
                             ChartCandidate(
-                                "rel_cat_line",
-                                {
-                                    "x": ch_info(xt, xc, [xcol]),
-                                    "y": ch_info(yt, yc, [ycol]),
-                                    "color": ch_info(gt, gc, [gcol]),
-                                },
+                                "ord_cat_line",
+                                {"y": ch_info(yt, yc, [ycol]), "color": ch_info(gt, gc, [gcol])},
                                 sc,
                                 float(np.mean(list(sc.values()))) if sc else 0.0,
-                                merged[[xcol, ycol, gcol]],
+                                merged[[ycol, gcol]],
                             )
                         )
-                if "ord_cat_line" in chart_types:
-                    merged = _merge_rid(yf, gf).sort_values(RID)
-                    _gs = merged[gcol]
-                    _yv = merged[ycol].to_numpy()
-                    series = [_yv[(_gs == cat).to_numpy()] for cat in cats]
-                    sc = {}
-                    if slist.get("linearness"):
-                        sc["linearness"] = float(
-                            np.mean([sig_linearness(s) for s in series if len(s) >= 3] or [0.0])
-                        )
-                    charts.append(
-                        ChartCandidate(
-                            "ord_cat_line",
-                            {"y": ch_info(yt, yc, [ycol]), "color": ch_info(gt, gc, [gcol])},
-                            sc,
-                            float(np.mean(list(sc.values()))) if sc else 0.0,
-                            merged[[ycol, gcol]],
-                        )
-                    )
+    bars.result()
 
     # ---- bars (full-table distributed aggregation) ----
     if "sum_bar" in chart_types:
@@ -1487,13 +1482,12 @@ def _score_scatter(
     cat_color: bool,
     slist: dict[str, bool],
     channels: dict[str, dict[str, Any]],
-    sg: dict[str, float] | None = None,
+    sg: dict[str, float],
 ) -> ChartCandidate:
+    """Score one scatter; ``sg`` is its xy frame's (memoised) scagnostics."""
     x = merged[cx].to_numpy(dtype=float)
     y = merged[cy].to_numpy(dtype=float)
     sc: dict[str, float] = {}
-    if sg is None:
-        sg = scagnostics(x, y)
     for k, v in sg.items():
         if slist.get(k):
             sc[k] = v * 100.0

@@ -9,10 +9,11 @@ Spark-first mapping:
   * **pca / kmeans / lda** — exact distributed ``pyspark.ml`` pipelines
     (VectorAssembler → MinMaxScaler → model), seeds pinned (kmeans k=3
     seed=9 matches the reference Tfunctions.py:98). Correct at any scale.
-  * **mds** — classical (Torgerson) MDS: double-centered Gram eigen-
-    decomposition in numpy on a bounded sample. The reference is
-    sample-bound by design (400-row cap), so a driver-side sample is
-    faithful; at scale the engine samples before calling.
+  * **mds** — classical (Torgerson) MDS in numpy on a bounded sample,
+    computed as the centred-PCA scores it equals on Euclidean input
+    (``classical_mds``: a p×p, not n×n, eigendecomposition). The
+    reference is sample-bound by design (400-row cap), so a driver-side
+    sample is faithful; at scale the engine samples before calling.
   * **dbscan** — numpy DBSCAN (eps=0.25, min_samples=5 like
     Tfunctions.py:90-94) on the sample; sklearn-free.
   * **tsne / umap** — sklearn/umap-learn are not in this environment:
@@ -359,17 +360,34 @@ def _collect_sample(df: DataFrame, cols: list[str], cap: int = 2000) -> pd.DataF
 
 
 def classical_mds(x: np.ndarray, k: int = 2) -> np.ndarray:
-    """Torgerson classical MDS: eigendecomposition of the double-centered
-    squared-distance Gram matrix (pure numpy; deterministic)."""
-    sq = ((x[:, None, :] - x[None, :, :]) ** 2).sum(-1)
-    n = sq.shape[0]
-    j = np.eye(n) - np.ones((n, n)) / n
-    b = -0.5 * j @ sq @ j
-    vals, vecs = np.linalg.eigh(b)
+    """Torgerson classical MDS of the n rows of ``x`` (n × p) onto ``k``
+    axes, in pure numpy and deterministic.
+
+    Torgerson's embedding is the top-k eigenvectors of the
+    double-centred squared-distance Gram matrix B = −½·J·D²·J, each
+    scaled by √λ. On Euclidean input B = Xc·Xcᵀ (Xc: ``x`` centred per
+    column), so those coordinates are the centred-PCA scores Xc·V, with
+    V the top-k eigenvectors of the p × p matrix Xcᵀ·Xc. That is what is
+    computed here: O(n·p²) instead of the n × n eigendecomposition's
+    O(n³), equal to it up to round-off.
+
+    * An axis whose eigenvalue is round-off (≤ λmax·max(n, p)·eps, i.e.
+      rank-deficient input) or that does not exist (k > p) is exact
+      zeros — no noise for downstream scaling to stretch.
+    * Each axis is signed so its largest-|coordinate| is positive.
+    * Any non-finite input gives an all-NaN (n, k) array."""
+    n, p = x.shape
+    if not np.isfinite(x).all():
+        return np.full((n, k), np.nan)
+    xc = x - x.mean(axis=0)
+    vals, vecs = np.linalg.eigh(xc.T @ xc)
     idx = np.argsort(vals)[::-1][:k]
-    comp = vecs[:, idx] * np.sqrt(np.maximum(vals[idx], 0.0))
+    tol = vals.max() * max(n, p) * np.finfo(float).eps
+    idx = idx[vals[idx] > tol]
+    comp = np.zeros((n, k))
+    comp[:, : len(idx)] = xc @ vecs[:, idx]
     # deterministic sign convention: largest-|coordinate| positive
-    for d in range(comp.shape[1]):
+    for d in range(len(idx)):
         i = np.argmax(np.abs(comp[:, d]))
         if comp[i, d] < 0:
             comp[:, d] = -comp[:, d]
@@ -391,8 +409,10 @@ def numpy_tsne(
 
     Fully deterministic: PCA initialization (sign-fixed, scaled to 1e-4
     std as in the standard implementation), no random sampling anywhere.
-    O(n²) per iteration — the input is the ≤400-row sample the reference
-    itself is bound to, never the full table."""
+    O(n²) per iteration — the input is a bounded sample, never the full
+    table: the engine passes up to its ``sample_cap`` rows (1000 by
+    default) and ``_collect_sample`` caps the Spark runner at 2000, both
+    above the reference's 400-row bound."""
     n = x.shape[0]
     if n < 4:
         return np.zeros((n, 2))
@@ -532,8 +552,9 @@ def numpy_umap(
     full-batch gradient descent over all pairs instead of
     negative-sampling SGD, which removes every source of randomness —
     deterministic spectral init (sign-fixed Laplacian eigenvectors) and
-    a linearly decaying learning rate. O(n²) per iteration; input is the
-    ≤400-row sample the reference is bound to."""
+    a linearly decaying learning rate. O(n²) per iteration; input is a
+    bounded sample — up to the engine's ``sample_cap`` rows (1000 by
+    default), at most 2000 through ``_collect_sample``."""
     n = x.shape[0]
     if n < 4:
         return np.zeros((n, 2))

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_transformation_2022_spark.ml.coret import (
+    classical_mds,
     run_dbscan,
     run_kmeans,
     run_lda,
@@ -56,6 +57,63 @@ def test_mds_two_components(num_df):
     out = run_mds(df).toPandas()
     assert list(out.columns) == [RID, "MDS-1", "MDS-2"]
     assert len(out) == 300 and out["MDS-1"].std() > 0
+
+
+def _torgerson(x: np.ndarray, k: int = 2) -> np.ndarray:
+    """Textbook classical MDS: the top-k eigenvectors of the n×n
+    double-centred squared-distance matrix −½·J·D²·J, scaled by √λ,
+    each signed so its largest-|coordinate| is positive."""
+    n = len(x)
+    sq = ((x[:, None, :] - x[None, :, :]) ** 2).sum(-1)
+    j = np.eye(n) - np.ones((n, n)) / n
+    vals, vecs = np.linalg.eigh(-0.5 * j @ sq @ j)
+    idx = np.argsort(vals)[::-1][:k]
+    comp = vecs[:, idx] * np.sqrt(np.maximum(vals[idx], 0.0))
+    for d in range(k):
+        if comp[np.argmax(np.abs(comp[:, d])), d] < 0:
+            comp[:, d] = -comp[:, d]
+    return comp
+
+
+@pytest.mark.parametrize("n", [30, 400, 1000])
+def test_classical_mds_matches_torgerson(n):
+    rs = np.random.RandomState(n)
+    for p in range(3, 12):
+        x = rs.rand(n, p)
+        x[: n // 5] = x[0]  # duplicate rows
+        x[:, 1] = np.round(x[:, 1] * 4) / 4  # tied values
+        got, want = classical_mds(x), _torgerson(x)
+        assert got.shape == (n, 2)
+        assert np.abs(got - want).max() <= 1e-9, p
+        assert np.array_equal(np.round(got, 6), np.round(want, 6)), p
+
+
+def test_classical_mds_rank_deficient_axes_are_exact_zeros():
+    t = np.linspace(0.0, 1.0, 50)
+    rank1 = np.outer(t, [1.0, 2.0, 3.0]) + 0.25
+    out = classical_mds(rank1)
+    assert np.abs(out[:, 0]).max() > 0 and (out[:, 1] == 0.0).all()
+    rs = np.random.RandomState(3)
+    rank2 = rs.rand(40, 2) @ rs.rand(2, 6)
+    out = classical_mds(rank2, k=4)
+    assert (np.abs(out[:, :2]).max(axis=0) > 0).all()
+    assert (out[:, 2:] == 0.0).all()
+    assert (classical_mds(np.ones((10, 3))) == 0.0).all()
+
+
+def test_classical_mds_one_column_and_non_finite():
+    x = np.array([[1.0], [2.0], [4.0], [9.0]])
+    out = classical_mds(x)
+    assert out.shape == (4, 2)
+    assert np.allclose(out[:, 0], x[:, 0] - x.mean())
+    assert (out[:, 1] == 0.0).all()
+    for n in (20, 40):
+        x = np.random.RandomState(n).rand(n, 3)
+        x[3, 1] = np.nan
+        out = classical_mds(x)
+        assert out.shape == (n, 2) and np.isnan(out).all()
+        x[3, 1] = np.inf
+        assert np.isnan(classical_mds(x)).all()
 
 
 def test_numpy_tsne_deterministic_and_cluster_preserving():

@@ -216,3 +216,66 @@ def test_close_and_reingest_reclaim_spark_storage(spark):
             break
         time.sleep(1.0)
     assert cached_rdds() <= base, f"closed session leaked cached RDDs: {cached_rdds()} > {base}"
+
+
+def test_research_reuses_memoised_scagnostics(spark, monkeypatch):
+    """The per-xy scagnostics live on the session's Executor with the
+    frames: a re-search computes none and answers the same payload."""
+    import data_transformation_2022_spark.engine as eng
+
+    calls = []
+    real = eng.scagnostics
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(eng, "scagnostics", counted)
+    s = _table_session(spark)
+    try:
+        first = s.search({})
+        assert calls and len(calls) == len(s._ex._scagnostics)
+        calls.clear()
+        again = s.search({})
+        assert calls == []
+        assert _dump(again) == _dump(first)
+    finally:
+        s.close()
+
+
+def test_scatter_failure_joins_bar_thread(spark, monkeypatch):
+    """recommend() runs the bar jobs on a second thread while it
+    assembles the scatters; a scatter failure propagates only after that
+    thread is joined, so no Spark job outlives the call."""
+    import threading
+
+    import data_transformation_2022_spark.engine as eng
+
+    raised = threading.Event()
+    bars_done = threading.Event()
+    prefetch = eng.Executor.prefetch
+
+    def gated_prefetch(self, frame_jobs, bar_jobs, *args, **kwargs):
+        if bar_jobs and not frame_jobs:
+            # the bar side is still to run when the scatter raises
+            assert raised.wait(60)
+            prefetch(self, frame_jobs, bar_jobs, *args, **kwargs)
+            bars_done.set()
+        else:
+            prefetch(self, frame_jobs, bar_jobs, *args, **kwargs)
+
+    def failing_score(*args, **kwargs):
+        raised.set()
+        raise RuntimeError("scatter assembly failed")
+
+    monkeypatch.setattr(eng.Executor, "prefetch", gated_prefetch)
+    monkeypatch.setattr(eng, "_score_scatter", failing_score)
+    s = _table_session(spark)
+    try:
+        with pytest.raises(RuntimeError, match="scatter assembly failed"):
+            s.search({})
+        assert bars_done.is_set()
+        assert not [t for t in threading.enumerate() if t.name.startswith("recommend-bars")]
+        assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
+    finally:
+        s.close()
