@@ -118,7 +118,7 @@ class EngineSession:
         self.close()
         self.df = with_rid(df)
         self.profile = profile_table(self.df)
-        self._ex = Executor(self.df, self.sample_cap)
+        self._ex = Executor(self.df, self.sample_cap, self.profile.quantiles)
         sample_pdf, _ = self._ex._sample_local()
         body = []
         for name, cp in self.profile.columns.items():

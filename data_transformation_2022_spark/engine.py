@@ -89,7 +89,12 @@ def _merge_rid(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
     path that dropped rows) or a payload-name collision (merge would
     suffix _x/_y) — falls back to the real merge, so the output is
     bit-identical either way (byte-stable recommend goldens +
-    tests/test_engine.py pin this)."""
+    tests/test_engine.py pin this). A frame with a repeated column name
+    raises ValueError: the dict-of-arrays path would keep one of them."""
+    for side in (left, right):
+        if side.columns.has_duplicates:
+            dup = sorted(set(side.columns[side.columns.duplicated()]))
+            raise ValueError(f"_merge_rid: duplicate column names {dup}")
     lv = left[RID].to_numpy()
     rv = right[RID].to_numpy()
     if lv.shape == rv.shape and (lv == rv).all():
@@ -177,7 +182,15 @@ _PENDING_RELEASES: list = []
 class Executor:
     """Memoized pipeline executor (reference resdatabuffer)."""
 
-    def __init__(self, df: DataFrame, sample_cap: int):
+    def __init__(
+        self,
+        df: DataFrame,
+        sample_cap: int,
+        quantiles: dict[str, list] | None = None,
+    ):
+        """``quantiles``: a quantile grid per source column of ``df``
+        (``TableProfile.quantiles``), used as the bucket boundaries of
+        full-table ranks; columns without one get a boundary job."""
         while _PENDING_RELEASES:
             try:
                 _PENDING_RELEASES.pop().join(timeout=60)
@@ -196,14 +209,20 @@ class Executor:
         self._bar_frames: dict[tuple, pd.DataFrame | None] = {}
         # full derived frames of user-built step chains (steps_frame)
         self._step_frames: dict[tuple, pd.DataFrame] = {}
-        # scagnostics of each scatter xy frame, keyed like _frames
-        self._scagnostics: dict[tuple, dict[str, float]] = {}
+        # assembled, scored charts, keyed by chart type, slist and each
+        # channel's (t, candidate signature, core-T) — a re-search
+        # assembles and scores nothing
+        self._charts: dict[tuple, ChartCandidate] = {}
         # shared derived-table prefixes on the FULL table, persisted —
         # the reference's resdatabuffer (search.py:293-298): candidates
         # sharing a derivation (e.g. the global rank step) materialize
         # it once instead of re-running its jobs per chart
         self._derived_bases: dict[tuple, DataFrame] = {}
-        self._persisted_base_keys: set[tuple] = set()
+        # chain key → the frames persisted for that base (its bucket-local
+        # ranking, or the base itself for a wide stacked rank); the
+        # executor owns them and release() unpersists them
+        self._persisted: dict[tuple, list[DataFrame]] = {}
+        self._quantiles = quantiles or {}
         # chains whose memoized frame carries FEWER columns/ranked
         # outputs than the unpruned derivation would (keep_fn pruning,
         # inherited transitively by children built over them) — the
@@ -301,33 +320,39 @@ class Executor:
 
     def _local_coret_frame(
         self, cand: Candidate, coret: str
-    ) -> pd.DataFrame | None:
+    ) -> tuple[pd.DataFrame | None, bool]:
         """Core-T channel frame served by the driver-side evaluator
         (ml/coret_local): the step chain is evaluated by the proven
         steps_local contract, then the runner math — driver numpy in
-        both paths — runs directly on the pandas prefix. None whenever
-        equivalence with the Spark path is not proven (caller falls
-        through to the Spark runner). Row-order note: pca/kmeans emit in
-        the derived frame's own order, so coret_local only serves them
-        for chains with no rank/nominalize step (where that order is
-        provably RID — the same invariant _batch_step_frames relies on);
-        the sample-bound transforms (mds/tsne/umap/dbscan) re-sort by
-        RID internally and serve for any provable chain."""
+        both paths — runs directly on the pandas prefix. Returns
+        ``(frame, served)``: ``served`` is False whenever equivalence
+        with the Spark path is not proven (caller falls through to the
+        Spark runner); a served None frame means the runner provably
+        returns None (its numeric-column guard fails). Row-order note:
+        pca/kmeans emit in the derived frame's own order, so coret_local
+        only serves them for chains with no rank/nominalize step (where
+        that order is provably RID — the same invariant
+        _batch_step_frames relies on); the sample-bound transforms
+        (mds/tsne/umap/dbscan) re-sort by RID internally and serve for
+        any provable chain."""
         if not self._local_coret:
-            return None
+            return None, False
         try:
-            from .ml.coret_local import eval_coret_local
+            from .ml.coret_local import PROVEN_NONE, eval_coret_local
 
             res = self._local_eval(cand.steps)
             if res is None:
-                return None
+                return None, False
             dpdf, dtypes = res
             rid_order = not any(
                 s.t in ("rank", "nominalize") for s in cand.steps
             )
-            return eval_coret_local(dpdf, dtypes, coret, rid_order=rid_order)
+            out = eval_coret_local(dpdf, dtypes, coret, rid_order=rid_order)
         except Exception:
-            return None
+            return None, False
+        if out is PROVEN_NONE:
+            return None, True
+        return out, out is not None
 
     def _sample_derived(self, steps) -> DataFrame:
         """apply_tpath over the cached sample with shared-prefix memo +
@@ -392,17 +417,13 @@ class Executor:
                         # VERDICT r13 #1): the runner math is driver
                         # numpy either way — serve it from the proven
                         # pandas sample prefix and skip the 2-3 bounded
-                        # Spark jobs per frame. PROVEN_NONE = the
+                        # Spark jobs per frame. A served None = the
                         # runner's numeric-column guard provably fails
                         # (the only sample-side Spark job left in the
                         # bench shape built a rank prefix solely to
-                        # produce that None); None → the Spark path
-                        from .ml.coret_local import PROVEN_NONE
-
-                        out = self._local_coret_frame(cand, coret)
-                        if out is PROVEN_NONE:
-                            out = None
-                        elif out is None:
+                        # produce that None); not served → the Spark path
+                        out, served = self._local_coret_frame(cand, coret)
+                        if not served:
                             derived = self._sample_derived(cand.steps)
                             res = CORE_T_RUNNERS[coret](derived)
                             out = res.toPandas() if res is not None else None
@@ -622,13 +643,13 @@ class Executor:
         #   job over the ≤sample_cap cached sample), then the per-frame
         #   pool (memo hits for everything the batch served, per-frame
         #   jobs for core-T frames);
-        # * table side: serial derived-base registration (plan-only,
-        #   bottom-up through the recursive prefix memo so ('rank','sub')
-        #   reuses the cached ('rank',) table and racing threads never
-        #   duplicate work), per-level concurrent materialization (within
-        #   a level the bases share no lineage; across levels a child
-        #   reads its parent's persisted blocks), then the batched bar
-        #   pool against the materialized bases.
+        # * table side: serial derived-base registration (bottom-up
+        #   through the recursive prefix memo so ('rank','sub') reuses
+        #   the cached ('rank',) table and racing threads never duplicate
+        #   work; a rank level runs its one offsets job, which
+        #   materialises its persisted ranking), concurrent per-level
+        #   materialization of any base persisted as a whole, then the
+        #   batched bar pool against the materialized bases.
         #
         # Both sides fill disjoint memo tables (_frames vs _bar_frames /
         # _derived_bases), so the only shared state is the sample-prefix
@@ -703,35 +724,16 @@ class Executor:
             def keep_fn(k: tuple) -> set[str]:
                 return needs | suffix.get(k, set())
 
-            # bases an earlier prefetch on this executor registered are
-            # already materialized; a key evicted and rebuilt since
-            # (_rebuild_base_unpruned) maps to a new DataFrame object
-            known = dict(self._derived_bases)
-            for chain in chains.values():
-                self._derived_base(chain, keep_fn=keep_fn)
-            by_level: dict[int, list[DataFrame]] = {}
-            for key, base in self._derived_bases.items():
-                if key not in self._persisted_base_keys:
-                    continue  # lazy projection: nothing to materialize
-                if known.get(key) is base:
-                    continue
-                by_level.setdefault(len(key), []).append(base)
-            # groups with no derivation aggregate self.df directly (the
-            # count bars and underived sums) — they don't wait for base
-            # materialization; derived-base groups queue once their base
-            # is materialized. The pool is wider than the frame pool:
-            # each bar group is one small groupBy job whose cost is
-            # mostly scheduler latency, so concurrency, not executor
-            # pressure, bounds the wall time.
+            # a chain prefix is persisted iff its last step is a rank or
+            # nominalize (_derived_base), so the level after which a
+            # group's longest persisted prefix is materialized follows
+            # from its key; arithmetic tails past it are lazy projections
+            # the group's own job computes
             def _ready_level(dk: tuple) -> int:
-                # level after which this group's longest PERSISTED chain
-                # prefix is materialized; arithmetic tails past it are
-                # lazy projections the group's own job computes
-                lvl = 0
-                for L in range(1, len(dk) + 1):
-                    if dk[:L] in self._persisted_base_keys:
-                        lvl = L
-                return lvl
+                return max(
+                    (L for L, s in enumerate(dk, 1) if s[0] in ("rank", "nominalize")),
+                    default=0,
+                )
 
             # merge chain groups by (ready level, persisted prefix):
             # chains sharing a materialized prefix differ only in their
@@ -740,18 +742,39 @@ class Executor:
             # the underived/count group over self.df
             merged: dict[tuple, dict[str, list]] = {}
             for dk, bx in grouped.items():
-                lvl = _ready_level(dk) if dk else 0
+                lvl = _ready_level(dk)
                 tgt = merged.setdefault((lvl, dk[:lvl]), {})
                 for x, es in bx.items():
                     tgt.setdefault(x, []).extend(es)
             sched: dict[int, list] = {}
             for (lvl, _pk), bx in merged.items():
                 sched.setdefault(lvl, []).append(bx)
+            # The pool is wider than the frame pool: each bar group is one
+            # small groupBy job whose cost is mostly scheduler latency, so
+            # concurrency, not executor pressure, bounds the wall time.
+            # Bases an earlier prefetch on this executor registered are
+            # already materialized; a key evicted and rebuilt since
+            # (_rebuild_base_unpruned) maps to a new DataFrame object.
+            known = dict(self._derived_bases)
             with ThreadPoolExecutor(max(workers, 16)) as bpool:
-                # level-0 groups have no persisted base to wait for;
-                # each later group queues as soon as ITS base's level
-                # finishes materializing, not after all levels
+                # level-0 groups read self.df or plan-only arithmetic
+                # projections of it, which their own threads register
+                # (disjoint keys; keep_fn prunes rank levels only): queued
+                # first, their jobs run while the rank levels register
                 futs = [bpool.submit(_batched_bars, e) for e in sched.pop(0, [])]
+                # registering a rank level runs its one offsets job,
+                # which materialises its persisted bucket-local ranking;
+                # only a base persisted as a whole (the wide stacked
+                # rank) is materialised here, level by level — within a
+                # level the bases share no lineage, across levels a
+                # child reads its parent's persisted blocks
+                for ck, chain in chains.items():
+                    if _ready_level(ck):
+                        self._derived_base(chain, keep_fn=keep_fn)
+                by_level: dict[int, list[DataFrame]] = {}
+                for key, base in list(self._derived_bases.items()):
+                    if base.is_cached and known.get(key) is not base:
+                        by_level.setdefault(len(key), []).append(base)
                 for level in sorted(by_level):
                     group = by_level[level]
                     with ThreadPoolExecutor(min(8, len(group))) as mpool:
@@ -760,7 +783,7 @@ class Executor:
                         bpool.submit(_batched_bars, e)
                         for e in sched.pop(level, [])
                     ]
-                for lvl in sorted(sched):  # defensive flush
+                for lvl in sorted(sched):
                     futs += [bpool.submit(_batched_bars, e) for e in sched[lvl]]
                 for f in futs:
                     f.result()
@@ -797,9 +820,9 @@ class Executor:
         import threading
 
         sample = self.sample
-        derived = list(self._derived_bases.values())
+        derived = [f for frames in self._persisted.values() for f in frames]
         self._derived_bases.clear()
-        self._persisted_base_keys.clear()
+        self._persisted.clear()
         self._pruned_base_keys.clear()
         # _sample_bases (localCheckpoint blocks, ≤sample_cap rows each)
         # are NOT explicitly unpersisted: each ``.rdd`` access re-runs
@@ -817,9 +840,9 @@ class Executor:
                 sample.unpersist()
             except Exception:
                 pass
-            for base in derived:
+            for frame in derived:
                 try:
-                    base.unpersist()
+                    frame.unpersist()
                 except Exception:
                     pass
 
@@ -1006,13 +1029,28 @@ class Executor:
                         index=[step.index[j] for j in used],
                         o_type=step.o_type,
                     )
-            child = apply_tpath(parent, [step])
-            if step.t in ("rank", "nominalize"):
+            if step.t not in ("rank", "nominalize"):
+                child = apply_tpath(parent, [step])
+            else:
+                # RID always survives: a downstream rank step uses it
+                # as the pandas-faithful tie-break, and apply_step
+                # silently drops the tie-break when RID is absent —
+                # a value change, not an error
+                if keep is not None and step.i_type == "==":
+                    # the ranking is persisted with its input's columns:
+                    # hand it only what the rank or a consumer reads
+                    need = [
+                        c for c in parent.columns
+                        if c in keep or c == RID or c in step.i
+                    ]
+                    if len(need) < len(parent.columns):
+                        reduced = True
+                        parent = parent.select(*need)
+                owned: list[DataFrame] = []
+                child = apply_step(
+                    parent, step, boundaries=self._quantiles, persisted=owned
+                )
                 if keep is not None:
-                    # RID always survives: a downstream rank step uses it
-                    # as the pandas-faithful tie-break, and apply_step
-                    # silently drops the tie-break when RID is absent —
-                    # a value change, not an error
                     pruned = [
                         c for c in child.columns if c in keep or c == RID
                     ]
@@ -1020,8 +1058,12 @@ class Executor:
                         if len(pruned) < len(child.columns):
                             reduced = True
                         child = child.select(*pruned)
-                child = child.persist()
-                self._persisted_base_keys.add(key)
+                if not owned:
+                    # the wide stacked rank persists nothing itself:
+                    # persist the base, which prefetch materialises
+                    child = child.persist()
+                    owned.append(child)
+                self._persisted[key] = owned
             if parent_pruned or reduced:
                 self._pruned_base_keys.add(key)
             self._derived_bases[key] = child
@@ -1041,16 +1083,15 @@ class Executor:
         }
         stale = [
             k
-            for k in self._derived_bases
+            for k in list(self._derived_bases)
             if k in evicted or any(k[: len(e)] == e for e in evicted)
         ]
         for key in stale:
-            cached = self._derived_bases.pop(key, None)
+            self._derived_bases.pop(key, None)
             self._pruned_base_keys.discard(key)
-            if cached is not None and key in self._persisted_base_keys:
-                self._persisted_base_keys.discard(key)
+            for frame in self._persisted.pop(key, []):
                 try:
-                    cached.unpersist()
+                    frame.unpersist()
                 except Exception:
                     pass
         return self._derived_base(derive)
@@ -1158,8 +1199,12 @@ def recommend(
     computes the sample-side channel frames and assembles and scores the
     scatter, line and category-line charts; the bar charts are assembled
     after that thread is joined. It is joined on every exit, an
-    exception included. Per-xy scagnostics are memoised on the executor,
-    so a re-search on a caller-owned executor recomputes none."""
+    exception included. The full-table rank bases take their bucket
+    boundaries from the profile's quantile grid and their offsets from
+    the persisted ranking itself, so each costs one Spark job. Every
+    assembled, scored chart is memoised on the executor, so a repeated
+    search on a caller-owned executor submits no job and assembles and
+    scores nothing."""
     chart_types = chart_types or list(VLIST)
     dm_ts = dm_ts or ["pca", "kmeans", "mds", "dbscan"]
     slist = {**SLIST_DEFAULT, **(slist or {})}
@@ -1167,7 +1212,7 @@ def recommend(
     if profile is None:
         profile = profile_table(df)
     pools = enumerate_tpaths(profile, max_depth=max_depth)
-    ex = executor or Executor(df, sample_cap)
+    ex = executor or Executor(df, sample_cap, profile.quantiles)
 
     # channel candidate lists: (t-name, Candidate, coret-or-None)
     def num2() -> list[tuple[str, Candidate, str | None]]:
@@ -1200,9 +1245,24 @@ def recommend(
         return [("null_nom1", c, None) for c in pools["null_nom1"]][:max_channel_candidates]
 
     charts: list[ChartCandidate] = []
+    slist_key = tuple(sorted(slist.items()))
 
     def ch_info(t: str, cand: Candidate, cols: list[str]) -> dict[str, Any]:
         return {"t": t, "steps": [s.to_dict() for s in cand.steps], "cols": cols}
+
+    def add(ctype: str, chans: list[tuple[str, Candidate, str | None]], build) -> None:
+        """Append the ``ctype`` chart over these channels ((t, candidate,
+        core-T) each). A chart is a function of its memoised channel
+        frames and of slist, so it is memoised on the executor with that
+        key (read-only, like the frames); ``build()`` assembles and
+        scores it on a miss."""
+        key = (ctype, slist_key, *((t, c.signature(), ct) for t, c, ct in chans))
+        chart = ex._charts.get(key)
+        if chart is None:
+            chart = build()
+            _freeze(chart.data)
+            ex._charts[key] = chart
+        charts.append(chart)
 
     # materialize candidate lists once, then fill the executor's memo
     # tables with concurrent Spark jobs
@@ -1246,40 +1306,36 @@ def recommend(
                 # scagnostics depend only on the xy point cloud — compute the
                 # MST metrics ONCE per xy frame, not per color pairing (the
                 # reference recomputes per chart; same values, ~#colors×
-                # less MST work), memoised with the frame for a re-search
-                sg_key = (cand.signature(), coret)
-                sg_xy = ex._scagnostics.get(sg_key)
-                if sg_xy is None:
-                    sg_xy = ex._scagnostics[sg_key] = scagnostics(
-                        xy[cx].to_numpy(dtype=float), xy[cy].to_numpy(dtype=float)
-                    )
-                if "num_scatter" in chart_types:
-                    for ct, ccand, ccoret in n1:
-                        col_f = ex.channel_frame(ccand, ccoret)
-                        if col_f is None:
-                            continue
-                        merged = _merge_rid(xy, col_f)
-                        ccol = [c for c in col_f.columns if c != RID][0]
-                        charts.append(
-                            _score_scatter(
-                                "num_scatter", merged, cx, cy, ccol, False, slist,
-                                {"xy": ch_info(t, cand, [cx, cy]), "color": ch_info(ct, ccand, [ccol])},
-                                sg=sg_xy,
+                # less MST work), and only when one of its charts is built
+                sg_xy: list[dict[str, float]] = []
+
+                def scatter(ctype, ct, ccand, col_f) -> ChartCandidate:
+                    if not sg_xy:
+                        sg_xy.append(
+                            scagnostics(
+                                xy[cx].to_numpy(dtype=float),
+                                xy[cy].to_numpy(dtype=float),
                             )
                         )
-                if "cat_scatter" in chart_types:
-                    for ct, ccand, ccoret in c1:
+                    ccol = [c for c in col_f.columns if c != RID][0]
+                    return _score_scatter(
+                        ctype, _merge_rid(xy, col_f), cx, cy, ccol,
+                        ctype == "cat_scatter", slist,
+                        {"xy": ch_info(t, cand, [cx, cy]), "color": ch_info(ct, ccand, [ccol])},
+                        sg=sg_xy[0],
+                    )
+
+                for ctype, colors in (("num_scatter", n1), ("cat_scatter", c1)):
+                    if ctype not in chart_types:
+                        continue
+                    for ct, ccand, ccoret in colors:
                         col_f = ex.channel_frame(ccand, ccoret)
                         if col_f is None:
                             continue
-                        merged = _merge_rid(xy, col_f)
-                        ccol = [c for c in col_f.columns if c != RID][0]
-                        charts.append(
-                            _score_scatter(
-                                "cat_scatter", merged, cx, cy, ccol, True, slist,
-                                {"xy": ch_info(t, cand, [cx, cy]), "color": ch_info(ct, ccand, [ccol])},
-                                sg=sg_xy,
-                            )
+                        add(
+                            ctype,
+                            [(t, cand, coret), (ct, ccand, ccoret)],
+                            lambda: scatter(ctype, ct, ccand, col_f),
                         )
 
         # ---- lines ----
@@ -1296,45 +1352,49 @@ def recommend(
                     ycols = [c for c in _prefer_derived(yc) if c in yf.columns and c != xcol][:MAX_SERIES]
                     if not ycols:
                         continue
-                    merged = _merge_rid(xf, yf[[RID] + ycols]).sort_values(xcol)
-                    sc = {}
-                    if slist.get("linearness"):
-                        sc["linearness"] = float(
-                            np.mean([sig_linearness(merged[c].to_numpy(), merged[xcol].to_numpy()) for c in ycols])
-                        )
-                    if slist.get("correlation") and len(ycols) >= 2:
-                        sc["correlation"] = sig_correlation(merged[ycols].to_numpy())
-                    charts.append(
-                        ChartCandidate(
+
+                    def rel_line() -> ChartCandidate:
+                        merged = _merge_rid(xf, yf[[RID] + ycols]).sort_values(xcol)
+                        sc = {}
+                        if slist.get("linearness"):
+                            sc["linearness"] = float(
+                                np.mean([sig_linearness(merged[c].to_numpy(), merged[xcol].to_numpy()) for c in ycols])
+                            )
+                        if slist.get("correlation") and len(ycols) >= 2:
+                            sc["correlation"] = sig_correlation(merged[ycols].to_numpy())
+                        return ChartCandidate(
                             "rel_line",
                             {"x": ch_info(xt, xc, [xcol]), "y": ch_info(yt, yc, ycols)},
                             sc,
                             float(np.mean(list(sc.values()))) if sc else 0.0,
                             merged[[xcol] + ycols],
                         )
-                    )
+
+                    add("rel_line", [(xt, xc, None), (yt, yc, None)], rel_line)
 
         if "ord_line" in chart_types:
             for yt, yc, _ in nN:
                 yf = ex.channel_frame(yc, None)
                 if yf is None:
                     continue
-                ycols = [c for c in _prefer_derived(yc) if c in yf.columns][:MAX_SERIES]
-                merged = yf.sort_values(RID)
-                sc = {}
-                if slist.get("linearness"):
-                    sc["linearness"] = float(np.mean([sig_linearness(merged[c].to_numpy()) for c in ycols]))
-                if slist.get("correlation") and len(ycols) >= 2:
-                    sc["correlation"] = sig_correlation(merged[ycols].to_numpy())
-                charts.append(
-                    ChartCandidate(
+
+                def ord_line() -> ChartCandidate:
+                    ycols = [c for c in _prefer_derived(yc) if c in yf.columns][:MAX_SERIES]
+                    merged = yf.sort_values(RID)
+                    sc = {}
+                    if slist.get("linearness"):
+                        sc["linearness"] = float(np.mean([sig_linearness(merged[c].to_numpy()) for c in ycols]))
+                    if slist.get("correlation") and len(ycols) >= 2:
+                        sc["correlation"] = sig_correlation(merged[ycols].to_numpy())
+                    return ChartCandidate(
                         "ord_line",
                         {"y": ch_info(yt, yc, ycols)},
                         sc,
                         float(np.mean(list(sc.values()))) if sc else 0.0,
                         merged[ycols],
                     )
-                )
+
+                add("ord_line", [(yt, yc, None)], ord_line)
 
         # ---- category-split lines (reference rel_cat_line/ord_cat_line,
         # search.py:1588-1719): one numeric y per nominal category series ----
@@ -1345,6 +1405,16 @@ def recommend(
             # for the life of this call). Loop and chart-append order are
             # untouched (dedup keep-first + provenance ids depend on them).
             _xy_memo: dict[tuple[int, int], pd.DataFrame] = {}
+
+            def linearness(series: list[np.ndarray]) -> dict[str, float]:
+                if not slist.get("linearness"):
+                    return {}
+                return {
+                    "linearness": float(
+                        np.mean([sig_linearness(s) for s in series if len(s) >= 3] or [0.0])
+                    )
+                }
+
             for gt, gc, _ in m1:
                 gf = ex.channel_frame(gc, None)
                 if gf is None:
@@ -1368,26 +1438,20 @@ def recommend(
                             xcol = [c for c in xf.columns if c != RID][0]
                             if xcol == ycol:
                                 continue
-                            _mk = (id(xf), id(yf))
-                            _xy = _xy_memo.get(_mk)
-                            if _xy is None:
-                                _xy = _xy_memo[_mk] = _merge_rid(xf, yf)
-                            merged = _merge_rid(_xy, gf).sort_values(xcol)
-                            # pandas == for the mask (None/NA semantics),
-                            # numpy for the slice — same rows in the same
-                            # order as merged.loc[mask, ycol].to_numpy()
-                            _gs = merged[gcol]
-                            _yv = merged[ycol].to_numpy()
-                            series = [
-                                _yv[(_gs == cat).to_numpy()] for cat in cats
-                            ]
-                            sc = {}
-                            if slist.get("linearness"):
-                                sc["linearness"] = float(
-                                    np.mean([sig_linearness(s) for s in series if len(s) >= 3] or [0.0])
-                                )
-                            charts.append(
-                                ChartCandidate(
+
+                            def rel_cat_line() -> ChartCandidate:
+                                _mk = (id(xf), id(yf))
+                                _xy = _xy_memo.get(_mk)
+                                if _xy is None:
+                                    _xy = _xy_memo[_mk] = _merge_rid(xf, yf)
+                                merged = _merge_rid(_xy, gf).sort_values(xcol)
+                                # pandas == for the mask (None/NA semantics),
+                                # numpy for the slice — same rows in the same
+                                # order as merged.loc[mask, ycol].to_numpy()
+                                _gs = merged[gcol]
+                                _yv = merged[ycol].to_numpy()
+                                sc = linearness([_yv[(_gs == cat).to_numpy()] for cat in cats])
+                                return ChartCandidate(
                                     "rel_cat_line",
                                     {
                                         "x": ch_info(xt, xc, [xcol]),
@@ -1398,26 +1462,28 @@ def recommend(
                                     float(np.mean(list(sc.values()))) if sc else 0.0,
                                     merged[[xcol, ycol, gcol]],
                                 )
+
+                            add(
+                                "rel_cat_line",
+                                [(xt, xc, None), (yt, yc, None), (gt, gc, None)],
+                                rel_cat_line,
                             )
                     if "ord_cat_line" in chart_types:
-                        merged = _merge_rid(yf, gf).sort_values(RID)
-                        _gs = merged[gcol]
-                        _yv = merged[ycol].to_numpy()
-                        series = [_yv[(_gs == cat).to_numpy()] for cat in cats]
-                        sc = {}
-                        if slist.get("linearness"):
-                            sc["linearness"] = float(
-                                np.mean([sig_linearness(s) for s in series if len(s) >= 3] or [0.0])
-                            )
-                        charts.append(
-                            ChartCandidate(
+
+                        def ord_cat_line() -> ChartCandidate:
+                            merged = _merge_rid(yf, gf).sort_values(RID)
+                            _gs = merged[gcol]
+                            _yv = merged[ycol].to_numpy()
+                            sc = linearness([_yv[(_gs == cat).to_numpy()] for cat in cats])
+                            return ChartCandidate(
                                 "ord_cat_line",
                                 {"y": ch_info(yt, yc, [ycol]), "color": ch_info(gt, gc, [gcol])},
                                 sc,
                                 float(np.mean(list(sc.values()))) if sc else 0.0,
                                 merged[[ycol, gcol]],
                             )
-                        )
+
+                        add("ord_cat_line", [(yt, yc, None), (gt, gc, None)], ord_cat_line)
     bars.result()
 
     # ---- bars (full-table distributed aggregation) ----
@@ -1428,21 +1494,23 @@ def recommend(
                 agg = ex.bar_aggregate(xcol, yc, "sum")
                 if agg is None or agg.empty:
                     continue
-                ys = [c for c in agg.columns if c != xcol]
-                sc = {}
-                if slist.get("outstanding1"):
-                    sc["outstanding1"] = float(
-                        np.mean([sig_outstanding1(agg[c].to_numpy()) for c in ys])
-                    )
-                charts.append(
-                    ChartCandidate(
+
+                def sum_bar() -> ChartCandidate:
+                    ys = [c for c in agg.columns if c != xcol]
+                    sc = {}
+                    if slist.get("outstanding1"):
+                        sc["outstanding1"] = float(
+                            np.mean([sig_outstanding1(agg[c].to_numpy()) for c in ys])
+                        )
+                    return ChartCandidate(
                         "sum_bar",
                         {"x": ch_info(xt, xc, [xcol]), "y": ch_info(yt, yc, ys)},
                         sc,
                         float(np.mean(list(sc.values()))) if sc else 0.0,
                         agg,
                     )
-                )
+
+                add("sum_bar", [(xt, xc, None), (yt, yc, None)], sum_bar)
 
     if "count_bar" in chart_types:
         for xt, xc, _ in m1:
@@ -1450,18 +1518,20 @@ def recommend(
             agg = ex.bar_aggregate(xcol, None, "count")
             if agg is None or agg.empty:
                 continue
-            sc = {}
-            if slist.get("outstanding1"):
-                sc["outstanding1"] = sig_outstanding1(agg["COUNT"].to_numpy())
-            charts.append(
-                ChartCandidate(
+
+            def count_bar() -> ChartCandidate:
+                sc = {}
+                if slist.get("outstanding1"):
+                    sc["outstanding1"] = sig_outstanding1(agg["COUNT"].to_numpy())
+                return ChartCandidate(
                     "count_bar",
                     {"x": ch_info(xt, xc, [xcol])},
                     sc,
                     float(np.mean(list(sc.values()))) if sc else 0.0,
                     agg,
                 )
-            )
+
+            add("count_bar", [(xt, xc, None)], count_bar)
 
     ranked = _rank_dedup(charts)
     # every downstream artifact is driver-side pandas by now: release an

@@ -5,22 +5,29 @@ reducer — fine at 400 rows (the reference's world, ``MAXSOURCEDATAROWS``
 config.py:1), fatal at 100 TB. These helpers compute the same global
 ranks with no single-reducer stage:
 
-1. Sample the leading order key once on the driver and freeze ~P
-   quantile boundaries as plan LITERALS. (``repartitionByRange`` is not
-   usable here: its RangePartitioner seeds sampling from the RDD id, so
-   two evaluations of the same plan can disagree on boundaries — the
-   offsets collected from pass one would silently corrupt pass two.)
+1. Freeze ~P boundaries of the leading order key as plan LITERALS:
+   sampled once on the driver, or handed in by a caller that already
+   has a quantile sketch of the column (``global_ranks_multi``'s
+   ``boundaries``). (``repartitionByRange`` is not usable here: its
+   RangePartitioner seeds sampling from the RDD id, so two evaluations
+   of the same plan can disagree on boundaries — the offsets collected
+   from pass one would silently corrupt pass two.)
 2. ``bucket = Σ (key ≥ boundary_i)`` — a pure, deterministic, codegen'd
-   expression of the row, identical in every pass.
-3. One counting pass per bucket (count, or locally-distinct count for
-   dense ranks — disjoint across buckets because equal keys share a
-   bucket) → cumulative offsets, a P-entry driver map.
+   expression of the row, identical in every pass, monotone in the key
+   whatever the boundaries are (nulls → bucket 0).
+3. Per-bucket counts (count, or distinct count for dense ranks —
+   disjoint across buckets because equal keys share a bucket) →
+   cumulative offsets, a P-entry driver map. Either a counting pass
+   before the ranking, or ``max(local rank)`` per bucket read off a
+   persisted bucket-local ranking (``materialize`` / ``persisted``).
 4. A PARTITIONED window (partition = bucket) for the local rank, plus
    the broadcast offset.
 
 Every stage is parallel; the only global objects are the boundary
-literals and the offsets map (P entries each). Cost: two small driver
-jobs (sample, counts) before the ranking pass.
+literals and the offsets map (P entries each). Cost before the ranking
+pass: a boundary job unless the boundaries are given, and a counting
+job unless the counts come off the persisted ranking — so a persisted
+ranking over given boundaries runs one job in all.
 """
 
 from __future__ import annotations
@@ -65,6 +72,17 @@ def _boundaries(df: DataFrame, key: str, num_buckets: int) -> list:
         return []
     step = max(1, len(vals) // num_buckets)
     return sorted({vals[i] for i in range(step, len(vals), step)})
+
+
+def _thin(grid: list, num_buckets: int) -> list:
+    """At most ``num_buckets - 1`` evenly spaced points of a sorted grid
+    (the quartiles of a k/32 grid for 4 buckets): a given grid makes as
+    many buckets as computed boundaries would — more buckets only add
+    window groups and bucket-expression terms per row."""
+    m = len(grid)
+    if m < num_buckets:
+        return grid
+    return list(dict.fromkeys(grid[round(i * (m - 1) / num_buckets)] for i in range(1, num_buckets)))
 
 
 def _bucket_expr(key: str, bounds: list) -> Column:
@@ -144,9 +162,11 @@ def global_row_number(
         counts = {r[_BUCKET]: r["__n"] for r in per_part}
     else:
         if dense:
-            # equal keys share a bucket → per-bucket distinct counts are disjoint
+            # equal keys share a bucket → per-bucket distinct counts are
+            # disjoint; the struct counts a key with nulls as a value, as
+            # dense_rank ranks it
             per_part = part.groupBy(_BUCKET).agg(
-                F.count_distinct(*[F.col(c) for c in order_by]).alias("__n")
+                F.count_distinct(F.struct(*order_by)).alias("__n")
             ).collect()
         else:
             per_part = part.groupBy(_BUCKET).agg(F.count(F.lit(1)).alias("__n")).collect()
@@ -182,22 +202,41 @@ def global_ranks_multi(
     zero_based: bool = False,
     tie_col: str | None = None,
     num_partitions: int | None = None,
+    boundaries: dict[str, list] | None = None,
+    persisted: list[DataFrame] | None = None,
 ) -> DataFrame:
-    """Rank SEVERAL columns with shared small jobs: ONE aggregate for all
-    boundary sets (numeric: percentile_approx per column; other: one
-    shared seeded sample) and ONE aggregate for all per-bucket counts
-    (conditional sums — 32 buckets × N columns of codegen'd CASE
-    aggregates), then one bucket-partitioned window per column. Same
-    values as N calls to global_row_number, N-1 fewer boundary jobs and
-    N-1 fewer count jobs — the driver-job overhead, not the data pass,
-    dominates multi-column rank steps."""
+    """Rank SEVERAL columns with shared small jobs, one bucket-partitioned
+    window per column. Same values as N calls to global_row_number with
+    N-1 fewer boundary jobs and N-1 fewer count jobs — the driver-job
+    overhead, not the data pass, dominates multi-column rank steps.
+
+    ``boundaries``: a quantile grid per column the caller already has
+    (the engine passes the profiler's k/32 grid), thinned to as many
+    buckets as computed boundaries give. Boundaries only balance the
+    buckets, so any list gives the same ranks; columns not in it get
+    theirs from ONE aggregate for all of them (numeric:
+    percentile_approx per column; other: one shared seeded sample).
+
+    ``persisted``: without it, ONE counting aggregate for all columns
+    gives the per-bucket counts before the ranking pass. With it, the
+    bucket-local ranking itself is persisted and appended to the list —
+    the caller owns it and unpersists it — and the counts are read off
+    it as ``max(local rank)`` per (column, bucket): one job that also
+    materialises the ranking, and the returned frame is a narrow
+    projection over it. Given boundaries for every column and a
+    ``persisted`` list, the call runs that one job and no other."""
     sc = df.sparkSession.sparkContext
     n = num_partitions or sc.defaultParallelism
     dtypes = dict(df.dtypes)
 
-    numeric = [c for c in cols if dtypes[c].split("(")[0] in _NUMERIC_BASES]
-    other = [c for c in cols if c not in numeric]
-    bounds: dict[str, list] = {}
+    bounds: dict[str, list] = {
+        c: _thin(sorted({v for v in boundaries[c] if v is not None}), n)
+        for c in cols
+        if boundaries and boundaries.get(c) is not None
+    }
+    todo = [c for c in cols if c not in bounds]
+    numeric = [c for c in todo if dtypes[c].split("(")[0] in _NUMERIC_BASES]
+    other = [c for c in todo if c not in numeric]
     if numeric:
         probs = [i / n for i in range(1, n)]
         row = df.select(
@@ -217,23 +256,93 @@ def global_ranks_multi(
             bounds[c] = sorted({vals[i] for i in range(step, len(vals), step)}) if vals else []
 
     bucket_cols = {c: f"__grm_{i}" for i, c in enumerate(cols)}
+
+    def _local(c: str) -> Column:
+        order = [F.col(c)] if dense else [F.col(c)] + (
+            [F.col(tie_col)] if tie_col else []
+        )
+        w = Window.partitionBy(bucket_cols[c]).orderBy(*order)
+        return (F.dense_rank() if dense else F.row_number()).over(w)
+
+    def _offsets(ci: int, c: str, counts: dict) -> Column:
+        """Column c's bucket → rows (or distinct keys) in lower buckets,
+        as ONE parsed map literal: a create_map of F.lit pairs costs two
+        py4j round trips per bucket."""
+        acc, entries = 0, []
+        for b in range(len(bounds[c]) + 1):
+            entries.append(f"{b}, {acc}")
+            acc += int(counts.get((ci, b), 0))
+        return F.expr(f"map({', '.join(entries)})[`{bucket_cols[c]}`]")
+
+    base = -1 if zero_based else 0
+    if persisted is not None:
+        # one select per stage: every DataFrame op re-analyses the window
+        # plan, which on a busy driver costs more than the job itself
+        local_cols = {c: f"__grl_{i}" for i, c in enumerate(cols)}
+        ranked = (
+            df.select("*", *[_bucket_expr(c, bounds[c]).alias(bucket_cols[c]) for c in cols])
+            .select("*", *[_local(c).alias(local_cols[c]) for c in cols])
+            .persist()
+        )
+        persisted.append(ranked)
+        # max(local rank) per bucket is the bucket's row count, or its
+        # distinct count (nulls included) under dense ranks
+        pairs = ", ".join(
+            f"named_struct('b', `{bucket_cols[c]}`, 'n', `{local_cols[c]}`)" for c in cols
+        )
+        counted = (
+            ranked.selectExpr(f"posexplode(array({pairs})) AS (ci, s)")
+            .groupBy("ci", F.col("s.b").alias("b"))
+            .agg(F.max("s.n").alias("n"))
+            .collect()
+        )
+        counts = {(r["ci"], r["b"]): r["n"] for r in counted}
+        return ranked.select(
+            "*",
+            *[
+                (F.col(local_cols[c]) + _offsets(ci, c, counts) + F.lit(base))
+                .cast("bigint")
+                .alias(out_col)
+                for ci, (c, out_col) in enumerate(zip(cols, out_cols))
+            ],
+        ).drop(*bucket_cols.values(), *local_cols.values())
+
     part = df
     for c in cols:
         part = part.withColumn(bucket_cols[c], _bucket_expr(c, bounds[c]))
+    counted = _bucket_counts(part, cols, bucket_cols, dense, dtypes)
+    counts = {(r["ci"], r["b"]): r["n"] for r in counted}
+    out = part
+    for ci, (c, out_col) in enumerate(zip(cols, out_cols)):
+        out = out.withColumn(
+            out_col, (_local(c) + _offsets(ci, c, counts) + F.lit(base)).cast("bigint")
+        )
+    return out.drop(*bucket_cols.values())
 
-    # ONE counting job for all columns: stack (column-index, bucket) pairs
-    # and hash-aggregate — cheaper than N groupBys (N-1 fewer jobs) and
-    # far cheaper than buckets×columns conditional CASE aggregates.
+
+def _bucket_counts(
+    part: DataFrame,
+    cols: list[str],
+    bucket_cols: dict[str, str],
+    dense: bool,
+    dtypes: dict[str, str],
+) -> list:
+    """ONE counting job for all columns: rows of (column index ``ci``,
+    bucket ``b``, count ``n``) — the row count per bucket, or under dense
+    ranks the distinct count, nulls counted as one value because the
+    window ranks them too. Stacked (column-index, bucket) pairs in one
+    hash aggregate are cheaper than N groupBys (N-1 fewer jobs) and far
+    cheaper than buckets×columns conditional CASE aggregates."""
     if len(cols) == 1:
         c, bc = cols[0], bucket_cols[cols[0]]
         agg = (
-            F.count_distinct(F.col(c)).alias("n")
+            F.count_distinct(F.struct(F.col(c))).alias("n")
             if dense
             else F.count(F.lit(1)).alias("n")
         )
         counted1 = part.groupBy(F.col(bc).alias("b")).agg(agg).collect()
-        counted = [{"ci": 0, "b": r["b"], "n": r["n"]} for r in counted1]
-    elif dense:
+        return [{"ci": 0, "b": r["b"], "n": r["n"]} for r in counted1]
+    if dense:
         # per-bucket DISTINCT counts, disjoint across buckets because
         # equal keys share a bucket. The stacked array needs one common
         # type, so values go through a string cast — but the count must
@@ -241,7 +350,8 @@ def global_ranks_multi(
         # break that: -0.0 and 0.0 are one value to dense_rank yet two
         # strings. Normalize with +0.0 (-0.0+0.0 == 0.0; NaN unchanged)
         # before casting; within one column every other type formats
-        # equal-iff-native-equal.
+        # equal-iff-native-equal. The struct wrapper makes a null value
+        # count as one distinct value, as dense_rank ranks it.
         def _v(c: str) -> Column:
             base = dtypes[c].split("(")[0]
             col = F.col(c) + F.lit(0.0) if base in ("float", "double") else F.col(c)
@@ -250,37 +360,15 @@ def global_ranks_multi(
         pairs_df = part.select(
             F.posexplode(F.array(*[F.struct(F.col(bucket_cols[c]).alias("b"), _v(c).alias("v")) for c in cols])).alias("ci", "s")
         ).select("ci", F.col("s.b").alias("b"), F.col("s.v").alias("v"))
-        counted = (
-            pairs_df.filter(F.col("v").isNotNull())
-            .groupBy("ci", "b")
-            .agg(F.count_distinct("v").alias("n"))
+        return (
+            pairs_df.groupBy("ci", "b")
+            .agg(F.count_distinct(F.struct("v")).alias("n"))
             .collect()
         )
-    else:
-        pairs_df = part.select(
-            F.posexplode(F.array(*[F.col(bucket_cols[c]) for c in cols])).alias("ci", "b")
-        )
-        counted = pairs_df.groupBy("ci", "b").agg(F.count(F.lit(1)).alias("n")).collect()
-    counts: dict[tuple[int, int], int] = {(r["ci"], r["b"]): r["n"] for r in counted}
-
-    out = part
-    base = -1 if zero_based else 0
-    for ci, (c, out_col) in enumerate(zip(cols, out_cols)):
-        bc = bucket_cols[c]
-        n_buckets = len(bounds[c]) + 1
-        acc = 0
-        pairs: list = []
-        for b in range(n_buckets):
-            pairs.extend([F.lit(b), F.lit(acc)])
-            acc += int(counts.get((ci, b), 0))
-        order = [F.col(c)] if dense else [F.col(c)] + (
-            [F.col(tie_col)] if tie_col else []
-        )
-        w = Window.partitionBy(bc).orderBy(*order)
-        local = F.dense_rank() if dense else F.row_number()
-        off = F.create_map(*pairs)[F.col(bc)] if pairs else F.lit(0)
-        out = out.withColumn(out_col, (local.over(w) + off + F.lit(base)).cast("bigint"))
-    return out.drop(*bucket_cols.values())
+    pairs_df = part.select(
+        F.posexplode(F.array(*[F.col(bucket_cols[c]) for c in cols])).alias("ci", "b")
+    )
+    return pairs_df.groupBy("ci", "b").agg(F.count(F.lit(1)).alias("n")).collect()
 
 
 def attach_global_rank(

@@ -38,6 +38,7 @@ from ..operators.steps import RID, numeric_columns
 KMEANS_SEED = 9  # reference Tfunctions.py:98
 LDA_K = 3
 KMEANS_K = 3
+KMEANS_FIT_CAP = 10_000  # rows of the RID-ordered sample the centers are fit on
 DBSCAN_EPS = 0.25
 DBSCAN_MIN_SAMPLES = 5
 MIN_NUMERIC_COLS = 3  # reference guard: >2 numeric columns (Tengine.py:217-220)
@@ -216,7 +217,7 @@ def _lloyd(x: np.ndarray, k: int, seed: int, iters: int = 25) -> np.ndarray:
     return c
 
 
-def kmeans_fit(df: DataFrame, fit_cap: int = 10_000) -> dict | None:
+def kmeans_fit(df: DataFrame, fit_cap: int = KMEANS_FIT_CAP) -> dict | None:
     """Fit stage of KMeans (k=3, seed=9): min/max scaling constants from
     one exact aggregate, centers from seeded Lloyd's on a bounded
     deterministic sample (``orderBy(RID).limit``). Returns literal
@@ -253,7 +254,7 @@ def kmeans_fit(df: DataFrame, fit_cap: int = 10_000) -> dict | None:
     }
 
 
-def run_kmeans(df: DataFrame, fit_cap: int = 10_000) -> DataFrame | None:
+def run_kmeans(df: DataFrame, fit_cap: int = KMEANS_FIT_CAP) -> DataFrame | None:
     """KMeans (k=3, seed=9) → 1 category column.
 
     Centers are fit with seeded Lloyd's on a bounded deterministic

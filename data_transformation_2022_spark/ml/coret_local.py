@@ -302,8 +302,8 @@ def _kmeans_local(dpdf: pd.DataFrame, cols: list[str], tmap: dict[str, str]):
         (_to_f64(dpdf[c]) - lo[i]) / span[i] for i, c in enumerate(cols)
     ]
     # fit sample: RID order == frame order (rid_order proven by caller),
-    # first fit_cap rows (run_kmeans default 10_000)
-    sample = np.column_stack(scaled)[:10_000]
+    # first fit_cap rows (run_kmeans's default)
+    sample = np.column_stack(scaled)[: _coret.KMEANS_FIT_CAP]
     if len(sample) == 0:
         return None
     centers = _coret._lloyd(sample, _coret.KMEANS_K, _coret.KMEANS_SEED)

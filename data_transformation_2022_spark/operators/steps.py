@@ -314,7 +314,13 @@ def _apply_rank_stacked(df: DataFrame, step: Step, cols: list[str]) -> DataFrame
     raise ValueError(f"unknown output mode o_type={step.o_type!r}")
 
 
-def _apply_rank_join(df: DataFrame, step: Step, cols: list[str]) -> DataFrame:
+def _apply_rank_join(
+    df: DataFrame,
+    step: Step,
+    cols: list[str],
+    boundaries: dict[str, list] | None,
+    persisted: list[DataFrame] | None,
+) -> DataFrame:
     """Scalable rank/nominalize: per column, a bucket-partitioned global
     rank appended in place (functions.order) — one parallel exchange per
     column, no single-reducer window and no join-back. Same values as
@@ -331,6 +337,8 @@ def _apply_rank_join(df: DataFrame, step: Step, cols: list[str]) -> DataFrame:
         dense=dense,
         zero_based=dense,
         tie_col=RID if (not dense and RID in df.columns) else None,
+        boundaries=boundaries,
+        persisted=persisted,
     )
     if step.o_type == "new_table":
         return joined.select(RID, *names)
@@ -342,8 +350,20 @@ def _apply_rank_join(df: DataFrame, step: Step, cols: list[str]) -> DataFrame:
     raise ValueError(f"unknown output mode o_type={step.o_type!r}")
 
 
-def apply_step(df: DataFrame, step: Step) -> DataFrame:
-    """Apply one Step: selector → op → rename → output mode."""
+def apply_step(
+    df: DataFrame,
+    step: Step,
+    boundaries: dict[str, list] | None = None,
+    persisted: list[DataFrame] | None = None,
+) -> DataFrame:
+    """Apply one Step: selector → op → rename → output mode.
+
+    ``boundaries`` and ``persisted`` reach the scalable bucketed rank
+    (``functions.order.global_ranks_multi``): known bucket boundaries
+    per column, and a list that receives the persisted bucket-local
+    ranking the per-bucket offsets were read from. Other ops, sample
+    (small-input) ranks and the wide stacked rank ignore them — so a
+    caller tells from an empty ``persisted`` that nothing was persisted."""
     cols = select_input(df, step)
     if step.t in ("rank", "nominalize") and RID in df.columns and cols:
         # wide multi-rank: constant-size stacked plan in EITHER mode —
@@ -357,7 +377,7 @@ def apply_step(df: DataFrame, step: Step) -> DataFrame:
             if stacked is not None:
                 return stacked
         if not _SMALL_INPUT.get():
-            return _apply_rank_join(df, step, cols)
+            return _apply_rank_join(df, step, cols, boundaries, persisted)
     exprs, default_names = _op_exprs(df, step, cols)
     names = _out_names(step, default_names)
     named = [e.alias(n) for e, n in zip(exprs, names)]

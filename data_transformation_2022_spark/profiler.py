@@ -86,6 +86,10 @@ class TableProfile:
     dim_clusters: list[list[str]] = field(default_factory=list)  # distribution-based
     name_clusters: list[list[str]] = field(default_factory=list)  # header-text-based
     col_dists: dict[frozenset, float] = field(default_factory=dict)  # pairwise Wasserstein
+    # pass-1 approximate quantile grid (k/32, k = 0..32) of every numeric
+    # column: the Wasserstein clustering's input, and the bucket
+    # boundaries of the engine's full-table ranks (functions.order)
+    quantiles: dict[str, list] = field(default_factory=dict)
 
     def column(self, name: str) -> ColumnProfile:
         return self.columns[name]
@@ -322,6 +326,7 @@ def profile_table(
         columns=profiles,
         key=key,
         num_col_names=num_cols,
+        quantiles=quantiles,
     )
     if cluster and len(num_cols) >= 2:
         tp.dim_clusters, tp.col_dists = _dim_clusters(

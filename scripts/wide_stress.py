@@ -107,7 +107,7 @@ def rank_chain_phase(spark, n_rows: int, n_num: int) -> None:
     t0 = time.time()
     ex.prefetch(frame_jobs=[], bar_jobs=[("g1", cand, "sum")])
     t_pref = time.time() - t0
-    key = next(iter(ex._persisted_base_keys))
+    key = next(iter(ex._persisted))
     base = ex._derived_bases[key]
     ranked = [c for c in base.columns if c.startswith("rank ")]
     print(

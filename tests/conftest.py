@@ -18,3 +18,10 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def jobs_submitted(spark):
+    """Callable: the jobs the DAG scheduler has accepted so far, from
+    every thread (the engine's prefetch pools submit off the main one)."""
+    return lambda: spark.sparkContext._jsc.sc().dagScheduler().nextJobId()

@@ -211,14 +211,15 @@ def test_bench_pool_serve_rate(spark, sf_dir):
         served = compared = 0
         for cand in eligible:
             for t in ("pca", "kmeans"):
-                loc = ex._local_coret_frame(cand, t)
-                if loc is None:
+                loc, ok = ex._local_coret_frame(cand, t)
+                if not ok:
                     continue
                 served += 1
                 with small_input_mode():
                     derived = ex._sample_derived(cand.steps)
                     sp = CORE_T_RUNNERS[t](derived)
-                if sp is None:
+                if sp is None or loc is None:
+                    assert sp is None and loc is None
                     continue
                 compared += 1
                 pd.testing.assert_frame_equal(

@@ -119,7 +119,7 @@ def test_rank_step_reduced_to_consumed_outputs(spark):
         out_cols=["rank m1", "rank m4"], derived=["rank m1", "rank m4"],
     )
     ex.prefetch(frame_jobs=[], bar_jobs=[("g", cand, "sum")])
-    key = next(iter(ex._persisted_base_keys))
+    key = next(iter(ex._persisted))
     base = ex._derived_bases[key]
     ranked = sorted(c for c in base.columns if c.startswith("rank "))
     assert ranked == ["rank m1", "rank m4"], ranked
@@ -147,7 +147,7 @@ def test_rank_step_reduced_to_consumed_outputs(spark):
     ex3.prefetch(
         frame_jobs=[], bar_jobs=[("g", cand, "sum"), ("g", cand2, "sum")]
     )
-    rank_key = min(ex3._persisted_base_keys, key=len)
+    rank_key = min(ex3._persisted, key=len)
     ranked3 = sorted(
         c for c in ex3._derived_bases[rank_key].columns
         if c.startswith("rank ")
@@ -176,7 +176,7 @@ def test_bar_aggregate_rebuilds_pruned_base(spark):
     )
     ex.prefetch(frame_jobs=[], bar_jobs=[("g", cand_a, "sum")])
     key = steps_key([rank])
-    assert key in ex._persisted_base_keys
+    assert key in ex._persisted
     # per-level pruning: neither the un-consumed column b NOR the rank
     # input a itself survives (no bar job and no later step reads them)
     assert "b" not in ex._derived_bases[key].columns
@@ -235,7 +235,7 @@ def test_dynamic_selector_over_pruned_prefix_rebuilds(spark):
     )
     # registration prunes the rank base to the narrow consumer's width
     ex.prefetch(frame_jobs=[], bar_jobs=[("g", narrow, "sum")])
-    key = next(iter(ex._persisted_base_keys))
+    key = next(iter(ex._persisted))
     assert key in ex._pruned_base_keys
     assert len([c for c in ex._derived_bases[key].columns
                 if c.startswith("rank ")]) == 1
@@ -539,3 +539,80 @@ def test_small_df_generator_safe(spark, monkeypatch):
     monkeypatch.setattr(pd, "DataFrame", Boom)
     got = small_df(spark, ((i, float(i)) for i in range(4)), "a int, b double")
     assert got.count() == 4
+
+
+def test_merge_rid_rejects_duplicate_column_names():
+    """_merge_rid's positional fast path builds a dict of columns, which
+    would keep one of two equally named columns: a repeated name in
+    either frame raises instead; distinct names still merge."""
+    import pandas as pd
+
+    from data_transformation_2022_spark.engine import _merge_rid
+    from data_transformation_2022_spark.operators.steps import RID
+
+    left = pd.DataFrame({RID: [0, 1], "x": [1.0, 2.0]})
+    right = pd.DataFrame({RID: [0, 1], "y": [3.0, 4.0]})
+    merged = _merge_rid(left, right)
+    assert list(merged.columns) == [RID, "x", "y"]
+    assert merged["y"].tolist() == [3.0, 4.0]
+    dup = pd.DataFrame([[0, 5.0, 6.0], [1, 7.0, 8.0]], columns=[RID, "y", "y"])
+    for a, b in ((left, dup), (dup, left)):
+        with pytest.raises(ValueError, match="duplicate column names \\['y'\\]"):
+            _merge_rid(a, b)
+
+
+def test_level0_bars_register_while_rank_levels_register(spark):
+    """prefetch queues the bar groups with no persisted base first: their
+    threads register their arithmetic chains while the table side
+    registers (and materialises) the rank levels. Under a tiny GIL
+    switch interval and more bar threads than cores, every registered
+    chain is still memoised and every bar equals a fresh executor's."""
+    import sys
+
+    from data_transformation_2022_spark.engine import Executor
+    from data_transformation_2022_spark.operators.steps import Step, steps_key
+    from data_transformation_2022_spark.plans.search import Candidate
+
+    cols = [f"m{i}" for i in range(6)]
+    df = spark.createDataFrame(
+        [tuple(float((i * 7 + j) % 11) for j in range(6)) + (f"g{i % 3}", f"h{i % 2}")
+         for i in range(40)],
+        ", ".join(f"{c} double" for c in cols) + ", g string, h string",
+    )
+    rank = Step(t="rank", i_type="==", i=["m0", "m1"], o_type="append",
+                index=["rank m0", "rank m1"])
+    cands = [
+        Candidate(family="sum_bar", steps=[step], out_cols=[f"d{k}"], derived=[f"d{k}"])
+        for k, step in enumerate(
+            Step(t=t, i_type="==", i=[a, b], o_type="append", index=[f"d{k}"])
+            for k, (t, a, b) in enumerate(
+                [("sub", "m2", "m3"), ("div", "m4", "m5"), ("mul", "m2", "m5"), ("sub", "m4", "m3")]
+            )
+        )
+    ]
+    cands.append(Candidate(family="sum_bar", steps=[rank], out_cols=["rank m0"], derived=["rank m0"]))
+    cands.append(Candidate(
+        family="sum_bar",
+        steps=[rank, Step(t="sub", i_type="==", i=["rank m1", "rank m0"], o_type="append", index=["rd"])],
+        out_cols=["rd"], derived=["rd"],
+    ))
+    jobs = [(x, c, "sum") for x in ("g", "h") for c in cands] + [("g", None, "count")]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        ex = Executor(df, sample_cap=10)
+        ex.prefetch(frame_jobs=[], bar_jobs=jobs, workers=16)
+    finally:
+        sys.setswitchinterval(old)
+    truth = Executor(df, sample_cap=10)
+    try:
+        for x, c, agg in jobs:
+            assert (x, c.signature() if c else None, agg) in ex._bar_frames
+            got = ex.bar_aggregate(x, c, agg).sort_values(x).reset_index(drop=True)
+            want = truth.bar_aggregate(x, c, agg).sort_values(x).reset_index(drop=True)
+            assert got.equals(want), (x, c, agg)
+        for c in cands[-2:]:
+            assert steps_key(c.steps) in ex._derived_bases
+    finally:
+        ex.release()
+        truth.release()

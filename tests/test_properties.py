@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from data_transformation_2022_spark.plans.load import Load, cal_load, prune_dominated
@@ -133,6 +133,82 @@ class TestScalableRankEquivalence:
         )
         uniq = {v: i for i, v in enumerate(np.unique(vals))}
         assert list(out.sort_values("rid")["code"]) == [uniq[v] for v in vals]
+
+
+# a pool with every ordering corner: nulls (first), NaN (last), -0.0 and
+# 0.0 (one value to a sort), and ties
+_RANK_POOL = [None, float("nan"), -0.0, 0.0, 1.0, 2.0, 2.5, -3.0]
+
+
+@pytest.mark.usefixtures("spark")
+class TestGlobalRanksMatchWindow:
+    """functions.order's bucketed ranks equal Spark's own global-window
+    ``row_number`` (ties by rid) and ``dense_rank``, whatever the bucket
+    boundaries: computed by the boundary job, given empty (one bucket),
+    or given badly unbalanced (nearly every row in one bucket) — with
+    the per-bucket counts from the counting job or read off the
+    persisted ranking."""
+
+    @settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
+    @given(
+        a=st.lists(st.sampled_from(_RANK_POOL), min_size=1, max_size=40),
+        bounds=st.sampled_from(["computed", "empty", "unbalanced"]),
+        persist=st.booleans(),
+    )
+    @example(a=[None, 1.0, 2.0, 3.0, None, 4.0, 5.0, 6.0, 7.0, 8.0], bounds="computed", persist=False)
+    def test_ranks_equal_global_window(self, spark, a, bounds, persist):
+        from pyspark.sql import Window
+        from pyspark.sql import functions as F
+
+        from data_transformation_2022_spark.functions.order import (
+            global_ranks_multi,
+            global_row_number,
+        )
+
+        # b: integer ties and nulls on another bucket layout than a's
+        rows = [(i, v, None if i % 4 == 3 else i % 3) for i, v in enumerate(a)]
+        df = spark.createDataFrame(rows, "rid bigint, a double, b bigint")
+        given_bounds = {
+            "computed": None,
+            "empty": {"a": [], "b": []},
+            "unbalanced": {"a": [100.0, 200.0], "b": [-5]},
+        }[bounds]
+
+        def window(c: str, dense: bool):
+            if dense:
+                return F.dense_rank().over(Window.orderBy(c)) - 1
+            return F.row_number().over(Window.orderBy(c, "rid"))
+
+        def by_rid(frame, cols: list[str]) -> dict:
+            return {r["rid"]: tuple(r[c] for c in cols) for r in frame.select("rid", *cols).collect()}
+
+        held: list = []
+        try:
+            for dense in (False, True):
+                want = by_rid(
+                    df.select("rid", window("a", dense).alias("ra"), window("b", dense).alias("rb")),
+                    ["ra", "rb"],
+                )
+                got = global_ranks_multi(
+                    df, ["a", "b"], ["ra", "rb"], dense=dense, zero_based=dense,
+                    tie_col=None if dense else "rid", num_partitions=4,
+                    boundaries=given_bounds, persisted=held if persist else None,
+                )
+                assert by_rid(got, ["ra", "rb"]) == want, (dense, bounds, persist)
+                one = global_ranks_multi(
+                    df, ["a"], ["ra"], dense=dense, zero_based=dense,
+                    tie_col=None if dense else "rid", num_partitions=4,
+                    boundaries=given_bounds, persisted=held if persist else None,
+                )
+                assert by_rid(one, ["ra"]) == {k: v[:1] for k, v in want.items()}
+                rn = global_row_number(
+                    df, ["a"] if dense else ["a", "rid"], "ra", dense=dense,
+                    zero_based=dense, num_partitions=4, materialize=persist,
+                )
+                assert by_rid(rn, ["ra"]) == {k: v[:1] for k, v in want.items()}
+        finally:
+            for frame in held:
+                frame.unpersist()
 
 
 class TestExtensionProperties:

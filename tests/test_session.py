@@ -37,12 +37,6 @@ def _dump(payload) -> str:
     return json.dumps(payload, sort_keys=True, default=_json_default)
 
 
-def _jobs_submitted(spark) -> int:
-    """Jobs the DAG scheduler has accepted so far, from every thread
-    (the prefetch pools submit off the main thread)."""
-    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
-
-
 def _table_session(spark) -> EngineSession:
     s = EngineSession(spark, sample_cap=60)
     s.ingest_records(_COLS, _ROWS)
@@ -144,18 +138,49 @@ def test_research_matches_fresh_session(spark, monkeypatch):
             fresh.close()
 
 
-def test_identical_research_submits_no_spark_jobs(spark):
+def test_identical_research_submits_no_spark_jobs(spark, jobs_submitted):
     """Everything an identical re-search needs is in the memos: no bar
     grouping-sets pass, no base materialisation, no rank boundaries."""
     s = _table_session(spark)
     try:
         first = s.search({})
-        before = _jobs_submitted(spark)
+        before = jobs_submitted()
         again = s.search({})
-        assert _jobs_submitted(spark) == before
+        assert jobs_submitted() == before
         assert _dump(again) == _dump(first)
     finally:
         s.close()
+
+
+def test_tall_search_ranks_with_one_job(spark, sf_dir, monkeypatch, jobs_submitted):
+    """On a tall table (rows far above the sample) the search's
+    full-table rank base takes its bucket boundaries from the ingest
+    profile's quantile grid and its bucket offsets from the persisted
+    ranking, whose one job also materialises it: 9 jobs for the search
+    where a boundary job, a counting job and a separate materialising
+    count() made 13."""
+    import data_transformation_2022_spark.functions.order as order
+
+    calls = []
+    real = order.global_ranks_multi
+
+    def spy(df, cols, out_cols, **kwargs):
+        calls.append((cols, kwargs))
+        return real(df, cols, out_cols, **kwargs)
+
+    monkeypatch.setattr(order, "global_ranks_multi", spy)
+    s = EngineSession(spark, sample_cap=200)
+    s.ingest_path(f"{sf_dir}/lineitem.parquet")
+    try:
+        before = jobs_submitted()
+        s.search({})
+        assert jobs_submitted() - before <= 9
+    finally:
+        s.close()
+    assert calls, "the search ranks no full-table column"
+    for cols, kwargs in calls:
+        assert set(cols) <= set(kwargs["boundaries"]), cols
+        assert kwargs["persisted"] is not None
 
 
 def test_add_t_after_search_submits_no_spark_jobs(spark):
@@ -203,6 +228,9 @@ def test_close_and_reingest_reclaim_spark_storage(spark):
         s.ingest_records(_COLS, _ROWS)
         s.search({})
         s.add_t("root", "rank", {"i_type": "==", "i": ["c"], "o_type": "append"})
+        # the rank base is persisted as its bucket-local ranking
+        persisted = [f for fs in s._ex._persisted.values() for f in fs]
+        assert any(c.startswith("__grl_") for f in persisted for c in f.columns)
     assert cached_rdds() > base
     s.close()
     assert s._ex is None
@@ -218,27 +246,35 @@ def test_close_and_reingest_reclaim_spark_storage(spark):
     assert cached_rdds() <= base, f"closed session leaked cached RDDs: {cached_rdds()} > {base}"
 
 
-def test_research_reuses_memoised_scagnostics(spark, monkeypatch):
-    """The per-xy scagnostics live on the session's Executor with the
-    frames: a re-search computes none and answers the same payload."""
+def test_research_reuses_memoised_charts(spark, monkeypatch, jobs_submitted):
+    """Every assembled, scored chart lives on the session's Executor: a
+    re-search submits no Spark job, scores no scatter, computes no
+    scagnostics and answers the same payload; the memoised charts'
+    data is read-only."""
     import data_transformation_2022_spark.engine as eng
 
     calls = []
-    real = eng.scagnostics
+    for name in ("scagnostics", "_score_scatter"):
+        real = getattr(eng, name)
 
-    def counted(*args, **kwargs):
-        calls.append(1)
-        return real(*args, **kwargs)
+        def counted(*args, _real=real, _name=name, **kwargs):
+            calls.append(_name)
+            return _real(*args, **kwargs)
 
-    monkeypatch.setattr(eng, "scagnostics", counted)
+        monkeypatch.setattr(eng, name, counted)
     s = _table_session(spark)
     try:
         first = s.search({})
-        assert calls and len(calls) == len(s._ex._scagnostics)
+        assert {"scagnostics", "_score_scatter"} <= set(calls)
         calls.clear()
+        before = jobs_submitted()
         again = s.search({})
+        assert jobs_submitted() == before
         assert calls == []
         assert _dump(again) == _dump(first)
+        chart = next(c for c in s._ex._charts.values() if c.chart_type == "num_scatter")
+        with pytest.raises(ValueError, match="read-only"):
+            chart.data.iloc[0, 0] = -1
     finally:
         s.close()
 
