@@ -30,6 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .ml import coret_local
 from .ml.coret import CORE_T_RUNNERS
 from .operators.steps import (
     RID,
@@ -249,12 +250,6 @@ class Executor:
         self._sample_pdf: pd.DataFrame | None = None
         self._sample_types: list[tuple[str, str]] | None = None
         self._local_steps = not os.environ.get("SPARK_GRAFT_NO_LOCAL_STEPS")
-        # core-T twin (r14): SPARK_GRAFT_NO_LOCAL_CORET disables just the
-        # coret_local evaluator (for marginal A/Bs); NO_LOCAL_STEPS
-        # disables both (the coret twin consumes the step twin's frames)
-        self._local_coret = self._local_steps and not os.environ.get(
-            "SPARK_GRAFT_NO_LOCAL_CORET"
-        )
         self._sample_lock = threading.Lock()
 
     def _sample_local(self) -> tuple[pd.DataFrame, list[tuple[str, str]]]:
@@ -318,42 +313,6 @@ class Executor:
             out = self._step_frames[key] = _freeze(out)
         return out
 
-    def _local_coret_frame(
-        self, cand: Candidate, coret: str
-    ) -> tuple[pd.DataFrame | None, bool]:
-        """Core-T channel frame served by the driver-side evaluator
-        (ml/coret_local): the step chain is evaluated by the proven
-        steps_local contract, then the runner math — driver numpy in
-        both paths — runs directly on the pandas prefix. Returns
-        ``(frame, served)``: ``served`` is False whenever equivalence
-        with the Spark path is not proven (caller falls through to the
-        Spark runner); a served None frame means the runner provably
-        returns None (its numeric-column guard fails). Row-order note:
-        pca/kmeans emit in the derived frame's own order, so coret_local
-        only serves them for chains with no rank/nominalize step (where
-        that order is provably RID — the same invariant
-        _batch_step_frames relies on); the sample-bound transforms
-        (mds/tsne/umap/dbscan) re-sort by RID internally and serve for
-        any provable chain."""
-        if not self._local_coret:
-            return None, False
-        try:
-            from .ml.coret_local import PROVEN_NONE, eval_coret_local
-
-            res = self._local_eval(cand.steps)
-            if res is None:
-                return None, False
-            dpdf, dtypes = res
-            rid_order = not any(
-                s.t in ("rank", "nominalize") for s in cand.steps
-            )
-            out = eval_coret_local(dpdf, dtypes, coret, rid_order=rid_order)
-        except Exception:
-            return None, False
-        if out is PROVEN_NONE:
-            return None, True
-        return out, out is not None
-
     def _sample_derived(self, steps) -> DataFrame:
         """apply_tpath over the cached sample with shared-prefix memo +
         lineage truncation after rank/nominalize steps. The build is
@@ -383,7 +342,9 @@ class Executor:
 
     def channel_frame(self, cand: Candidate, coret: str | None) -> pd.DataFrame | None:
         """Execute (tpath, core-T) once on the bounded sample; return the
-        collected channel frame keyed by __rid."""
+        collected channel frame keyed by __rid. The pca, kmeans, mds,
+        tsne, umap and dbscan frames are driver numpy (ml/coret_local);
+        only lda and lida run their Spark runners."""
         key = (cand.signature(), coret)
         if key in self._frames:
             return self._frames[key]
@@ -407,26 +368,22 @@ class Executor:
                             .orderBy(RID)
                             .toPandas()
                         )
-                else:
-                    if NOT_CALCU_DMT and any(
-                        s.t in ("sum", "sub", "mul", "div") for s in cand.steps
-                    ):
-                        out = None  # reference Tengine.py:58-64
-                    else:
-                        # driver-side core-T evaluator first (r14 opt,
-                        # VERDICT r13 #1): the runner math is driver
-                        # numpy either way — serve it from the proven
-                        # pandas sample prefix and skip the 2-3 bounded
-                        # Spark jobs per frame. A served None = the
-                        # runner's numeric-column guard provably fails
-                        # (the only sample-side Spark job left in the
-                        # bench shape built a rank prefix solely to
-                        # produce that None); not served → the Spark path
-                        out, served = self._local_coret_frame(cand, coret)
-                        if not served:
-                            derived = self._sample_derived(cand.steps)
-                            res = CORE_T_RUNNERS[coret](derived)
-                            out = res.toPandas() if res is not None else None
+                elif NOT_CALCU_DMT and any(
+                    s.t in ("sum", "sub", "mul", "div") for s in cand.steps
+                ):
+                    out = None  # reference Tengine.py:58-64
+                elif coret in coret_local.CORETS:
+                    # the core-T's numpy over the chain's sample frame:
+                    # the step evaluator's, else the Spark derivation
+                    # collected in RID order — no runner jobs either way
+                    res = self._local_eval(cand.steps)
+                    if res is None:
+                        derived = self._sample_derived(cand.steps)
+                        res = derived.orderBy(RID).toPandas(), derived.dtypes
+                    out = coret_local.eval_coret_local(*res, coret)
+                else:  # lda, lida: the distributed Spark runners
+                    res = CORE_T_RUNNERS[coret](self._sample_derived(cand.steps))
+                    out = res.toPandas() if res is not None else None
         except Exception:
             out = None
         self._frames[key] = _freeze(out)
@@ -641,8 +598,9 @@ class Executor:
         #
         # * sample side: the step-only frames batch join (one outer-join
         #   job over the ≤sample_cap cached sample), then the per-frame
-        #   pool (memo hits for everything the batch served, per-frame
-        #   jobs for core-T frames);
+        #   pool (memo hits for everything the batch served, driver numpy
+        #   for core-T frames, Spark jobs for lda/lida and for chains
+        #   the step evaluator refuses);
         # * table side: serial derived-base registration (bottom-up
         #   through the recursive prefix memo so ('rank','sub') reuses
         #   the cached ('rank',) table and racing threads never duplicate

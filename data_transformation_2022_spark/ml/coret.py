@@ -16,10 +16,13 @@ Spark-first mapping:
     sample is faithful; at scale the engine samples before calling.
   * **dbscan** — numpy DBSCAN (eps=0.25, min_samples=5 like
     Tfunctions.py:90-94) on the sample; sklearn-free.
-  * **tsne / umap** — sklearn/umap-learn are not in this environment:
-    gated behind import-try with a documented deterministic fallback
-    (classical MDS), column names kept per family so chart signatures
-    still match.
+  * **tsne / umap** — sklearn/umap-learn when installed (looked up per
+    call), else the in-repo deterministic numpy
+    implementations (``numpy_tsne``, ``numpy_umap``).
+
+The engine's chart frames do not call these runners for pca, kmeans,
+mds, tsne, umap or dbscan: ``ml/coret_local`` runs the same float64
+numpy on its collected, bounded sample.
 
 All runners take a DataFrame WITH a ``__rid`` column and return
 ``__rid`` + output columns, so results positional-join back to any
@@ -27,6 +30,8 @@ channel frame (SURVEY §1.5 rid discipline).
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -42,6 +47,7 @@ KMEANS_FIT_CAP = 10_000  # rows of the RID-ordered sample the centers are fit on
 DBSCAN_EPS = 0.25
 DBSCAN_MIN_SAMPLES = 5
 MIN_NUMERIC_COLS = 3  # reference guard: >2 numeric columns (Tengine.py:217-220)
+SAMPLE_CAP = 2000  # RID-ordered rows the sample-bound fits and transforms run on
 
 
 def _guard_cols(df: DataFrame) -> list[str] | None:
@@ -58,11 +64,10 @@ def _guard_cols(df: DataFrame) -> list[str] | None:
 # 12 s at p=33). Wide fits switch to driver eigen on the deterministic
 # bounded sample — the reference's own semantics (sklearn PCA on a
 # ≤400-row table). At cluster scale a wide exact fit would instead be a
-# treeAggregate Gram accumulation (MLlib RowMatrix); the sample path is
-# the honest in-engine stand-in and is only used for chart frames,
-# which are sample-bounded anyway.
+# treeAggregate Gram accumulation (MLlib RowMatrix). The sample fit
+# (``pca_moments``) is also the engine's PCA at every width: its chart
+# frames are bounded by the collected sample (ml/coret_local).
 PCA_EXACT_MAX_COLS = 32
-PCA_WIDE_SAMPLE_CAP = 2000
 
 
 def pca_fit(df: DataFrame) -> dict | None:
@@ -76,37 +81,20 @@ def pca_fit(df: DataFrame) -> dict | None:
     across eigensolvers).
 
     Inputs wider than PCA_EXACT_MAX_COLS fit on the deterministic
-    bounded sample instead (see the constant's comment); the returned
-    literals and the projection contract are identical either way."""
+    bounded sample instead, in float64 numpy (``pca_moments``, which the
+    engine's chart frames share); the returned literals and the
+    projection contract are identical either way."""
     cols = _guard_cols(df)
     if cols is None:
         return None
     p = len(cols)
     if p > PCA_EXACT_MAX_COLS:
         pdf = (
-            df.select(RID, *cols).orderBy(RID).limit(PCA_WIDE_SAMPLE_CAP).toPandas()
+            df.select(RID, *cols).orderBy(RID).limit(SAMPLE_CAP).toPandas()
         )
         if len(pdf) == 0:
             return None
-        x = pdf[cols].to_numpy(dtype=float)
-        # null cells arrive as NaN: nan-aware bounds + zero-contribution
-        # moments mirror the exact path's null-skipping Spark SUMs over a
-        # count(*) denominator — a single null must not poison lo/span/cov
-        # (plain min/cov would NaN the whole fit and drop the chart)
-        import warnings
-
-        with warnings.catch_warnings():
-            # an all-NaN column yields NaN bounds (fit fails like the
-            # exact path's null min/max) — silence the all-NaN warning
-            warnings.simplefilter("ignore", RuntimeWarning)
-            lo = np.nanmin(x, axis=0)
-            hi = np.nanmax(x, axis=0)
-        span = np.where(hi > lo, hi - lo, 1.0)
-        xs = (x - lo) / span
-        mean = np.nansum(xs, axis=0) / len(xs)
-        centered = np.nan_to_num(xs - mean, nan=0.0)
-        cov = (centered.T @ centered) / len(xs)
-        return _pca_pack(cols, lo, span, mean, cov)
+        return _pca_pack(cols, *pca_moments(pdf[cols].to_numpy(dtype=float)))
     aggs: list = [F.count(F.lit(1)).alias("n")]
     for i, c in enumerate(cols):
         aggs += [F.min(c).alias(f"mn_{i}"), F.max(c).alias(f"mx_{i}")]
@@ -141,9 +129,35 @@ def pca_fit(df: DataFrame) -> dict | None:
     return _pca_pack(cols, lo, span, mean, cov)
 
 
-def _pca_pack(cols: list[str], lo, span, mean, cov) -> dict:
+def pca_moments(x: np.ndarray) -> tuple:
+    """``(lo, span, mean, cov)`` of the min-max-scaled rows of ``x``
+    (n × p float64, NaN = null) in float64 numpy: the wide branch of
+    ``pca_fit`` and the engine's chart frames (ml/coret_local). Nulls
+    are skipped by the bounds and count as a scaled 0 in the centred
+    moments over all n rows — the exact path's null-skipping Spark SUMs
+    over count(*) — so a single null cannot poison lo/span/cov."""
+    import warnings
+
+    with warnings.catch_warnings():
+        # an all-null column yields NaN bounds (the fit fails like the
+        # exact path's null min/max): silence the all-NaN warning
+        warnings.simplefilter("ignore", RuntimeWarning)
+        lo = np.nanmin(x, axis=0)
+        hi = np.nanmax(x, axis=0)
+    span = np.where(hi > lo, hi - lo, 1.0)
+    xs = np.nan_to_num((x - lo) / span, nan=0.0)
+    mean = xs.sum(axis=0) / len(xs)
+    centered = xs - mean
+    cov = (centered.T @ centered) / len(xs)
+    return lo, span, mean, cov
+
+
+def _pca_pack(cols: list[str], lo, span, mean, cov, cut_rows: int = 0) -> dict:
     """Shared eigen + sign-convention + literal-packing tail of both
-    pca_fit strategies."""
+    pca_fit strategies. ``cut_rows`` > 0 (the engine's chart frames,
+    fit on that many rows) zeroes every axis whose eigenvalue is
+    round-off, ≤ λmax·max(cut_rows, p)·eps, as ``classical_mds`` does;
+    the registry's fits keep every axis."""
     p = len(cols)
     w, v = np.linalg.eigh(cov)
     order = np.argsort(w)[::-1][:2]
@@ -151,6 +165,8 @@ def _pca_pack(cols: list[str], lo, span, mean, cov) -> dict:
     for k in range(basis.shape[1]):
         if basis[np.argmax(np.abs(basis[:, k])), k] < 0:
             basis[:, k] = -basis[:, k]
+    if cut_rows:
+        basis[:, w[order] <= w.max() * max(cut_rows, p) * np.finfo(float).eps] = 0.0
     return {
         "cols": cols,
         "lo": [float(x) for x in lo],
@@ -347,19 +363,6 @@ def run_lda(df: DataFrame) -> DataFrame | None:
 # ---------------------------------------------------------------------------
 
 
-def _collect_sample(df: DataFrame, cols: list[str], cap: int = 2000) -> pd.DataFrame:
-    # orderBy(RID) before limit: a bare limit takes whichever partitions
-    # answer first, so the sample (hence tsne/umap/dbscan output) would
-    # silently change with the input's partitioning. TakeOrdered keeps
-    # this a top-k, not a global sort.
-    pdf = df.select(RID, *cols).orderBy(RID).limit(cap).toPandas()
-    x = pdf[cols].to_numpy(dtype=float)
-    lo, hi = x.min(axis=0), x.max(axis=0)
-    span = np.where(hi > lo, hi - lo, 1.0)
-    pdf[cols] = (x - lo) / span
-    return pdf
-
-
 def classical_mds(x: np.ndarray, k: int = 2) -> np.ndarray:
     """Torgerson classical MDS of the n rows of ``x`` (n × p) onto ``k``
     axes, in pure numpy and deterministic.
@@ -412,7 +415,7 @@ def numpy_tsne(
     std as in the standard implementation), no random sampling anywhere.
     O(n²) per iteration — the input is a bounded sample, never the full
     table: the engine passes up to its ``sample_cap`` rows (1000 by
-    default) and ``_collect_sample`` caps the Spark runner at 2000, both
+    default) and the Spark runner at most ``SAMPLE_CAP`` (2000), both
     above the reference's 400-row bound."""
     n = x.shape[0]
     if n < 4:
@@ -555,7 +558,7 @@ def numpy_umap(
     deterministic spectral init (sign-fixed Laplacian eigenvectors) and
     a linearly decaying learning rate. O(n²) per iteration; input is a
     bounded sample — up to the engine's ``sample_cap`` rows (1000 by
-    default), at most 2000 through ``_collect_sample``."""
+    default), at most ``SAMPLE_CAP`` (2000) through the Spark runner."""
     n = x.shape[0]
     if n < 4:
         return np.zeros((n, 2))
@@ -635,63 +638,101 @@ def numpy_dbscan(x: np.ndarray, eps: float, min_samples: int) -> np.ndarray:
     return dbscan_labels(dist, eps=eps, min_samples=min_samples)
 
 
-def _sample_transform(df: DataFrame, out_cols: list[str], fn) -> DataFrame | None:
-    cols = _guard_cols(df)
-    if cols is None:
-        return None
-    pdf = _collect_sample(df, cols)
-    res = fn(pdf[cols].to_numpy(dtype=float))
-    out = pd.DataFrame({RID: pdf[RID]})
-    for i, c in enumerate(out_cols):
-        out[c] = res[:, i] if res.ndim == 2 else res
-    spark = df.sparkSession
-    return spark.createDataFrame(out)
-
-
-def run_mds(df: DataFrame) -> DataFrame | None:
-    return _sample_transform(df, ["MDS-1", "MDS-2"], classical_mds)
-
-
-def run_tsne(df: DataFrame) -> DataFrame | None:
+def _tsne() -> Callable[[np.ndarray], np.ndarray]:
     """t-SNE with the reference's configuration (perplexity=5,
     method="exact" — Tfunctions.py:18-25): sklearn's implementation when
     the library exists, else the in-repo exact numpy implementation
     (``numpy_tsne``, same algorithm, deterministic PCA init)."""
     try:
         from sklearn.manifold import TSNE  # optional: absent from this env
-
-        def fn(x: np.ndarray) -> np.ndarray:
-            init = "pca" if len(x) < 100 else "random"
-            return TSNE(
-                n_components=2, perplexity=5, init=init, random_state=0, method="exact"
-            ).fit_transform(x)
-
     except ImportError:
-        fn = numpy_tsne
-    return _sample_transform(df, ["tSNE-1", "tSNE-2"], fn)
+        return numpy_tsne
+
+    def fn(x: np.ndarray) -> np.ndarray:
+        init = "pca" if len(x) < 100 else "random"
+        return TSNE(
+            n_components=2, perplexity=5, init=init, random_state=0, method="exact"
+        ).fit_transform(x)
+
+    return fn
 
 
-def run_umap(df: DataFrame) -> DataFrame | None:
+def _umap() -> Callable[[np.ndarray], np.ndarray]:
     """UMAP: umap-learn's implementation when the library exists, else
     the in-repo implementation (``numpy_umap`` — real fuzzy-simplicial
     graph and loss, deterministic full-batch optimizer)."""
     try:
         import umap  # optional: absent from this env
-
-        def fn(x: np.ndarray) -> np.ndarray:
-            return umap.UMAP(n_components=2, random_state=0).fit_transform(x)
-
     except ImportError:
-        fn = numpy_umap
-    return _sample_transform(df, ["UMAP-1", "UMAP-2"], fn)
+        return numpy_umap
+
+    def fn(x: np.ndarray) -> np.ndarray:
+        return umap.UMAP(n_components=2, random_state=0).fit_transform(x)
+
+    return fn
+
+
+def _dbscan(x: np.ndarray) -> np.ndarray:
+    return numpy_dbscan(x, DBSCAN_EPS, DBSCAN_MIN_SAMPLES).astype(str)
+
+
+# name → (output columns, factory of the numpy function); the factory
+# looks the t-SNE/UMAP library up per call, so the Spark runners and the
+# engine's chart frames (ml/coret_local) always run the same function
+_SAMPLE_CORE_TS = {
+    "mds": (["MDS-1", "MDS-2"], lambda: classical_mds),
+    "tsne": (["tSNE-1", "tSNE-2"], _tsne),
+    "umap": (["UMAP-1", "UMAP-2"], _umap),
+    "dbscan": (["Category by DBSCAN"], lambda: _dbscan),
+}
+
+
+def transform_sample(pdf: pd.DataFrame, cols: list[str], name: str) -> pd.DataFrame:
+    """Run sample-bound core-T ``name`` (mds, tsne, umap or dbscan) on
+    the rows of ``pdf`` (RID order, at most SAMPLE_CAP): min-max scale
+    ``cols``, apply the numpy function, return ``__rid`` + its output
+    columns."""
+    out_cols, make = _SAMPLE_CORE_TS[name]
+    x = pdf[cols].to_numpy(dtype=float)
+    lo, hi = x.min(axis=0), x.max(axis=0)
+    span = np.where(hi > lo, hi - lo, 1.0)
+    res = make()((x - lo) / span)
+    out = pd.DataFrame({RID: pdf[RID].to_numpy()})
+    for i, c in enumerate(out_cols):
+        vals = res[:, i] if res.ndim == 2 else res
+        # labels as python str, as a Spark string column collects
+        out[c] = [str(v) for v in vals] if vals.dtype.kind in "US" else vals
+    return out
+
+
+def _sample_transform(df: DataFrame, name: str) -> DataFrame | None:
+    cols = _guard_cols(df)
+    if cols is None:
+        return None
+    # orderBy(RID) before limit: a bare limit takes whichever partitions
+    # answer first, so the sample (hence the output) would silently
+    # change with the input's partitioning. TakeOrdered keeps this a
+    # top-k, not a global sort.
+    pdf = df.select(RID, *cols).orderBy(RID).limit(SAMPLE_CAP).toPandas()
+    return df.sparkSession.createDataFrame(transform_sample(pdf, cols, name))
+
+
+def run_mds(df: DataFrame) -> DataFrame | None:
+    return _sample_transform(df, "mds")
+
+
+def run_tsne(df: DataFrame) -> DataFrame | None:
+    """t-SNE on the RID-ordered sample (implementation: ``_tsne``)."""
+    return _sample_transform(df, "tsne")
+
+
+def run_umap(df: DataFrame) -> DataFrame | None:
+    """UMAP on the RID-ordered sample (implementation: ``_umap``)."""
+    return _sample_transform(df, "umap")
 
 
 def run_dbscan(df: DataFrame) -> DataFrame | None:
-    def fn(x: np.ndarray) -> np.ndarray:
-        return numpy_dbscan(x, DBSCAN_EPS, DBSCAN_MIN_SAMPLES).astype(str)
-
-    out = _sample_transform(df, ["Category by DBSCAN"], fn)
-    return out
+    return _sample_transform(df, "dbscan")
 
 
 def run_lida(df: DataFrame, label_col: str | None = None) -> DataFrame | None:

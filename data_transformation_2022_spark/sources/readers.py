@@ -89,7 +89,9 @@ def with_rid(df: DataFrame, order_by: list[str] | None = None) -> DataFrame:
     With ``order_by``: dense 0-based ids by that total order
     (deterministic, engine-independent), computed scalably — range
     repartition + per-partition offsets (functions.order), never a
-    single-reducer global window.
+    single-reducer global window. The bucket-local ranking behind the
+    ids is persisted and lives until ``unpersist`` or ``clearCache``;
+    ``load_table`` pins its one frame per table in ``_RID_CACHE``.
 
     Without ``order_by``: ``monotonically_increasing_id`` — stable within
     a plan, cheap at any scale, but not dense and not engine-portable.
@@ -146,7 +148,7 @@ _RID_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
 def load_table(
-    spark: SparkSession, sf_dir: str, name: str, rid: bool = False, cache_rid: bool = True
+    spark: SparkSession, sf_dir: str, name: str, rid: bool = False
 ) -> DataFrame:
     """Load one test table. Handles TIMESTAMP(NANOS) parquet columns
     (rejected by Spark's reader): reads nanos as long and rebuilds a
@@ -154,7 +156,7 @@ def load_table(
     precision on ns-epoch values (~1.7e18 > 2^53)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     key = (spark.sparkContext.applicationId, sf_dir, name)
-    if rid and cache_rid and key in _RID_CACHE:
+    if rid and key in _RID_CACHE:
         return _RID_CACHE[key]
     df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
@@ -163,9 +165,7 @@ def load_table(
         # with_rid(materialize=True) already persists the heavy ranking
         # pass; the cached frame is a narrow projection over it, so no
         # second persist here.
-        df = with_rid(df, _CANONICAL_KEYS.get(name))
-        if cache_rid:
-            _RID_CACHE[key] = df
+        df = _RID_CACHE[key] = with_rid(df, _CANONICAL_KEYS.get(name))
     return df
 
 

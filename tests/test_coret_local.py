@@ -1,29 +1,30 @@
-"""Equivalence harness for the driver-side core-T evaluator
-(ml/coret_local.py) against the live Spark runners.
+"""Contract of the engine's driver-side core-Ts (ml/coret_local.py)
+against the live Spark runners of ml/coret.py.
 
-Contract under test (mirror of test_steps_local): whenever
-``eval_coret_local`` returns non-None it must equal
-``CORE_T_RUNNERS[t](derived).toPandas()`` byte-for-byte — values,
-dtypes, column order, row order. ``None`` means "use Spark"; the tests
-also pin WHICH shapes must fall back (nulls/NaN/decimal for pca+kmeans,
-rank chains for the order-bound runners, lda always) and that the
-order-free transforms (mds/dbscan/tsne/umap) keep serving for rank
-chains and null-bearing frames. The decimal(38,30) cast replication is
-tripwired against the LIVE Spark cast so a JVM whose Double.toString
-diverges from Python repr fails here instead of drifting silently.
+* pca equals the float64 numpy reference written here bit for bit, and
+  the Spark runner within 1e-12: the narrow runner sums its moments in
+  DECIMAL(38,30), the engine in float64, so the two agree to round-off
+  only;
+* kmeans, mds, dbscan, tsne and umap equal the Spark runner's output
+  sorted by RID, value for value;
+* both hold for select-only, wide, rank-chain, null-bearing and decimal
+  inputs, and fewer than MIN_NUMERIC_COLS numeric columns give None
+  without a Spark job;
+* the engine's frames for these six never call the Spark runners, even
+  for chains the step evaluator refuses.
 """
 
 from __future__ import annotations
 
+import json
+
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
-from data_transformation_2022_spark.ml.coret import CORE_T_RUNNERS
-from data_transformation_2022_spark.ml.coret_local import (
-    _dec_cast,
-    eval_coret_local,
-)
+from data_transformation_2022_spark.ml.coret import CORE_T_RUNNERS, MIN_NUMERIC_COLS
+from data_transformation_2022_spark.ml.coret_local import CORETS, eval_coret_local
 from data_transformation_2022_spark.operators.steps import (
     RID,
     Step,
@@ -32,7 +33,14 @@ from data_transformation_2022_spark.operators.steps import (
 )
 from data_transformation_2022_spark.operators.steps_local import eval_steps_local
 
-LOCAL_CORETS = ("pca", "kmeans", "mds", "dbscan", "tsne", "umap")
+_NUMERIC = {"int", "bigint", "smallint", "tinyint", "float", "double", "decimal"}
+
+RANK_CHAIN = [
+    Step(t="rank", i_type="==", i=["a", "b", "d"], o_type="append",
+         index=["rank a", "rank b", "rank d"]),
+    Step(t="select", i_type="==", i=["rank a", "rank b", "rank d"],
+         o_type="new_table", index=[]),
+]
 
 
 def _base_pdf(n: int = 40) -> pd.DataFrame:
@@ -48,117 +56,70 @@ def _base_pdf(n: int = 40) -> pd.DataFrame:
     )
 
 
-def _assert_serves(spark, pdf, coret, steps=None, rid_order=True):
+def _pca_reference(dpdf: pd.DataFrame, dtypes) -> pd.DataFrame:
+    """Float64 PCA of the sample: null-skipping min/max scaling, centred
+    moments over all n rows with a null as a scaled 0, top-2
+    eigenvectors with the largest |loading| positive, round-off axes
+    zeroed, and run_pca's left-folded projection."""
+    cols = [c for c, t in dtypes if c != RID and t.split("(")[0] in _NUMERIC]
+    pdf = dpdf.sort_values(RID, kind="mergesort", ignore_index=True)
+    x = pdf[cols].to_numpy(dtype=float)
+    n, p = x.shape
+    lo, hi = np.nanmin(x, axis=0), np.nanmax(x, axis=0)
+    span = np.where(hi > lo, hi - lo, 1.0)
+    s = np.nan_to_num((x - lo) / span, nan=0.0)
+    mean = s.sum(axis=0) / n
+    c = s - mean
+    w, v = np.linalg.eigh((c.T @ c) / n)
+    top = np.argsort(w)[::-1][:2]
+    basis = v[:, top]
+    basis *= np.where(basis[np.abs(basis).argmax(axis=0), [0, 1]] < 0, -1.0, 1.0)
+    basis[:, w[top] <= w.max() * max(n, p) * np.finfo(float).eps] = 0.0
+    scaled = (x - lo) / span
+    out = pd.DataFrame({RID: pdf[RID].to_numpy().astype("int64")})
+    for k in range(2):
+        acc = np.zeros(n)
+        for i in range(p):
+            acc = acc + (scaled[:, i] - mean[i]) * basis[i, k]
+        out[f"PC{k + 1}"] = acc
+    return out
+
+
+def _assert_matches(coret, dpdf, dtypes, sdf) -> None:
+    """Engine frame vs the pca reference and the Spark runner's output
+    sorted by RID."""
+    loc = eval_coret_local(dpdf, dtypes, coret)
+    assert loc is not None, f"{coret} returned None"
+    with small_input_mode():
+        sp = CORE_T_RUNNERS[coret](sdf)
+    assert sp is not None
+    spdf = sp.toPandas().sort_values(RID, kind="mergesort", ignore_index=True)
+    if coret == "pca":
+        pd.testing.assert_frame_equal(loc, _pca_reference(dpdf, dtypes), check_exact=True)
+        pd.testing.assert_frame_equal(loc, spdf, check_exact=False, rtol=0, atol=1e-12)
+    else:
+        pd.testing.assert_frame_equal(loc, spdf, check_exact=True)
+
+
+def _assert_serves(spark, pdf, coret, steps=None):
     sdf = spark.createDataFrame(pdf)
-    dtypes = sdf.dtypes
-    dpdf = pdf
+    dpdf, dtypes = pdf, sdf.dtypes
     if steps:
         res = eval_steps_local(pdf, dtypes, steps)
         assert res is not None, f"step evaluator refused {steps}"
         dpdf, dtypes = res
         with small_input_mode():
             sdf = apply_tpath(sdf, steps)
-    loc = eval_coret_local(dpdf, dtypes, coret, rid_order=rid_order)
-    assert loc is not None, f"expected local serve for {coret}"
-    with small_input_mode():
-        sp = CORE_T_RUNNERS[coret](sdf)
-    assert sp is not None
-    spdf = sp.toPandas()
-    # order-free runners re-sort by RID internally, so both frames are
-    # RID-ordered; order-bound runners emit the derived frame's order,
-    # which equals RID here by construction
-    pd.testing.assert_frame_equal(
-        loc.reset_index(drop=True),
-        spdf.reset_index(drop=True),
-        check_exact=True,
-        check_dtype=True,
-    )
+    _assert_matches(coret, dpdf, dtypes, sdf)
 
 
-def _assert_fallback(pdf, dtypes, coret, rid_order=True):
-    assert (
-        eval_coret_local(pdf, dtypes, coret, rid_order=rid_order) is None
-    ), f"expected fallback for {coret}"
-
-
-@pytest.mark.parametrize("coret", LOCAL_CORETS)
+@pytest.mark.parametrize("coret", CORETS)
 def test_select_only_byte_equal(spark, coret):
     _assert_serves(spark, _base_pdf(), coret)
 
 
-@pytest.mark.parametrize("coret", ("mds", "dbscan"))
-def test_order_free_serve_rank_chain(spark, coret):
-    """Rank chains reorder the Spark derived frame, but the sample-bound
-    transforms re-sort by RID — they must keep serving (values ranked by
-    the pinned steps_local contract) and match byte-for-byte."""
-    steps = [
-        Step(t="rank", i_type="==", i=["a", "b", "d"], o_type="append",
-             index=["rank a", "rank b", "rank d"]),
-        Step(t="select", i_type="==", i=["rank a", "rank b", "rank d"],
-             o_type="new_table", index=[]),
-    ]
-    _assert_serves(spark, _base_pdf(), coret, steps=steps, rid_order=False)
-
-
-@pytest.mark.parametrize("coret", ("pca", "kmeans"))
-def test_order_bound_fallback_on_rank(spark, coret):
-    pdf = _base_pdf()
-    sdf = spark.createDataFrame(pdf)
-    _assert_fallback(pdf, sdf.dtypes, coret, rid_order=False)
-
-
-@pytest.mark.parametrize("coret", ("pca", "kmeans"))
-def test_fallback_on_nulls_and_nan(spark, coret):
-    pdf = _base_pdf()
-    pdf.loc[3, "b"] = np.nan
-    sdf = spark.createDataFrame(pdf)
-    _assert_fallback(pdf, sdf.dtypes, coret)
-
-
-@pytest.mark.parametrize("coret", ("mds", "dbscan"))
-def test_order_free_serves_with_nan(spark, coret):
-    """NaN flows through the SAME numpy on both paths — still exact."""
-    pdf = _base_pdf()
-    pdf.loc[3, "b"] = np.nan
-    _assert_serves(spark, pdf, coret)
-
-
-@pytest.mark.parametrize("coret", ("pca", "kmeans"))
-def test_fallback_on_decimal(spark, coret):
-    from decimal import Decimal
-
-    from pyspark.sql import functions as F
-
-    pdf = _base_pdf()
-    sdf = spark.createDataFrame(pdf).withColumn(
-        "e", F.col("a").cast("decimal(20,2)")
-    )
-    dpdf = sdf.toPandas()
-    _assert_fallback(dpdf, sdf.dtypes, coret)
-    assert isinstance(dpdf["e"].iloc[0], Decimal)
-
-
-def test_fallback_lda_and_proven_none_guard(spark):
-    from data_transformation_2022_spark.ml.coret_local import PROVEN_NONE
-
-    pdf = _base_pdf()
-    sdf = spark.createDataFrame(pdf)
-    _assert_fallback(pdf, sdf.dtypes, "lda")
-    # < MIN_NUMERIC_COLS: the None result is PROVEN from the schema —
-    # and it must agree with the live Spark runner's guard
-    narrow = pdf[[RID, "a", "b"]]
-    ntypes = [(RID, "bigint"), ("a", "bigint"), ("b", "double")]
-    for t in ("pca", "kmeans", "mds", "dbscan", "tsne", "umap", "lda"):
-        assert eval_coret_local(narrow, ntypes, t, rid_order=True) is PROVEN_NONE
-        assert eval_coret_local(narrow, ntypes, t, rid_order=False) is PROVEN_NONE
-    nsdf = spark.createDataFrame(narrow)
-    with small_input_mode():
-        assert CORE_T_RUNNERS["pca"](nsdf) is None
-        assert CORE_T_RUNNERS["mds"](nsdf) is None
-
-
 def test_pca_wide_path_byte_equal(spark):
-    """>PCA_EXACT_MAX_COLS columns → the sample-fit branch, replicated."""
+    """>PCA_EXACT_MAX_COLS columns: the Spark runner's sample fit."""
     rs = np.random.RandomState(11)
     n, p = 60, 35
     data = {RID: np.arange(n, dtype=np.int64)}
@@ -167,33 +128,99 @@ def test_pca_wide_path_byte_equal(spark):
     _assert_serves(spark, pd.DataFrame(data), "pca")
 
 
-def test_decimal_cast_matches_live_spark(spark):
-    """JVM tripwire: Decimal(repr(x)).quantize(1e-30, HALF_UP) must equal
-    the live CAST(double AS DECIMAL(38,30)) — shortest-round-trip string
-    semantics. 16M-value sweep done offline (0 mismatches); this keeps a
-    fast randomized guard in CI."""
-    from pyspark.sql import functions as F
+@pytest.mark.parametrize("coret", ("mds", "dbscan", "tsne", "umap"))
+def test_order_free_serve_rank_chain(spark, coret):
+    """Rank chains reorder the Spark derived frame; the sample runners
+    re-sort by RID, and so does the engine."""
+    _assert_serves(spark, _base_pdf(), coret, steps=RANK_CHAIN)
 
-    df = spark.range(20_000).select(
-        F.rand(seed=5).alias("u"),
-        (F.rand(seed=6) * F.rand(seed=7)).alias("prod"),
-        (F.rand(seed=8) * F.pow(F.lit(10.0), -(F.col("id") % 30).cast("double"))).alias("tiny"),
+
+@pytest.mark.parametrize("coret", ("pca", "kmeans"))
+def test_serves_rank_chain(spark, coret):
+    """pca and kmeans emit the derived frame's own (window) order on
+    Spark; the engine's frame is that output sorted by RID."""
+    _assert_serves(spark, _base_pdf(), coret, steps=RANK_CHAIN)
+
+
+@pytest.mark.parametrize("coret", ("mds", "dbscan", "umap"))
+def test_order_free_serves_with_nan(spark, coret):
+    """NaN flows through the SAME numpy on both paths — still exact.
+    (t-SNE's numpy raises on NaN, on both paths alike.)"""
+    pdf = _base_pdf()
+    pdf.loc[3, "b"] = np.nan
+    _assert_serves(spark, pdf, coret)
+
+
+@pytest.mark.parametrize("coret", ("pca", "kmeans"))
+def test_serves_nulls(spark, coret):
+    """SQL nulls in a double and an int column: the fits skip them,
+    their rows project to null (pca) or stay in cluster 0 (kmeans)."""
+    sdf = (
+        spark.createDataFrame(_base_pdf())
+        .withColumn("b", F.when(F.col(RID) == 3, None).otherwise(F.col("b")))
+        .withColumn("c", F.when(F.col(RID) == 5, None).otherwise(F.col("c")))
     )
-    pdf = df.select(
-        "u", "prod", "tiny",
-        F.col("u").cast("decimal(38,30)").alias("ud"),
-        F.col("prod").cast("decimal(38,30)").alias("prodd"),
-        F.col("tiny").cast("decimal(38,30)").alias("tinyd"),
-    ).toPandas()
-    for c, dc in (("u", "ud"), ("prod", "prodd"), ("tiny", "tinyd")):
-        for v, d in zip(pdf[c].to_numpy(), pdf[dc]):
-            assert _dec_cast(float(v)) == d, f"cast drift at {v!r}"
+    dpdf = sdf.toPandas()
+    assert dpdf["b"].isna().sum() == 1 and dpdf["c"].isna().sum() == 1
+    _assert_matches(coret, dpdf, sdf.dtypes, sdf)
+
+
+@pytest.mark.parametrize("coret", CORETS)
+def test_serves_decimal(spark, coret):
+    from decimal import Decimal
+
+    sdf = spark.createDataFrame(_base_pdf()).withColumn(
+        "e", F.col("b").cast("decimal(20,4)")
+    )
+    dpdf = sdf.toPandas()
+    assert isinstance(dpdf["e"].iloc[0], Decimal)
+    _assert_matches(coret, dpdf, sdf.dtypes, sdf)
+
+
+def test_guard_returns_none_without_jobs(spark, sf_dir, jobs_submitted):
+    """Fewer than MIN_NUMERIC_COLS numeric columns: None, like the
+    Spark runners' guard, and no Spark job — in the evaluator and in
+    the engine's channel frame of a step chain it serves."""
+    from data_transformation_2022_spark.engine import Executor
+    from data_transformation_2022_spark.plans.search import Candidate
+    from data_transformation_2022_spark.sources.readers import load_table
+
+    pdf = _base_pdf()
+    narrow = pdf[[RID, "a", "b"]]
+    ntypes = [(RID, "bigint"), ("a", "bigint"), ("b", "double")]
+    assert len(ntypes) - 1 < MIN_NUMERIC_COLS
+    before = jobs_submitted()
+    for t in CORETS:
+        assert eval_coret_local(narrow, ntypes, t) is None
+    assert jobs_submitted() == before
+    nsdf = spark.createDataFrame(narrow)
+    with small_input_mode():
+        assert CORE_T_RUNNERS["pca"](nsdf) is None
+        assert CORE_T_RUNNERS["mds"](nsdf) is None
+
+    li = load_table(spark, sf_dir, "lineitem", rid=True)
+    cols = ["l_quantity", "l_extendedprice"]
+    cand = Candidate(
+        family="dm",
+        steps=[Step(t="select", i_type="==", i=cols, o_type="new_table")],
+        out_cols=cols,
+    )
+    ex = Executor(li, 50)
+    try:
+        ex._sample_local()  # the one collect of the sample
+        before = jobs_submitted()
+        for t in CORETS:
+            assert ex.channel_frame(cand, t) is None
+        assert jobs_submitted() == before
+    finally:
+        ex.release()
 
 
 def test_bench_pool_serve_rate(spark, sf_dir):
-    """Rot-guard: the unranked core-T-eligible dm candidates of the
-    bench table must SERVE locally (and byte-match Spark), so the
-    optimization can't silently decay into always-fallback."""
+    """Rot-guard: every dm candidate of the bench table, rank and
+    arithmetic chains included, gets its sample frame from the step
+    evaluator, and the pca and kmeans frames computed on it match the
+    Spark runners (sorted by RID; pca within 1e-12)."""
     from data_transformation_2022_spark.engine import Executor
     from data_transformation_2022_spark.plans.search import enumerate_tpaths
     from data_transformation_2022_spark.profiler import profile_table
@@ -203,34 +230,57 @@ def test_bench_pool_serve_rate(spark, sf_dir):
     pools = enumerate_tpaths(profile_table(li), max_depth=2)
     ex = Executor(li, 120)
     try:
-        eligible = [
-            c for c in pools["dm"]
-            if not any(s.t in ("sum", "sub", "mul", "div", "rank", "nominalize") for s in c.steps)
-        ]
-        assert eligible, "bench dm pool lost its unranked candidates"
-        served = compared = 0
-        for cand in eligible:
+        compared = []
+        for cand in pools["dm"]:
+            res = ex._local_eval(cand.steps)
+            assert res is not None, f"step evaluator refused {cand.steps}"
             for t in ("pca", "kmeans"):
-                loc, ok = ex._local_coret_frame(cand, t)
-                if not ok:
-                    continue
-                served += 1
+                loc = eval_coret_local(*res, t)
                 with small_input_mode():
-                    derived = ex._sample_derived(cand.steps)
-                    sp = CORE_T_RUNNERS[t](derived)
-                if sp is None or loc is None:
-                    assert sp is None and loc is None
+                    sp = CORE_T_RUNNERS[t](ex._sample_derived(cand.steps))
+                if sp is None:
+                    assert loc is None
                     continue
-                compared += 1
+                compared.append(cand)
+                spdf = sp.toPandas().sort_values(RID, kind="mergesort", ignore_index=True)
                 pd.testing.assert_frame_equal(
-                    loc.reset_index(drop=True),
-                    sp.toPandas().reset_index(drop=True),
-                    check_exact=True,
-                    check_dtype=True,
+                    loc, spdf, check_exact=t != "pca", rtol=0, atol=1e-12
                 )
-        assert served >= 2 * len(eligible) * 0.5, (
-            f"core-T local serve rate collapsed ({served}/{2 * len(eligible)})"
+        assert len(compared) >= 2 * 4
+        assert any(s.t == "rank" for c in compared for s in c.steps), (
+            "bench dm pool lost its rank chains"
         )
-        assert compared >= 1
     finally:
         ex.release()
+
+
+def test_core_t_frames_never_call_spark_runners(spark, sf_dir, monkeypatch):
+    """One path: with the six Spark runners replaced by functions that
+    raise, recommend() gives the same payload — also when the step
+    evaluator is off and every chain's sample frame comes from Spark."""
+    from data_transformation_2022_spark.engine import recommend
+    from data_transformation_2022_spark.sources.readers import load_table
+
+    li = load_table(spark, sf_dir, "lineitem", rid=True)
+
+    def payload() -> str:
+        # exact t-SNE is O(n²): a small sample keeps the six cheap
+        res = recommend(li, dm_ts=list(CORETS), sample_cap=60)
+        return json.dumps(json.loads(res.to_json()), sort_keys=True)
+
+    want = payload()
+    used = {
+        ch["t"]
+        for chart in json.loads(want)["charts"]
+        for ch in chart["channels"].values()
+    }
+    assert used & set(CORETS), "no core-T chart to compare"
+
+    def runner_called(df):
+        raise AssertionError("Spark core-T runner called for a chart frame")
+
+    for t in CORETS:
+        monkeypatch.setitem(CORE_T_RUNNERS, t, runner_called)
+    assert payload() == want
+    monkeypatch.setenv("SPARK_GRAFT_NO_LOCAL_STEPS", "1")
+    assert payload() == want

@@ -25,7 +25,7 @@ def _run(spark, sf_dir, name):
 
 
 def _coret_input(spark, sf_dir, cap):
-    """Replicate ml.coret._collect_sample's min-max-scaled matrix for
+    """Replicate ml.coret.transform_sample's min-max-scaled matrix for
     the coret_* queries' sample (same RID order, same cap)."""
     from data_transformation_2022_spark.sources.readers import load_table
 

@@ -25,8 +25,9 @@ pytestmark = pytest.mark.skipif(
 
 def test_recommend_sf1_identical_with_evaluators_disabled(spark, monkeypatch):
     """recommend() payload at sf1 must be byte-identical with the
-    driver-side step AND core-T evaluators disabled — the continuous
-    proof that the local paths stay equivalent beyond toy SFs."""
+    driver-side step evaluator disabled, when the core-T frames run on
+    the Spark-derived sample — the continuous proof that the local
+    paths stay equivalent beyond toy SFs."""
     from data_transformation_2022_spark.engine import recommend
     from data_transformation_2022_spark.queries import _t
 
@@ -38,7 +39,6 @@ def test_recommend_sf1_identical_with_evaluators_disabled(spark, monkeypatch):
         )
 
     monkeypatch.delenv("SPARK_GRAFT_NO_LOCAL_STEPS", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_NO_LOCAL_CORET", raising=False)
     on = payload()
     monkeypatch.setenv("SPARK_GRAFT_NO_LOCAL_STEPS", "1")
     off = payload()
