@@ -23,11 +23,10 @@ column values from its one collected sample; ``search`` hands it to
 ``recommend()``, so a re-search (same candidates, confirmed or changed
 clusters, another ``vlist``) is served from the channel-frame and bar
 memos and runs only what is new; ``add_t`` / ``add_v`` take each node's
-full derived frame from ``Executor.steps_frame``, evaluated on the
-driver over the collected sample when the step evaluator proves it
-equal to Spark and replayed with ``apply_tpath`` on the cached sample
-otherwise. The memos live until the Executor is released: on re-ingest
-and on ``close()``, which drop its cached sample and derived bases.
+full derived frame from ``Executor.steps_frame``, the same once-per-chain
+sample frame the search's channel frames read. The memos live until the
+Executor is released: on re-ingest and on ``close()``, which drop its
+cached sample and derived bases.
 """
 
 from __future__ import annotations
@@ -39,7 +38,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from .engine import MAX_SERIES, Executor, RecommendResult, recommend
-from .operators.steps import RID, Step, apply_tpath, step_from_dict
+# apply_tpath is unused here but stays importable: perfbench/trace.py
+# wraps api.apply_tpath by name (api.replay)
+from .operators.steps import RID, Step, apply_tpath, step_from_dict  # noqa: F401
 from .profiler import TableProfile, profile_table
 from .sources.readers import read_csv, read_json, read_parquet, with_rid
 
@@ -260,10 +261,8 @@ class EngineSession:
         }
 
     def _frame(self, steps: list[dict[str, Any]]) -> pd.DataFrame:
-        """A node's full derived frame from the session memo (read-only);
-        chains the driver-side evaluator cannot prove replay through this
-        module's ``apply_tpath`` on the Executor's cached sample."""
-        return self._ex.steps_frame([step_from_dict(s) for s in steps], apply_tpath)
+        """A node's full derived frame from the session memo (read-only)."""
+        return self._ex.steps_frame([step_from_dict(s) for s in steps])
 
     @staticmethod
     def _join_channels(frames: dict[str, pd.DataFrame], order: list[str]) -> pd.DataFrame:

@@ -5,12 +5,12 @@ The Spark re-architecture of the reference's ``searchobj`` lifecycle
 (search.py EP2, SURVEY §3):
 
   * the *search* runs on metadata (plans.search, no data touched);
-  * each unique transformation path executes ONCE on Spark and is
-    memoized (reference resdatabuffer, search.py:293-298) — scatter/line
-    channel data on a bounded sample (the reference caps all data at 400
-    rows; we cap only what feeds ML/scoring), bar aggregations on the
-    FULL table distributed (groupBy over a nominal key is output-bounded
-    by the domain, so it scales);
+  * each unique transformation path executes ONCE and is memoized
+    (reference resdatabuffer, search.py:293-298) — a step chain's frame
+    over a bounded sample (the reference caps all data at 400 rows; we
+    cap only what feeds ML/scoring) by the driver-side step evaluator or
+    one Spark collect, bar aggregations on the FULL table distributed
+    (groupBy over a nominal key is output-bounded by the domain);
   * chart assembly joins channel frames positionally on ``__rid``
     (reference pd.concat(axis=1));
   * scoring runs per chart on the small assembled frames (parallel
@@ -21,7 +21,8 @@ The Spark re-architecture of the reference's ``searchobj`` lifecycle
 from __future__ import annotations
 
 import json
-from concurrent.futures import ThreadPoolExecutor
+import threading
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -68,10 +69,10 @@ MAX_PER_TYPE = {
 MAX_SERIES = 3  # lines/bars per chart (reference config.py:33-34)
 NOT_CALCU_DMT = True  # skip DM core-Ts on arithmetic paths (config.py:19)
 
-# toPandas dtype for each Spark type — outer joins / grouping-set
-# Expand unions promote ints to float64 whenever nulls appear in a
-# column, and pandas infer_objects cannot demote non-object dtypes
-# back; consumers restore the declared type when the slice is null-free
+# toPandas dtype for each Spark type — a grouping-set Expand union
+# promotes ints to float64 whenever nulls appear in a column, and pandas
+# infer_objects cannot demote non-object dtypes back; the bar pool
+# restores the declared type when a slice is null-free
 _PD_BY_SPARK = {
     "tinyint": "int8", "smallint": "int16", "int": "int32",
     "bigint": "int64", "float": "float32", "double": "float64",
@@ -208,8 +209,9 @@ class Executor:
         # hits; collected pandas entries are frozen read-only (_freeze)
         self._frames: dict[tuple, pd.DataFrame | None] = {}
         self._bar_frames: dict[tuple, pd.DataFrame | None] = {}
-        # full derived frames of user-built step chains (steps_frame)
-        self._step_frames: dict[tuple, pd.DataFrame] = {}
+        # steps_key → future of the chain's sample frame and its Spark
+        # types (_sample_frame), read by its channel frames and core-Ts
+        self._sample_frames: dict[tuple, Future] = {}
         # assembled, scored charts, keyed by chart type, slist and each
         # channel's (t, candidate signature, core-T) — a re-search
         # assembles and scores nothing
@@ -229,28 +231,19 @@ class Executor:
         # inherited transitively by children built over them) — the
         # dynamic-selector guard in _derived_base keys off this
         self._pruned_base_keys: set[tuple] = set()
-        # sample-side step-prefix memo: many candidates share a leading
-        # rank/nominalize step (e.g. "rank all 100 columns" → select
-        # subset), and re-attaching that subtree to every candidate's
-        # plan pays its Catalyst analysis + codegen again per candidate ×
-        # core-T. Expensive prefixes are localCheckpoint'ed (the sample
-        # is ≤sample_cap rows — materialization is trivial, the saved
-        # re-planning is not), so downstream plans start from a leaf.
+        # sample-side step-prefix memo for the chains the step evaluator
+        # refuses: chains share a leading rank/nominalize step (e.g.
+        # "rank all 100 columns" → select subset), which is
+        # localCheckpoint'ed once (≤sample_cap rows), so each chain's
+        # plan starts from a leaf instead of re-planning the prefix.
         self._sample_bases: dict[tuple, DataFrame] = {}
         # collected-once copy of the bounded sample for the driver-side
-        # step evaluator (steps_local): step-only channel frames are
-        # rank/select/arithmetic over ≤sample_cap rows, and serving them
-        # from pandas skips a Catalyst plan + job round-trip per chain
-        # (r13 opt #3; equivalence contract in operators/steps_local.py,
-        # pinned by tests/test_steps_local.py). SPARK_GRAFT_NO_LOCAL_STEPS
-        # disables it for A/B measurement.
-        import os
-        import threading
-
+        # step evaluator (operators/steps_local.py): serving a chain from
+        # pandas skips a Catalyst plan + job round-trip per chain
         self._sample_pdf: pd.DataFrame | None = None
         self._sample_types: list[tuple[str, str]] | None = None
-        self._local_steps = not os.environ.get("SPARK_GRAFT_NO_LOCAL_STEPS")
         self._sample_lock = threading.Lock()
+        self._sample_frames_lock = threading.Lock()
 
     def _sample_local(self) -> tuple[pd.DataFrame, list[tuple[str, str]]]:
         """The sample collected once (RID order) + its Spark types."""
@@ -267,51 +260,43 @@ class Executor:
                     self._sample_pdf = _freeze(pdf)
         return self._sample_pdf, self._sample_types
 
-    def _local_eval(
-        self, steps: list[Step]
-    ) -> tuple[pd.DataFrame, list[tuple[str, str]]] | None:
-        """The chain evaluated by the driver-side evaluator over the
-        collected sample (RID order); None when the evaluator is off or
-        equivalence with the Spark path is not proven."""
-        if not self._local_steps:
-            return None
-        try:
-            pdf, types = self._sample_local()
-            return eval_steps_local(pdf, types, steps)
-        except Exception:
-            return None
-
-    def _local_channel_frame(self, cand: Candidate) -> pd.DataFrame | None:
-        """Step-only channel frame served by the driver-side evaluator;
-        None whenever equivalence with the Spark path is not proven
-        (caller falls through to the Spark path)."""
-        res = self._local_eval(cand.steps)
-        if res is None or any(c not in res[0].columns for c in cand.out_cols):
-            return None
-        return res[0][[RID, *cand.out_cols]].reset_index(drop=True)
-
-    def steps_frame(self, steps: list[Step], replay=apply_tpath) -> pd.DataFrame:
-        """Full derived frame of a step chain over the sample, RID
-        order, memoized for the executor's life — the node data of the
-        interactive refinements (reference nid2ndata, search.py:1801-1810).
-        Served by the driver-side evaluator when it proves equivalence;
-        otherwise ``replay`` (apply_tpath by default; the session API
-        passes its own binding) runs the chain over the cached sample on
-        Spark. Spark-side errors propagate to the caller."""
+    def _sample_frame(self, steps: list[Step]) -> tuple[pd.DataFrame, list]:
+        """A step chain's full derived frame over the sample (RID order,
+        read-only) and its Spark types, evaluated once per chain: by the
+        driver-side step evaluator when it proves equivalence with Spark,
+        else by one collect of the chain's Spark derivation. Concurrent
+        callers of one chain wait for the first; errors propagate to
+        them and are not memoized."""
         key = steps_key(steps)
-        out = self._step_frames.get(key)
-        if out is None:
-            res = self._local_eval(steps)
-            if res is not None:
-                out = res[0].reset_index(drop=True)
-            else:
-                with small_input_mode():
-                    derived = replay(self.sample, steps)
-                if RID in derived.columns:
-                    derived = derived.orderBy(RID)
-                out = derived.toPandas()
-            out = self._step_frames[key] = _freeze(out)
-        return out
+        with self._sample_frames_lock:
+            fut = self._sample_frames.get(key)
+            owner = fut is None
+            if owner:
+                fut = self._sample_frames[key] = Future()
+        if owner:
+            try:
+                try:
+                    res = eval_steps_local(*self._sample_local(), steps)
+                except Exception:
+                    res = None
+                if res is None:
+                    derived = self._sample_derived(steps)
+                    # rank/nominalize tails come back in window-sort (or
+                    # stacked-groupBy hash) order
+                    if RID in derived.columns:
+                        derived = derived.orderBy(RID)
+                    res = derived.toPandas(), derived.dtypes
+                fut.set_result((_freeze(res[0].reset_index(drop=True)), res[1]))
+            except BaseException as exc:
+                del self._sample_frames[key]
+                fut.set_exception(exc)
+        return fut.result()
+
+    def steps_frame(self, steps: list[Step]) -> pd.DataFrame:
+        """The node data of the interactive refinements (reference
+        nid2ndata, search.py:1801-1810): the chain's _sample_frame, shared
+        with the search's channel frames."""
+        return self._sample_frame(steps)[0]
 
     def _sample_derived(self, steps) -> DataFrame:
         """apply_tpath over the cached sample with shared-prefix memo +
@@ -342,9 +327,10 @@ class Executor:
 
     def channel_frame(self, cand: Candidate, coret: str | None) -> pd.DataFrame | None:
         """Execute (tpath, core-T) once on the bounded sample; return the
-        collected channel frame keyed by __rid. The pca, kmeans, mds,
-        tsne, umap and dbscan frames are driver numpy (ml/coret_local);
-        only lda and lida run their Spark runners."""
+        collected channel frame keyed by __rid. A step-only frame is a
+        projection of the chain's sample frame (_sample_frame); the pca,
+        kmeans, mds, tsne, umap and dbscan frames are driver numpy over
+        it (ml/coret_local); only lda and lida run their Spark runners."""
         key = (cand.signature(), coret)
         if key in self._frames:
             return self._frames[key]
@@ -352,34 +338,13 @@ class Executor:
         try:
             with small_input_mode():  # channel frames are sample-bounded
                 if coret is None:
-                    # driver-side evaluator first (r13 opt #3): step-only
-                    # frames are provably-equivalent pandas over the
-                    # collected sample; None → the Spark path below
-                    out = self._local_channel_frame(cand)
-                    if out is None:
-                        derived = self._sample_derived(cand.steps)
-                        # explicit RID order: tpaths ending in
-                        # rank/nominalize come back in window-sort (or
-                        # stacked-groupBy hash) order, and the batch path
-                        # sorts by RID — all memo fillers must yield the
-                        # same row order
-                        out = (
-                            derived.select(RID, *cand.out_cols)
-                            .orderBy(RID)
-                            .toPandas()
-                        )
+                    out = self._sample_frame(cand.steps)[0][[RID, *cand.out_cols]]
                 elif NOT_CALCU_DMT and any(
                     s.t in ("sum", "sub", "mul", "div") for s in cand.steps
                 ):
                     out = None  # reference Tengine.py:58-64
-                elif coret in coret_local.CORETS:
-                    # the core-T's numpy over the chain's sample frame:
-                    # the step evaluator's, else the Spark derivation
-                    # collected in RID order — no runner jobs either way
-                    res = self._local_eval(cand.steps)
-                    if res is None:
-                        derived = self._sample_derived(cand.steps)
-                        res = derived.orderBy(RID).toPandas(), derived.dtypes
+                elif coret in coret_local.CORETS:  # numpy, no runner job
+                    res = self._sample_frame(cand.steps)
                     out = coret_local.eval_coret_local(*res, coret)
                 else:  # lda, lida: the distributed Spark runners
                     res = CORE_T_RUNNERS[coret](self._sample_derived(cand.steps))
@@ -431,8 +396,10 @@ class Executor:
     ) -> None:
         """Concurrent job submission (replaces the reference's optional
         MULTIPROCESS search parallelism, config.py:15 / search.py:55-63):
-        fill the memo tables with a thread pool — Spark schedules the
-        resulting jobs concurrently on idle executor slots.
+        fill the memo tables with thread pools — Spark schedules the
+        resulting jobs concurrently on idle executor slots. Frame jobs
+        run ``workers`` at a time; the frames of one step chain share its
+        sample frame, evaluated once (``_sample_frame``).
 
         Bar aggregates are BATCHED per derived base: every bar job
         sharing the same base — ALL its x columns and every
@@ -562,8 +529,8 @@ class Executor:
                         # the Expand union nulls every other set's x
                         # column, which promotes pandas ints to float64
                         # for the WHOLE column — restore this slice's x
-                        # dtype (same convention as _batch_step_frames;
-                        # genuine null groups keep the promoted dtype)
+                        # dtype (genuine null groups keep the promoted
+                        # dtype)
                         want = _PD_BY_SPARK.get(
                             base.schema[x].dataType.simpleString()
                         )
@@ -590,17 +557,12 @@ class Executor:
                         self._bar_frames.pop(key, None)
                         self.bar_aggregate(_x, y_cand, agg)
 
-        # Two independent sides run CONCURRENTLY (r8: the table side's
-        # first base materialization — a full-table rank chain, the
-        # single most expensive block of recommend — previously
-        # serialized BEHIND the sample-side batch join it shares nothing
-        # with):
+        # Two independent sides run CONCURRENTLY, so the table side's
+        # first base materialization — a full-table rank chain, the most
+        # expensive block of recommend — never waits on the sample side:
         #
-        # * sample side: the step-only frames batch join (one outer-join
-        #   job over the ≤sample_cap cached sample), then the per-frame
-        #   pool (memo hits for everything the batch served, driver numpy
-        #   for core-T frames, Spark jobs for lda/lida and for chains
-        #   the step evaluator refuses);
+        # * sample side: the frame pool; each frame reads its chain's
+        #   memoised sample frame (_sample_frame);
         # * table side: serial derived-base registration (bottom-up
         #   through the recursive prefix memo so ('rank','sub') reuses
         #   the cached ('rank',) table and racing threads never duplicate
@@ -609,35 +571,11 @@ class Executor:
         #   materialization of any base persisted as a whole, then the
         #   batched bar pool against the materialized bases.
         #
-        # Both sides fill disjoint memo tables (_frames vs _bar_frames /
-        # _derived_bases), so the only shared state is the sample-prefix
-        # memo, which _sample_derived already guards with a lock.
+        # The sides fill disjoint memo tables; the only shared state is
+        # the sample-prefix memo, which _sample_derived guards with a lock.
         def _sample_side() -> None:
-            # step-only frames (no core-T) are all row-aligned
-            # projections of the same cached sample: collect them in ONE
-            # outer-join job instead of one toPandas job each; anything
-            # the batch can't serve falls through to the per-frame pool
-            null_frames = {
-                k: v
-                for k, v in uniq_frames.items()
-                if v[1] is None and k not in self._frames
-            }
-            # driver-side evaluator first (r13 opt #3): whatever it can
-            # prove equivalent never touches Spark at all; only the
-            # leftovers go through the batched outer-join job
-            for k in list(null_frames):
-                out = self._local_channel_frame(null_frames[k][0])
-                if out is not None:
-                    self._frames[k] = _freeze(out)
-                    del null_frames[k]
-            if len(null_frames) > 1:
-                self._batch_step_frames(null_frames)
             with ThreadPoolExecutor(workers) as fpool:
-                list(
-                    fpool.map(
-                        lambda cv: self.channel_frame(*cv), uniq_frames.values()
-                    )
-                )
+                list(fpool.map(lambda cv: self.channel_frame(*cv), uniq_frames.values()))
 
         def _table_side() -> None:
             # Column hint for the persisted bases: the bar aggregates
@@ -775,8 +713,6 @@ class Executor:
         analyzed-plan equality, so the drop thread is registered in
         _PENDING_RELEASES and the next Executor joins it before
         persisting anything plan-identical (ADVICE r12)."""
-        import threading
-
         sample = self.sample
         derived = [f for frames in self._persisted.values() for f in frames]
         self._derived_bases.clear()
@@ -807,94 +743,6 @@ class Executor:
         th = threading.Thread(target=_drop, daemon=True, name="executor-release")
         _PENDING_RELEASES.append(th)
         th.start()
-
-    def _batch_step_frames(
-        self, jobs: dict[tuple, tuple[Candidate, str | None]]
-    ) -> None:
-        """Fill the frame memo for step-only candidates with ONE Spark
-        job: every frame is RID-keyed over the same ≤sample_cap cached
-        sample, so an outer join on RID (plus a per-frame presence
-        marker, in case a path ever drops rows) reconstructs each frame
-        exactly. Build-time failures skip that candidate; an
-        execution-time failure abandons the whole batch — either way the
-        per-frame path re-runs whatever is still missing."""
-        import functools
-
-        pieces, meta = [], []
-        for i, (key, (cand, _)) in enumerate(jobs.items()):
-            try:
-                with small_input_mode():
-                    d = self._sample_derived(cand.steps)
-                sel = d.select(
-                    F.col(RID),
-                    F.lit(1).alias(f"f{i}__p"),
-                    *[
-                        F.col(c).alias(f"f{i}__{j}")
-                        for j, c in enumerate(cand.out_cols)
-                    ],
-                )
-            except Exception:
-                continue
-            pieces.append(sel)
-            # per-column Spark types (fields after RID + presence marker)
-            # so dtypes can be restored after the outer join promotes them
-            col_types = [f.dataType.simpleString() for f in sel.schema.fields[2:]]
-            meta.append((key, list(cand.out_cols), i, col_types))
-        if not pieces:
-            return
-
-        pd_by_spark = _PD_BY_SPARK
-
-        def _consume(pdf, group_meta) -> None:
-            for key, out_cols, i, col_types in group_meta:
-                mask = pdf[f"f{i}__p"] == 1
-                renames = {f"f{i}__{j}": c for j, c in enumerate(out_cols)}
-                fr = (
-                    pdf.loc[mask, [RID] + list(renames)]
-                    .rename(columns=renames)
-                    # RID order, not join-output order: downstream scores
-                    # (sig_linearness tie order, chart payloads) are
-                    # position-sensitive, and the solo channel_frame path
-                    # yields RID order — batch and solo must agree byte
-                    # for byte no matter which one filled the memo
-                    .sort_values(RID, kind="mergesort")
-                    .reset_index(drop=True)
-                )
-                for c, t in zip(out_cols, col_types):
-                    want = pd_by_spark.get(t)
-                    if want is not None and str(fr[c].dtype) != want:
-                        # astype('bool') on an object column silently maps
-                        # None->False / NaN->True instead of raising like
-                        # the int casts do — genuine nulls must stay None
-                        # (the solo toPandas path keeps them)
-                        if want == "bool" and fr[c].isna().any():
-                            continue
-                        try:
-                            fr[c] = fr[c].astype(want)
-                        except (ValueError, TypeError):
-                            pass  # genuine nulls: solo toPandas keeps float too
-                self._frames[key] = _freeze(fr)
-
-        # chunked joins: Catalyst analysis of an N-way join tree grows
-        # super-linearly in N (a single 24-way join measured ~4.5 s of
-        # pure planning on 500 cached rows) — six-frame joins analyzed
-        # and executed concurrently cost a fraction of that
-        CHUNK = 6
-
-        def _one_group(lo: int) -> None:
-            group = pieces[lo : lo + CHUNK]
-            gmeta = meta[lo : lo + CHUNK]
-            try:
-                joined = functools.reduce(
-                    lambda a, b: a.join(b, RID, "outer"), group
-                )
-                pdf = joined.toPandas()
-                _consume(pdf, gmeta)
-            except Exception:
-                return  # group falls through to the per-frame pool path
-
-        with ThreadPoolExecutor(4) as pool:
-            list(pool.map(_one_group, range(0, len(pieces), CHUNK)))
 
     def _derived_base(
         self,

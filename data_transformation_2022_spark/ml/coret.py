@@ -205,7 +205,12 @@ def run_pca(df: DataFrame) -> DataFrame | None:
 
 
 def _lloyd(x: np.ndarray, k: int, seed: int, iters: int = 25) -> np.ndarray:
-    """Seeded k-means++ init + Lloyd's on a driver sample. Deterministic."""
+    """Seeded k-means++ init + Lloyd's on a driver sample. Deterministic.
+    Fits on the rows whose values are all finite: one null (NaN) cell
+    would otherwise make its center NaN and every distance to it NaN."""
+    finite = np.isfinite(x).all(axis=1)
+    if finite.any():
+        x = x[finite]
     rs = np.random.RandomState(seed)
     centers = [x[rs.randint(len(x))]]
     # Incremental k-means++: keep the running min distance-to-chosen-set

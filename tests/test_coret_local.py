@@ -165,6 +165,24 @@ def test_serves_nulls(spark, coret):
     _assert_matches(coret, dpdf, sdf.dtypes, sdf)
 
 
+def test_kmeans_centers_skip_null_rows(spark):
+    """A null cell does not poison its k-means center: the fit equals
+    the one on the frame with that row dropped, and the engine and the
+    Spark runner assign the null-bearing frame alike."""
+    from data_transformation_2022_spark.ml.coret import kmeans_fit
+
+    sdf = spark.createDataFrame(_base_pdf()).withColumn(
+        "b", F.when(F.col(RID) == 3, None).otherwise(F.col("b"))
+    )
+    fit = kmeans_fit(sdf)
+    dropped = kmeans_fit(sdf.filter(F.col(RID) != 3))
+    # row 3 holds no column's min or max, so only the null can differ
+    assert (fit["lo"], fit["span"]) == (dropped["lo"], dropped["span"])
+    assert np.isfinite(fit["centers"]).all()
+    assert fit["centers"] == dropped["centers"]
+    _assert_matches("kmeans", sdf.toPandas(), sdf.dtypes, sdf)
+
+
 @pytest.mark.parametrize("coret", CORETS)
 def test_serves_decimal(spark, coret):
     from decimal import Decimal
@@ -232,7 +250,7 @@ def test_bench_pool_serve_rate(spark, sf_dir):
     try:
         compared = []
         for cand in pools["dm"]:
-            res = ex._local_eval(cand.steps)
+            res = eval_steps_local(*ex._sample_local(), cand.steps)
             assert res is not None, f"step evaluator refused {cand.steps}"
             for t in ("pca", "kmeans"):
                 loc = eval_coret_local(*res, t)
@@ -256,8 +274,10 @@ def test_bench_pool_serve_rate(spark, sf_dir):
 
 def test_core_t_frames_never_call_spark_runners(spark, sf_dir, monkeypatch):
     """One path: with the six Spark runners replaced by functions that
-    raise, recommend() gives the same payload — also when the step
-    evaluator is off and every chain's sample frame comes from Spark."""
+    raise, recommend() gives the same payload — also with the step
+    evaluator patched out, so every chain's sample frame comes from
+    Spark."""
+    from data_transformation_2022_spark import engine
     from data_transformation_2022_spark.engine import recommend
     from data_transformation_2022_spark.sources.readers import load_table
 
@@ -282,5 +302,5 @@ def test_core_t_frames_never_call_spark_runners(spark, sf_dir, monkeypatch):
     for t in CORETS:
         monkeypatch.setitem(CORE_T_RUNNERS, t, runner_called)
     assert payload() == want
-    monkeypatch.setenv("SPARK_GRAFT_NO_LOCAL_STEPS", "1")
+    monkeypatch.setattr(engine, "eval_steps_local", lambda *a: None)
     assert payload() == want

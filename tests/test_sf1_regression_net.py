@@ -28,6 +28,7 @@ def test_recommend_sf1_identical_with_evaluators_disabled(spark, monkeypatch):
     driver-side step evaluator disabled, when the core-T frames run on
     the Spark-derived sample — the continuous proof that the local
     paths stay equivalent beyond toy SFs."""
+    from data_transformation_2022_spark import engine
     from data_transformation_2022_spark.engine import recommend
     from data_transformation_2022_spark.queries import _t
 
@@ -38,9 +39,8 @@ def test_recommend_sf1_identical_with_evaluators_disabled(spark, monkeypatch):
             json.loads(res.to_json()), sort_keys=True, default=str
         )
 
-    monkeypatch.delenv("SPARK_GRAFT_NO_LOCAL_STEPS", raising=False)
     on = payload()
-    monkeypatch.setenv("SPARK_GRAFT_NO_LOCAL_STEPS", "1")
+    monkeypatch.setattr(engine, "eval_steps_local", lambda *a: None)
     off = payload()
     assert on == off
 

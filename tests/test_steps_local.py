@@ -353,8 +353,117 @@ def test_recommend_identical_with_evaluator_disabled(spark, monkeypatch):
 
         return json.dumps(out, sort_keys=True, default=str)
 
-    monkeypatch.delenv("SPARK_GRAFT_NO_LOCAL_STEPS", raising=False)
+    from data_transformation_2022_spark import engine
+
     on = payload()
-    monkeypatch.setenv("SPARK_GRAFT_NO_LOCAL_STEPS", "1")
+    monkeypatch.setattr(engine, "eval_steps_local", lambda *a: None)
     off = payload()
     assert on == off
+
+
+def test_refused_chains_derived_once(spark, monkeypatch):
+    """Nulls in ranked and arithmetic inputs make the evaluator refuse
+    those chains: recommend() gives the same payload as with the
+    evaluator patched out, and each refused chain is derived and
+    collected on Spark once, however many core-Ts read it."""
+    import collections
+    import json
+
+    from data_transformation_2022_spark import engine
+    from data_transformation_2022_spark.operators.steps import steps_key
+    from data_transformation_2022_spark.sources.readers import with_rid
+
+    rs = np.random.RandomState(3)
+    n = 80
+    pdf = pd.DataFrame(
+        {
+            "grp": [f"g{i % 4}" for i in range(n)],
+            "qty": [None if i % 9 == 4 else float(rs.randint(1, 50)) for i in range(n)],
+            "price": [None if i % 11 == 7 else rs.randint(100, 9000) / 4 for i in range(n)],
+            "disc": [rs.randint(0, 10) / 8 for _ in range(n)],
+            "tax": [rs.randint(0, 8) / 16 for _ in range(n)],
+        }
+    )
+    df = with_rid(spark.createDataFrame(pdf))
+
+    derived = collections.Counter()
+    sample_derived = engine.Executor._sample_derived
+
+    def spy(self, steps):
+        derived[steps_key(steps)] += 1
+        return sample_derived(self, steps)
+
+    monkeypatch.setattr(engine.Executor, "_sample_derived", spy)
+
+    def payload() -> tuple[str, dict]:
+        derived.clear()
+        res = engine.recommend(
+            df,
+            dm_ts=["pca", "kmeans", "mds", "dbscan"],
+            chart_types=["num_scatter", "cat_scatter"],
+            sample_cap=60,
+        )
+        return json.dumps(json.loads(res.to_json()), sort_keys=True), dict(derived)
+
+    on, refused = payload()
+    assert json.loads(on)["charts"], "no chart to compare"
+    assert any(k[0][0] == "rank" for k in refused), "no refused rank chain"
+    assert any(k[0][0] in ("sum", "sub", "mul", "div") for k in refused), (
+        "no refused arithmetic chain"
+    )
+    assert set(refused.values()) == {1}, refused
+    monkeypatch.setattr(engine, "eval_steps_local", lambda *a: None)
+    off, every = payload()
+    assert off == on
+    assert set(refused) < set(every) and set(every.values()) == {1}, every
+
+
+def test_sample_frame_once_under_contention(spark):
+    """More threads than cores ask for the same chains at once: a
+    refused chain is derived on Spark once and every caller gets the
+    same read-only frame; a chain whose derivation fails raises in
+    every caller, leaves no memo entry and deadlocks no one."""
+    import collections
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from data_transformation_2022_spark import engine
+    from data_transformation_2022_spark.operators.steps import steps_key
+
+    pdf = pd.DataFrame(
+        {
+            RID: np.arange(30, dtype=np.int64),
+            "a": [None if i % 7 == 2 else float(i % 5) for i in range(30)],
+            "b": np.linspace(0.0, 1.0, 30),
+        }
+    )
+    ex = engine.Executor(spark.createDataFrame(pdf), 30)
+    refused = [
+        Step(t="rank", i_type="==", i=["a", "b"], o_type="append", index=["ra", "rb"])
+    ]
+    failing = [Step(t="select", i_type="==", i=["missing"], o_type="new_table")]
+    derived = collections.Counter()
+    sample_derived = ex._sample_derived
+
+    def spy(steps):
+        derived[steps_key(steps)] += 1
+        return sample_derived(steps)
+
+    ex._sample_derived = spy
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(16) as pool:
+            futs = [pool.submit(ex._sample_frame, refused) for _ in range(32)]
+            bad = [pool.submit(ex._sample_frame, failing) for _ in range(32)]
+            frames = [f.result(timeout=300)[0] for f in futs]
+            errors = [f.exception(timeout=300) for f in bad]
+    finally:
+        sys.setswitchinterval(interval)
+        ex.release()
+    assert derived[steps_key(refused)] == 1
+    assert all(f is frames[0] for f in frames)
+    assert list(frames[0][RID]) == list(range(30))
+    assert not frames[0]["rb"].to_numpy().flags.writeable
+    assert all(e is not None for e in errors)
+    assert steps_key(failing) not in ex._sample_frames
