@@ -3,9 +3,9 @@ Spark-backed session object (reference ``main.py:40-138``).
 
 Framework-agnostic by design — ``EngineSession`` methods take and return
 plain dicts with the same payload shapes as the reference endpoints, and
-``create_app()`` wires them to Flask *if* Flask is importable (it is not
-required; the container has no Flask and everything is testable without
-it).
+one route table serves them over HTTP: ``create_app()`` wires it to Flask
+*if* Flask is importable (it is not required), and ``create_http_server()``
+to the standard library's server.
 
 Two deliberate deviations from the reference, per SURVEY watch-list:
 
@@ -277,12 +277,41 @@ class EngineSession:
         return out
 
 
+# reference main.py:31-38
+_CORS = {
+    "Access-Control-Allow-Origin": "*",
+    "Access-Control-Allow-Method": "*",
+    "Access-Control-Allow-Headers": "x-requested-with,content-type",
+}
+
+
+def _routes(get_session) -> dict[str, Any]:
+    """The four endpoint routes (reference Flask ``main.py:40-138``),
+    path → handler(payload), served by both front-ends. ``get_session()``
+    returns the EngineSession the handlers call."""
+    return {
+        "/vis/csv": lambda d: get_session().ingest_records(d["headers"], d["body"]),
+        "/vis/search": lambda d: get_session().search(d),
+        "/vis/addT": lambda d: get_session().add_t(d.get("pid"), d.get("t"), d.get("para", {})),
+        "/vis/addV": lambda d: get_session().add_v(d.get("vtype"), d.get("channels")),
+    }
+
+
+def _respond(handler, raw: bytes) -> tuple[int, bytes]:
+    """Run a route handler on a raw JSON request body: (status, JSON
+    body); an error is surfaced as JSON, not a stack dump."""
+    try:
+        payload = json.loads(raw.decode("utf-8")) if raw else {}
+        return 200, json.dumps(handler(payload), default=_json_default).encode("utf-8")
+    except Exception as e:
+        return 500, json.dumps({"error": str(e)}).encode("utf-8")
+
+
 def create_http_server(session: EngineSession, host: str = "127.0.0.1", port: int = 0):
-    """Dependency-free live HTTP server over the four endpoint routes
-    (reference Flask ``main.py:40-138``): stdlib ``ThreadingHTTPServer``,
-    same paths, same JSON payloads, same CORS headers — so the serving
-    surface is exercisable end-to-end in environments without Flask
-    (this container). Returns the server; callers drive it with
+    """Dependency-free live HTTP server over the four endpoint routes:
+    stdlib ``ThreadingHTTPServer``, the same routes, JSON payloads and
+    CORS headers as ``create_app``, so the serving surface runs where
+    Flask is not installed. Returns the server; callers drive it with
     ``serve_forever()`` (typically on a daemon thread) and stop it with
     ``shutdown()``. Port 0 binds an ephemeral port (``server_address``
     reports the actual one).
@@ -293,60 +322,42 @@ def create_http_server(session: EngineSession, host: str = "127.0.0.1", port: in
     integration surface, not a production concurrency story."""
     import http.server
 
-    routes = {
-        "/vis/csv": lambda d: session.ingest_records(d["headers"], d["body"]),
-        "/vis/search": lambda d: session.search(d),
-        "/vis/addT": lambda d: session.add_t(
-            d.get("pid"), d.get("t"), d.get("para", {})
-        ),
-        "/vis/addV": lambda d: session.add_v(d.get("vtype"), d.get("channels")),
-    }
+    routes = _routes(lambda: session)
 
     class Handler(http.server.BaseHTTPRequestHandler):
         def log_message(self, *args):  # quiet: tests/smoke only
             pass
 
-        def _cors(self):  # reference main.py:31-38
-            self.send_header("Access-Control-Allow-Origin", "*")
-            self.send_header("Access-Control-Allow-Method", "*")
-            self.send_header(
-                "Access-Control-Allow-Headers", "x-requested-with,content-type"
-            )
+        def _head(self, code: int, headers: dict[str, str] | None = None) -> None:
+            self.send_response(code)
+            for k, v in {**_CORS, **(headers or {})}.items():
+                self.send_header(k, v)
+            self.end_headers()
 
         def do_OPTIONS(self):
-            self.send_response(200)
-            self._cors()
-            self.end_headers()
+            self._head(200)
 
         def do_POST(self):
             fn = routes.get(self.path)
             if fn is None:
-                self.send_response(404)
-                self._cors()
-                self.end_headers()
+                self._head(404)
                 return
-            try:
-                n = int(self.headers.get("Content-Length") or 0)
-                payload = json.loads(self.rfile.read(n).decode("utf-8")) if n else {}
-                body = json.dumps(fn(payload), default=_json_default).encode("utf-8")
-                code = 200
-            except Exception as e:  # surface errors as JSON, not a stack dump
-                body = json.dumps({"error": str(e)}).encode("utf-8")
-                code = 500
-            self.send_response(code)
-            self._cors()
-            self.send_header("Content-Type", "application/json")
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
+            n = int(self.headers.get("Content-Length") or 0)
+            code, body = _respond(fn, self.rfile.read(n))
+            self._head(
+                code,
+                {"Content-Type": "application/json", "Content-Length": str(len(body))},
+            )
             self.wfile.write(body)
 
     return http.server.ThreadingHTTPServer((host, port), Handler)
 
 
 def create_app(session: EngineSession | None = None):
-    """Optional Flask wiring for the four endpoints. Returns the Flask
-    app, or raises ImportError when Flask is absent (the session API
-    itself never needs it)."""
+    """Optional Flask wiring for the four endpoints (the route table
+    ``create_http_server`` serves). Returns the Flask app, or raises
+    ImportError when Flask is absent (the session API itself never
+    needs it). Without ``session`` the first request builds one."""
     from flask import Flask, request  # gated: not a dependency
 
     app = Flask(__name__)
@@ -360,30 +371,15 @@ def create_app(session: EngineSession | None = None):
         return state["session"]
 
     @app.after_request
-    def cors(resp):  # reference main.py:31-38
-        resp.headers["Access-Control-Allow-Origin"] = "*"
-        resp.headers["Access-Control-Allow-Method"] = "*"
-        resp.headers["Access-Control-Allow-Headers"] = "x-requested-with,content-type"
+    def cors(resp):
+        resp.headers.update(_CORS)
         return resp
 
-    @app.route("/vis/csv", methods=["POST"])
-    def csv_in():
-        data = json.loads(request.get_data().decode("utf-8"))
-        return json.dumps(_sess().ingest_records(data["headers"], data["body"]), default=_json_default)
+    for path, fn in _routes(_sess).items():
 
-    @app.route("/vis/search", methods=["POST"])
-    def search_begin():
-        data = json.loads(request.get_data().decode("utf-8"))
-        return json.dumps(_sess().search(data), default=_json_default)
+        def view(fn=fn):
+            code, body = _respond(fn, request.get_data())
+            return body, code, {"Content-Type": "application/json"}
 
-    @app.route("/vis/addT", methods=["POST"])
-    def add_t():
-        data = json.loads(request.get_data().decode("utf-8"))
-        return json.dumps(_sess().add_t(data.get("pid"), data.get("t"), data.get("para", {})), default=_json_default)
-
-    @app.route("/vis/addV", methods=["POST"])
-    def add_v():
-        data = json.loads(request.get_data().decode("utf-8"))
-        return json.dumps(_sess().add_v(data.get("vtype"), data.get("channels")), default=_json_default)
-
+        app.add_url_rule(path, path, view, methods=["POST"])
     return app

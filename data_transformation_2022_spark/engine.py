@@ -219,18 +219,15 @@ class Executor:
         # shared derived-table prefixes on the FULL table, persisted —
         # the reference's resdatabuffer (search.py:293-298): candidates
         # sharing a derivation (e.g. the global rank step) materialize
-        # it once instead of re-running its jobs per chart
+        # it once instead of re-running its jobs per chart. Keyed by
+        # what each base holds (_derived_base): per level, the step and
+        # the keep set a rank/nominalize level was pruned to
         self._derived_bases: dict[tuple, DataFrame] = {}
-        # chain key → the frames persisted for that base (its bucket-local
+        # base key → the frames persisted for that base (its bucket-local
         # ranking, or the base itself for a wide stacked rank); the
         # executor owns them and release() unpersists them
         self._persisted: dict[tuple, list[DataFrame]] = {}
         self._quantiles = quantiles or {}
-        # chains whose memoized frame carries FEWER columns/ranked
-        # outputs than the unpruned derivation would (keep_fn pruning,
-        # inherited transitively by children built over them) — the
-        # dynamic-selector guard in _derived_base keys off this
-        self._pruned_base_keys: set[tuple] = set()
         # sample-side step-prefix memo for the chains the step evaluator
         # refuses: chains share a leading rank/nominalize step (e.g.
         # "rank all 100 columns" → select subset), which is
@@ -360,6 +357,13 @@ class Executor:
         """sum_bar / count_bar on the FULL table (distributed groupBy —
         output bounded by the nominal domain). Memoized per
         (x, y-path, agg); derived bases shared and persisted."""
+        return self._bar_aggregate(x_col, y_cand, agg, None)
+
+    def _bar_aggregate(
+        self, x_col: str, y_cand: Candidate | None, agg: str, keep_fn
+    ) -> pd.DataFrame | None:
+        """bar_aggregate over the bases ``keep_fn`` prunes (``None``:
+        unpruned); prefetch's one-aggregate fallback passes its own."""
         key = (x_col, y_cand.signature() if y_cand is not None else None, agg)
         if key in self._bar_frames:
             return self._bar_frames[key]
@@ -372,15 +376,8 @@ class Executor:
                 )
             else:
                 derive = [s for s in (y_cand.steps if y_cand else []) if s.o_type == "append"]
-                base = self._derived_base(derive)
+                _key, base = self._derived_base(derive, keep_fn)
                 ys = _prefer_derived(y_cand)[:MAX_SERIES] if y_cand else []
-                if not ({x_col, *ys} <= set(base.columns)):
-                    # memo hit on a base pruned by prefetch's keep_cols
-                    # registration for a DIFFERENT bar-job set (possible
-                    # only via the public API, not recommend()): rebuild
-                    # the chain unpruned instead of letting the blanket
-                    # except below silently hand back None
-                    base = self._rebuild_base_unpruned(derive)
                 aggs = [F.sum(F.col(c)).alias(f"SUM({c})") for c in ys]
                 out = base.groupBy(x_col).agg(*aggs).toPandas()
         except Exception:
@@ -412,32 +409,78 @@ class Executor:
         scheduler round-trips, the dominant term of the bar pool's
         4.5 s at sf0.1).
 
-        The frame side and the bar side fill disjoint memo tables, so a
-        caller may also run them as two concurrent calls,
-        ``prefetch(frame_jobs, [])`` and ``prefetch([], bar_jobs)``:
-        recommend() does, and assembles the sample-side charts while the
-        bar jobs run."""
+        The frame jobs run first, then the bar jobs; a side with no jobs
+        is skipped. The two sides fill disjoint memo tables, so a caller
+        may run them as two concurrent calls, ``prefetch(frame_jobs, [])``
+        and ``prefetch([], bar_jobs)``: recommend() does, and assembles
+        the sample-side charts while the bar jobs run."""
         uniq_frames: dict[tuple, tuple[Candidate, str | None]] = {}
         for cand, coret in frame_jobs:
             uniq_frames[(cand.signature(), coret)] = (cand, coret)
+        if uniq_frames:
+            with ThreadPoolExecutor(workers) as fpool:
+                list(fpool.map(lambda cv: self.channel_frame(*cv), uniq_frames.values()))
+
         uniq_bars: dict[tuple, tuple[str, Candidate | None, str]] = {}
         for x_col, y_cand, agg in bar_jobs:
             key = (x_col, y_cand.signature() if y_cand is not None else None, agg)
             if key not in self._bar_frames:  # memo hit: no job to run
                 uniq_bars[key] = (x_col, y_cand, agg)
+        if not uniq_bars:
+            # nothing to register: a concurrent bar call may be
+            # registering bases this side would otherwise iterate
+            return
 
+        # Column hint for the persisted bases: the bar aggregates are the
+        # ONLY consumers of these tables (channel frames run on the
+        # sample), and they touch just the groupBy x columns, the derived
+        # outputs, and the arithmetic inputs — persisting all ~17
+        # lineitem columns made the base materialization mostly
+        # serialization cost (measured: the 2-column rank itself runs
+        # 1.3 s warm at sf0.1 while the full-width persist+count took
+        # 4.6 s). The hint is PER LEVEL (keep_fn): a prefix keeps the
+        # global consumer needs plus the inputs of steps beyond it across
+        # every chain extending it — so the engine's shared all-columns
+        # rank step computes and persists only the ranked columns some
+        # consumer actually touches (sub-linear in table width), while
+        # sibling chains sharing the prefix still find every column they
+        # need. Every base this call reads is looked up with keep_fn:
+        # None would build a full-width one.
+        needs: set[str] = set()
+        chains: dict[tuple, list[Step]] = {}
         # group bar jobs by derived base; within a base, by x column —
         # one GROUPING SETS job per base covers every x
         grouped: dict[tuple, dict[str, list]] = {}
         for key, (x_col, y_cand, agg) in uniq_bars.items():
-            derive_key = steps_key(
+            needs.add(x_col)
+            if y_cand is not None:
+                # what the aggregate ACTUALLY sums: the series-capped
+                # slice (_batched_bars / bar_aggregate both take
+                # [:MAX_SERIES]) — an all-numeric-columns candidate lists
+                # every column in out_cols, and taking the full list here
+                # made `needs` table-wide, defeating the per-consumer
+                # reduction entirely
+                needs.update(_prefer_derived(y_cand)[:MAX_SERIES])
+            chain = [
                 s
                 for s in (y_cand.steps if (agg == "sum" and y_cand) else [])
                 if s.o_type == "append"
-            )
-            grouped.setdefault(derive_key, {}).setdefault(x_col, []).append(
+            ]
+            if chain:
+                chains[steps_key(chain)] = chain
+            grouped.setdefault(steps_key(chain), {}).setdefault(x_col, []).append(
                 (key, x_col, y_cand, agg)
             )
+        suffix: dict[tuple, set[str]] = {}
+        for chain in chains.values():
+            for lvl in range(1, len(chain) + 1):
+                ns = suffix.setdefault(steps_key(chain[:lvl]), set())
+                for s in chain[lvl:]:
+                    ns.update(s.i or [])
+                    ns.update(s.index or [])
+
+        def keep_fn(k: tuple) -> set[str]:
+            return needs | suffix.get(k, set())
 
         def _batched_bars(by_x: dict[str, list]) -> None:
             # r13 fix (r12 verdict "What's wrong" #1): a merged group can
@@ -459,7 +502,7 @@ class Executor:
             try:
                 aggs: dict[str, F.Column] = {}
                 per_entry: list[tuple[tuple, str, list[str]]] = []
-                chains: dict[tuple, list] = {}
+                part_chains: dict[tuple, list] = {}
                 for x_col, entries in by_x.items():
                     for key, _x, y_cand, agg in entries:
                         if agg == "count":
@@ -472,7 +515,7 @@ class Executor:
                                 s for s in y_cand.steps if s.o_type == "append"
                             ]
                             if chain:
-                                chains[steps_key(chain)] = chain
+                                part_chains[steps_key(chain)] = chain
                             ys = _prefer_derived(y_cand)[:MAX_SERIES]
                             names = []
                             for c in ys:
@@ -489,11 +532,11 @@ class Executor:
                 # graft onto the first chain's base as lazy projections —
                 # the merged job scans the shared prefix ONCE for every
                 # chain instead of once per chain
-                chain_list = list(chains.values())
+                chain_list = list(part_chains.values())
                 if not chain_list:
                     base = self.df
                 else:
-                    base = self._derived_base(chain_list[0])
+                    _key, base = self._derived_base(chain_list[0], keep_fn)
                     for ch in chain_list[1:]:
                         for s in ch:
                             if any(
@@ -550,149 +593,75 @@ class Executor:
                     )
             except Exception:
                 # isolate failures: replay each entry through the
-                # original one-agg path so a single bad candidate can't
-                # null its whole batch
+                # one-agg path so a single bad candidate can't null its
+                # whole batch
                 for entries in by_x.values():
                     for key, _x, y_cand, agg in entries:
                         self._bar_frames.pop(key, None)
-                        self.bar_aggregate(_x, y_cand, agg)
+                        self._bar_aggregate(_x, y_cand, agg, keep_fn)
 
-        # Two independent sides run CONCURRENTLY, so the table side's
-        # first base materialization — a full-table rank chain, the most
-        # expensive block of recommend — never waits on the sample side:
-        #
-        # * sample side: the frame pool; each frame reads its chain's
-        #   memoised sample frame (_sample_frame);
-        # * table side: serial derived-base registration (bottom-up
-        #   through the recursive prefix memo so ('rank','sub') reuses
-        #   the cached ('rank',) table and racing threads never duplicate
-        #   work; a rank level runs its one offsets job, which
-        #   materialises its persisted ranking), concurrent per-level
-        #   materialization of any base persisted as a whole, then the
-        #   batched bar pool against the materialized bases.
-        #
-        # The sides fill disjoint memo tables; the only shared state is
-        # the sample-prefix memo, which _sample_derived guards with a lock.
-        def _sample_side() -> None:
-            with ThreadPoolExecutor(workers) as fpool:
-                list(fpool.map(lambda cv: self.channel_frame(*cv), uniq_frames.values()))
+        # a chain prefix is persisted iff its last step is a rank or
+        # nominalize (_derived_base), so the level after which a group's
+        # longest persisted prefix is materialized follows from its key;
+        # arithmetic tails past it are lazy projections the group's own
+        # job computes
+        def _ready_level(dk: tuple) -> int:
+            return max(
+                (L for L, s in enumerate(dk, 1) if s[0] in ("rank", "nominalize")),
+                default=0,
+            )
 
-        def _table_side() -> None:
-            # Column hint for the persisted bases: the bar aggregates
-            # are the ONLY consumers of these tables (channel frames run
-            # on the sample side), and they touch just the groupBy x
-            # columns, the derived outputs, and the arithmetic inputs —
-            # persisting all ~17 lineitem columns made the base
-            # materialization mostly serialization cost (measured: the
-            # 2-column rank itself runs 1.3 s warm at sf0.1 while the
-            # full-width persist+count took 4.6 s). The hint is PER
-            # LEVEL (keep_fn): a prefix keeps the global consumer needs
-            # plus the inputs of steps beyond it across every chain
-            # extending it — so the engine's shared all-columns rank
-            # step computes and persists only the ranked columns some
-            # consumer actually touches (sub-linear in table width),
-            # while sibling chains sharing the prefix still find every
-            # column they need.
-            needs: set[str] = set()
-            chains: dict[tuple, list[Step]] = {}
-            for x_col, y_cand, agg in uniq_bars.values():
-                needs.add(x_col)
-                if y_cand is not None:
-                    # what the aggregate ACTUALLY sums: the series-capped
-                    # slice (_batched_bars / bar_aggregate both take
-                    # [:MAX_SERIES]) — an all-numeric-columns candidate
-                    # lists every column in out_cols, and taking the
-                    # full list here made `needs` table-wide, defeating
-                    # the per-consumer reduction entirely
-                    needs.update(_prefer_derived(y_cand)[:MAX_SERIES])
-                if agg == "sum" and y_cand is not None:
-                    chain = [s for s in y_cand.steps if s.o_type == "append"]
-                    if chain:
-                        chains[steps_key(chain)] = chain
-            suffix: dict[tuple, set[str]] = {}
-            for chain in chains.values():
-                for lvl in range(1, len(chain) + 1):
-                    ns = suffix.setdefault(steps_key(chain[:lvl]), set())
-                    for s in chain[lvl:]:
-                        ns.update(s.i or [])
-                        ns.update(s.index or [])
-
-            def keep_fn(k: tuple) -> set[str]:
-                return needs | suffix.get(k, set())
-
-            # a chain prefix is persisted iff its last step is a rank or
-            # nominalize (_derived_base), so the level after which a
-            # group's longest persisted prefix is materialized follows
-            # from its key; arithmetic tails past it are lazy projections
-            # the group's own job computes
-            def _ready_level(dk: tuple) -> int:
-                return max(
-                    (L for L, s in enumerate(dk, 1) if s[0] in ("rank", "nominalize")),
-                    default=0,
-                )
-
-            # merge chain groups by (ready level, persisted prefix):
-            # chains sharing a materialized prefix differ only in their
-            # lazy arithmetic tails, so one grouping-sets job covers
-            # them all; level-0 groups (no persisted base) merge with
-            # the underived/count group over self.df
-            merged: dict[tuple, dict[str, list]] = {}
-            for dk, bx in grouped.items():
-                lvl = _ready_level(dk)
-                tgt = merged.setdefault((lvl, dk[:lvl]), {})
-                for x, es in bx.items():
-                    tgt.setdefault(x, []).extend(es)
-            sched: dict[int, list] = {}
-            for (lvl, _pk), bx in merged.items():
-                sched.setdefault(lvl, []).append(bx)
-            # The pool is wider than the frame pool: each bar group is one
-            # small groupBy job whose cost is mostly scheduler latency, so
-            # concurrency, not executor pressure, bounds the wall time.
-            # Bases an earlier prefetch on this executor registered are
-            # already materialized; a key evicted and rebuilt since
-            # (_rebuild_base_unpruned) maps to a new DataFrame object.
-            known = dict(self._derived_bases)
-            with ThreadPoolExecutor(max(workers, 16)) as bpool:
-                # level-0 groups read self.df or plan-only arithmetic
-                # projections of it, which their own threads register
-                # (disjoint keys; keep_fn prunes rank levels only): queued
-                # first, their jobs run while the rank levels register
-                futs = [bpool.submit(_batched_bars, e) for e in sched.pop(0, [])]
-                # registering a rank level runs its one offsets job,
-                # which materialises its persisted bucket-local ranking;
-                # only a base persisted as a whole (the wide stacked
-                # rank) is materialised here, level by level — within a
-                # level the bases share no lineage, across levels a
-                # child reads its parent's persisted blocks
-                for ck, chain in chains.items():
-                    if _ready_level(ck):
-                        self._derived_base(chain, keep_fn=keep_fn)
-                by_level: dict[int, list[DataFrame]] = {}
-                for key, base in list(self._derived_bases.items()):
-                    if base.is_cached and known.get(key) is not base:
-                        by_level.setdefault(len(key), []).append(base)
-                for level in sorted(by_level):
-                    group = by_level[level]
-                    with ThreadPoolExecutor(min(8, len(group))) as mpool:
-                        list(mpool.map(lambda b: b.count(), group))
-                    futs += [
-                        bpool.submit(_batched_bars, e)
-                        for e in sched.pop(level, [])
-                    ]
-                for lvl in sorted(sched):
-                    futs += [bpool.submit(_batched_bars, e) for e in sched[lvl]]
-                for f in futs:
-                    f.result()
-
-        # a side with no jobs is skipped, not run empty: in recommend()'s
-        # split calls an empty table side would iterate _derived_bases
-        # while the concurrent bar call registers new bases in it
-        with ThreadPoolExecutor(2) as sides:
-            futs = [
-                sides.submit(side)
-                for side, jobs in ((_sample_side, uniq_frames), (_table_side, uniq_bars))
-                if jobs
-            ]
+        # merge chain groups by (ready level, persisted prefix): chains
+        # sharing a materialized prefix differ only in their lazy
+        # arithmetic tails, so one grouping-sets job covers them all;
+        # level-0 groups (no persisted base) merge with the
+        # underived/count group over self.df
+        merged: dict[tuple, dict[str, list]] = {}
+        for dk, bx in grouped.items():
+            lvl = _ready_level(dk)
+            tgt = merged.setdefault((lvl, dk[:lvl]), {})
+            for x, es in bx.items():
+                tgt.setdefault(x, []).extend(es)
+        sched: dict[int, list] = {}
+        for (lvl, _pk), bx in merged.items():
+            sched.setdefault(lvl, []).append(bx)
+        # The pool is wider than the frame pool: each bar group is one
+        # small groupBy job whose cost is mostly scheduler latency, so
+        # concurrency, not executor pressure, bounds the wall time. Bases
+        # an earlier prefetch on this executor registered are already
+        # materialized.
+        known = set(self._derived_bases)
+        with ThreadPoolExecutor(max(workers, 16)) as bpool:
+            # level-0 groups read self.df or plan-only arithmetic
+            # projections of it, which their own threads register
+            # (disjoint keys; keep_fn prunes rank levels only): queued
+            # first, their jobs run while the rank levels register
+            futs = [bpool.submit(_batched_bars, e) for e in sched.pop(0, [])]
+            # serial registration, bottom-up through the recursive prefix
+            # memo so ('rank','sub') reuses the cached ('rank',) table;
+            # registering a rank level runs its one offsets job, which
+            # materialises its persisted bucket-local ranking; only a
+            # base persisted as a whole (the wide stacked rank) is
+            # materialised here, level by level — within a level the
+            # bases share no lineage, across levels a child reads its
+            # parent's persisted blocks
+            for ck, chain in chains.items():
+                if _ready_level(ck):
+                    self._derived_base(chain, keep_fn)
+            by_level: dict[int, list[DataFrame]] = {}
+            for key, base in list(self._derived_bases.items()):
+                if base.is_cached and key not in known:
+                    by_level.setdefault(len(key), []).append(base)
+            for level in sorted(by_level):
+                group = by_level[level]
+                with ThreadPoolExecutor(min(8, len(group))) as mpool:
+                    list(mpool.map(lambda b: b.count(), group))
+                futs += [
+                    bpool.submit(_batched_bars, e)
+                    for e in sched.pop(level, [])
+                ]
+            for lvl in sorted(sched):
+                futs += [bpool.submit(_batched_bars, e) for e in sched[lvl]]
             for f in futs:
                 f.result()
 
@@ -717,7 +686,6 @@ class Executor:
         derived = [f for frames in self._persisted.values() for f in frames]
         self._derived_bases.clear()
         self._persisted.clear()
-        self._pruned_base_keys.clear()
         # _sample_bases (localCheckpoint blocks, ≤sample_cap rows each)
         # are NOT explicitly unpersisted: each ``.rdd`` access re-runs
         # physical planning — 37 frames × ~25 ms of py4j round trips
@@ -748,11 +716,11 @@ class Executor:
         self,
         derive: list[Step],
         keep_fn=None,
-    ) -> DataFrame:
-        """Derived table for an append-step chain, memoized on the FULL
-        chain key but built from the longest shared prefix — sibling
-        paths like (rank, sub) / (rank, div) / (rank, mul) share one
-        cached rank table instead of re-running the expensive rank.
+    ) -> tuple[tuple, DataFrame]:
+        """Derived table for an append-step chain and its memo key, built
+        from the longest shared prefix — sibling paths like (rank, sub) /
+        (rank, div) / (rank, mul) share one cached rank table instead of
+        re-running the expensive rank.
 
         Only chains whose LAST step is expensive (rank/nominalize — a
         full-table shuffle) are persisted; arithmetic append steps
@@ -763,13 +731,13 @@ class Executor:
         at sf1) to cache what codegen computes for free in the
         consuming aggregate's scan.
 
-        ``keep_fn`` (prefetch's registration pass): ``chain_key ->
-        set[str]`` giving, PER LEVEL, the columns any consumer of that
-        prefix can still touch — the union over every bar job of its
-        groupBy x / output columns plus the inputs of steps BEYOND the
-        prefix, across all registered chains extending it (so sibling
-        chains sharing the prefix can't find it over-pruned). Two
-        effects on a rank/nominalize level:
+        ``keep_fn`` (prefetch's, for its registration and its lookups):
+        ``chain_key -> set[str]`` giving, PER LEVEL, the columns any
+        consumer of that prefix can still touch — the union over every
+        bar job of its groupBy x / output columns plus the inputs of
+        steps BEYOND the prefix, across all registered chains extending
+        it (so sibling chains sharing the prefix can't find it
+        over-pruned). Two effects on a rank/nominalize level:
 
         * the COMPUTATION itself is reduced to the consumed outputs —
           the engine's shared rank step ranks every real column of the
@@ -783,86 +751,57 @@ class Executor:
           touch — including the rank inputs themselves once no later
           step or bar job reads them.
 
-        Only applied when the chain is first registered; memo hits
-        ignore the hint. Public-API callers that later need a pruned
-        column are caught by bar_aggregate's missing-column check →
-        _rebuild_base_unpruned."""
+        The memo key says what the base holds: one entry per level, the
+        step and, on a rank/nominalize level pruned by ``keep_fn``, the
+        frozen keep set (``None`` unpruned), so ``len(key)`` is the
+        chain level. A request for other columns gets its own base;
+        none is ever evicted or rebuilt. A dynamic selector (``i_type``
+        other than ``==``) resolves its inputs from its parent's
+        columns, so it always reads the unpruned parent."""
         if not derive:
-            return self.df
-        key = steps_key(derive)
+            return (), self.df
+        step = derive[-1]
+        pkey, parent = self._derived_base(
+            derive[:-1], keep_fn if step.i_type == "==" else None
+        )
+        keep = None
+        if keep_fn is not None and step.t in ("rank", "nominalize"):
+            keep = frozenset(keep_fn(steps_key(derive)))
+        key = (*pkey, (steps_key([step])[0], keep))
         if key not in self._derived_bases:
-            parent = self._derived_base(derive[:-1], keep_fn=keep_fn)
-            step = derive[-1]
-            parent_key = steps_key(derive[:-1])
-            parent_pruned = bool(derive[:-1]) and parent_key in self._pruned_base_keys
-            if (
-                step.i_type == "=="
-                and any(c not in parent.columns for c in (step.i or []))
-                and derive[:-1]
-            ):
-                # public-API chain extension over a parent pruned for a
-                # different consumer set: rebuild the prefix unpruned
-                # (the in-prefetch keep_fn always includes later-step
-                # inputs, so registration never lands here)
-                parent = self._rebuild_base_unpruned(derive[:-1])
-                parent_pruned = False
-            elif step.i_type != "==" and parent_pruned:
-                # dynamic selectors (num/all/like) resolve their input
-                # set FROM the parent's columns, so a pruned parent
-                # silently changes what the step computes over (a value
-                # change with no missing-column error to catch it) —
-                # rebuild the prefix unpruned before resolving (ADVICE
-                # r10). recommend() only emits '==' steps; this is the
-                # direct-API path.
-                parent = self._rebuild_base_unpruned(derive[:-1])
-                parent_pruned = False
-            keep = keep_fn(key) if keep_fn is not None else None
-            reduced = False
-            if (
-                keep is not None
-                and step.t in ("rank", "nominalize")
-                and step.i_type == "=="
-                and step.index
-                and len(step.i) == len(step.index)
-            ):
-                used = [j for j, o in enumerate(step.index) if o in keep]
-                if used and len(used) < len(step.index):
-                    reduced = True
-                    step = Step(
-                        t=step.t,
-                        i_type=step.i_type,
-                        i=[step.i[j] for j in used],
-                        index=[step.index[j] for j in used],
-                        o_type=step.o_type,
-                    )
             if step.t not in ("rank", "nominalize"):
                 child = apply_tpath(parent, [step])
             else:
-                # RID always survives: a downstream rank step uses it
-                # as the pandas-faithful tie-break, and apply_step
-                # silently drops the tie-break when RID is absent —
-                # a value change, not an error
                 if keep is not None and step.i_type == "==":
+                    if step.index and len(step.i) == len(step.index):
+                        used = [j for j, o in enumerate(step.index) if o in keep]
+                        if used and len(used) < len(step.index):
+                            step = Step(
+                                t=step.t,
+                                i_type=step.i_type,
+                                i=[step.i[j] for j in used],
+                                index=[step.index[j] for j in used],
+                                o_type=step.o_type,
+                            )
                     # the ranking is persisted with its input's columns:
-                    # hand it only what the rank or a consumer reads
+                    # hand it only what the rank or a consumer reads.
+                    # RID always survives: a downstream rank step uses it
+                    # as the pandas-faithful tie-break, and apply_step
+                    # silently drops the tie-break when RID is absent —
+                    # a value change, not an error
                     need = [
                         c for c in parent.columns
                         if c in keep or c == RID or c in step.i
                     ]
                     if len(need) < len(parent.columns):
-                        reduced = True
                         parent = parent.select(*need)
                 owned: list[DataFrame] = []
                 child = apply_step(
                     parent, step, boundaries=self._quantiles, persisted=owned
                 )
                 if keep is not None:
-                    pruned = [
-                        c for c in child.columns if c in keep or c == RID
-                    ]
+                    pruned = [c for c in child.columns if c in keep or c == RID]
                     if pruned:
-                        if len(pruned) < len(child.columns):
-                            reduced = True
                         child = child.select(*pruned)
                 if not owned:
                     # the wide stacked rank persists nothing itself:
@@ -870,37 +809,8 @@ class Executor:
                     child = child.persist()
                     owned.append(child)
                 self._persisted[key] = owned
-            if parent_pruned or reduced:
-                self._pruned_base_keys.add(key)
             self._derived_bases[key] = child
-        return self._derived_bases[key]
-
-    def _rebuild_base_unpruned(self, derive: list[Step]) -> DataFrame:
-        """Evict every memoized prefix of ``derive``'s chain — AND every
-        memoized longer chain extending one of those prefixes, whose
-        cached frames reference the about-to-be-unpersisted parents —
-        then re-derive with no column pruning. Recovery path for a
-        public-API ``bar_aggregate`` whose columns were pruned away by a
-        prior prefetch registration (ADVICE r8); never taken by
-        recommend(), whose registration pass supplies the union of all
-        consumers."""
-        evicted = {
-            steps_key(derive[:k_len]) for k_len in range(1, len(derive) + 1)
-        }
-        stale = [
-            k
-            for k in list(self._derived_bases)
-            if k in evicted or any(k[: len(e)] == e for e in evicted)
-        ]
-        for key in stale:
-            self._derived_bases.pop(key, None)
-            self._pruned_base_keys.discard(key)
-            for frame in self._persisted.pop(key, []):
-                try:
-                    frame.unpersist()
-                except Exception:
-                    pass
-        return self._derived_base(derive)
+        return key, self._derived_bases[key]
 
 
 def _prefer_derived(cand: Candidate) -> list[str]:

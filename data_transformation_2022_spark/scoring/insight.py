@@ -305,8 +305,12 @@ def hist2d_counts(
     keeps the max value strictly inside the last bin; the clip remains
     for degenerate ranges only. ``bounds`` overrides the normalization
     range (needed for per-class histograms, which must share the GLOBAL
-    bounds) and is expected in the same max+1 convention."""
+    bounds) and is expected in the same max+1 convention. A point with a
+    non-finite coordinate is left out: it has no bin."""
     x, y = np.asarray(x, float), np.asarray(y, float)
+    ok = np.isfinite(x) & np.isfinite(y)
+    if not ok.all():
+        x, y = x[ok], y[ok]
     if bounds is None:
         bounds = (x.min(), x.max() + 1.0, y.min(), y.max() + 1.0)
     xlo, xhi, ylo, yhi = bounds
@@ -325,7 +329,13 @@ def hist2d_counts(
 def cdm_score(x: np.ndarray, y: np.ndarray, classes: np.ndarray, bins: int = 10) -> float:
     """Class-separation: mean pairwise L1 distance of per-class 2-D
     histograms over SHARED global bounds, scaled ×100 (reference
-    score.py:61-70)."""
+    score.py:61-70). Rows with a non-finite x or y (a null row's
+    projection) are dropped first, so they move neither the bounds nor a
+    histogram."""
+    x, y = np.asarray(x, float), np.asarray(y, float)
+    ok = np.isfinite(x) & np.isfinite(y)
+    if not ok.all():
+        x, y, classes = x[ok], y[ok], np.asarray(classes)[ok]
     # reference skips negative class labels (DBSCAN outliers, score.py:50-51)
     # but keeps ALL points in the n denominator (score.py:69)
     labels = [
@@ -335,7 +345,6 @@ def cdm_score(x: np.ndarray, y: np.ndarray, classes: np.ndarray, bins: int = 10)
     ]
     if len(labels) < 2:
         return 0.0
-    x, y = np.asarray(x, float), np.asarray(y, float)
     bounds = (x.min(), x.max() + 1.0, y.min(), y.max() + 1.0)
     hists = [hist2d_counts(x[classes == c], y[classes == c], bins, bounds) for c in labels]
     n = len(x)

@@ -81,28 +81,73 @@ def test_search_cat_lines_present(session):
 
 
 # ---------------------------------------------------------------------------
-# live HTTP integration: the four routes served end-to-end (stdlib shim —
-# the container has no Flask; create_http_server is the same session
-# surface behind real sockets)
+# HTTP integration: the four routes served end-to-end by both front-ends,
+# the stdlib server behind real sockets and the Flask app through its test
+# client. Both read one route table (api._routes).
 # ---------------------------------------------------------------------------
 
+_CORS = {
+    "Access-Control-Allow-Origin": "*",
+    "Access-Control-Allow-Method": "*",
+    "Access-Control-Allow-Headers": "x-requested-with,content-type",
+}
 
-def _post(port: int, route: str, payload: dict) -> dict:
-    import urllib.request
 
-    req = urllib.request.Request(
-        f"http://127.0.0.1:{port}{route}",
-        data=json.dumps(payload).encode(),
-        headers={"Content-Type": "application/json"},
-        method="POST",
+def _drive_four_routes(post) -> None:
+    """Post to every route, an unknown route and a bad payload through
+    ``post(route, payload) -> (status, headers, JSON body or None)``;
+    every answer carries the CORS headers."""
+
+    def call(route: str, payload: dict, want: int = 200):
+        code, headers, body = post(route, payload)
+        assert code == want, (route, code, body)
+        for k, v in _CORS.items():
+            assert headers[k] == v, (route, k)
+        return body
+
+    # EP1: ingest via records (reference /vis/csv shape)
+    ingest = call(
+        "/vis/csv",
+        {
+            "headers": ["name", "grp", "v1", "v2"],
+            "body": [[f"row{i}", "ab"[i % 2], i, i * 2] for i in range(40)],
+        },
     )
-    with urllib.request.urlopen(req, timeout=120) as resp:
-        assert resp.headers["Access-Control-Allow-Origin"] == "*"
-        return json.loads(resp.read().decode())
+    assert ingest["columns"]["headers"][0] == "attribute"
+    assert {r[0] for r in ingest["columns"]["body"]} >= {"name", "grp", "v1"}
+
+    # EP2: search
+    found = call("/vis/search", {"vlist": ["bar"]})
+    assert "charts" in found and "provenance" in found
+
+    # EP3a: addT
+    added = call(
+        "/vis/addT",
+        {"pid": "root", "t": "sum",
+         "para": {"i_type": "==", "i": ["v1", "v2"], "o_type": "append",
+                  "index": ["vsum"]}},
+    )
+    assert "vsum" in added["result"]["nodes"][0]["columns"]
+
+    # EP3b: addV
+    x_id = path_id(
+        [{"t": "select", "i_type": "==", "i": ["grp"], "o_type": "new_table",
+          "index": [], "args": []}]
+    )
+    chart = call("/vis/addV", {"vtype": "count_bar", "channels": {"x": x_id}})
+    assert set(chart["result"]["data"]) == {"grp", "COUNT"}
+    assert sum(chart["result"]["data"]["COUNT"]) == 40
+
+    # unknown route → 404, bad payload → 500 JSON error (no crash)
+    call("/vis/nope", {}, want=404)
+    err = call("/vis/addV", {"vtype": "mystery", "channels": {}}, want=500)
+    assert "error" in err
 
 
 def test_http_server_all_four_routes(spark):
     import threading
+    import urllib.error
+    import urllib.request
 
     from data_transformation_2022_spark.api import create_http_server
 
@@ -110,55 +155,36 @@ def test_http_server_all_four_routes(spark):
     port = server.server_address[1]
     t = threading.Thread(target=server.serve_forever, daemon=True)
     t.start()
+
+    def post(route: str, payload: dict):
+        req = urllib.request.Request(
+            f"http://127.0.0.1:{port}{route}",
+            data=json.dumps(payload).encode(),
+            headers={"Content-Type": "application/json"},
+            method="POST",
+        )
+        try:
+            with urllib.request.urlopen(req, timeout=120) as resp:
+                return resp.status, resp.headers, json.loads(resp.read().decode())
+        except urllib.error.HTTPError as e:
+            raw = e.read().decode()
+            return e.code, e.headers, json.loads(raw) if raw else None
+
     try:
-        # EP1: ingest via records (reference /vis/csv shape)
-        ingest = _post(
-            port,
-            "/vis/csv",
-            {
-                "headers": ["name", "grp", "v1", "v2"],
-                "body": [[f"row{i}", "ab"[i % 2], i, i * 2] for i in range(40)],
-            },
-        )
-        assert ingest["columns"]["headers"][0] == "attribute"
-        assert {r[0] for r in ingest["columns"]["body"]} >= {"name", "grp", "v1"}
-
-        # EP2: search
-        found = _post(port, "/vis/search", {"vlist": ["bar"]})
-        assert "charts" in found and "provenance" in found
-
-        # EP3a: addT
-        added = _post(
-            port,
-            "/vis/addT",
-            {"pid": "root", "t": "sum",
-             "para": {"i_type": "==", "i": ["v1", "v2"], "o_type": "append",
-                      "index": ["vsum"]}},
-        )
-        assert "vsum" in added["result"]["nodes"][0]["columns"]
-
-        # EP3b: addV
-        x_id = path_id(
-            [{"t": "select", "i_type": "==", "i": ["grp"], "o_type": "new_table",
-              "index": [], "args": []}]
-        )
-        chart = _post(port, "/vis/addV", {"vtype": "count_bar", "channels": {"x": x_id}})
-        assert set(chart["result"]["data"]) == {"grp", "COUNT"}
-        assert sum(chart["result"]["data"]["COUNT"]) == 40
-
-        # unknown route → 404, bad payload → 500 JSON error (no crash)
-        import urllib.error
-
-        try:
-            _post(port, "/vis/nope", {})
-            assert False, "404 expected"
-        except urllib.error.HTTPError as e:
-            assert e.code == 404
-        try:
-            _post(port, "/vis/addV", {"vtype": "mystery", "channels": {}})
-            assert False, "500 expected"
-        except urllib.error.HTTPError as e:
-            assert e.code == 500 and "error" in json.loads(e.read().decode())
+        _drive_four_routes(post)
     finally:
         server.shutdown()
         server.server_close()
+
+
+def test_flask_app_all_four_routes(spark):
+    pytest.importorskip("flask")
+    from data_transformation_2022_spark.api import create_app
+
+    client = create_app(EngineSession(spark, sample_cap=500)).test_client()
+
+    def post(route: str, payload: dict):
+        resp = client.post(route, data=json.dumps(payload), content_type="application/json")
+        return resp.status_code, resp.headers, resp.get_json(silent=True)
+
+    _drive_four_routes(post)

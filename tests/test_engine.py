@@ -156,11 +156,13 @@ def test_rank_step_reduced_to_consumed_outputs(spark):
     ex3.release()
 
 
-def test_bar_aggregate_rebuilds_pruned_base(spark):
+def test_bar_aggregate_beside_pruned_base(spark):
     """A public-API bar_aggregate on a chain whose persisted base was
     column-pruned by an earlier prefetch registration (for a DIFFERENT
-    consumer set) must rebuild the base unpruned and return real sums —
-    not fall through the except-to-None path (r8 advice)."""
+    consumer set) gets a base of its own, unpruned, and returns real
+    sums — not the except-to-None path (r8 advice); the pruned base stays
+    as it was. Base keys say what the base holds: per level, the step and
+    the keep set it was pruned to (None unpruned)."""
     from data_transformation_2022_spark.engine import Executor
     from data_transformation_2022_spark.operators.steps import Step, steps_key
     from data_transformation_2022_spark.plans.search import Candidate
@@ -171,12 +173,13 @@ def test_bar_aggregate_rebuilds_pruned_base(spark):
     )
     ex = Executor(df, sample_cap=10)
     rank = Step(t="rank", i_type="==", i=["a"], o_type="append", index=["rank a"])
+    unpruned = ((steps_key([rank])[0], None),)
     cand_a = Candidate(
         family="sum_bar", steps=[rank], out_cols=["rank a"], derived=["rank a"]
     )
     ex.prefetch(frame_jobs=[], bar_jobs=[("g", cand_a, "sum")])
-    key = steps_key([rank])
-    assert key in ex._persisted
+    key = next(iter(ex._persisted))
+    assert key[0][0] == steps_key([rank])[0] and key[0][1] is not None
     # per-level pruning: neither the un-consumed column b NOR the rank
     # input a itself survives (no bar job and no later step reads them)
     assert "b" not in ex._derived_bases[key].columns
@@ -184,36 +187,39 @@ def test_bar_aggregate_rebuilds_pruned_base(spark):
     # scenario 1: public-API bar_aggregate summing the pruned column b
     cand_b = Candidate(family="sum_bar", steps=[rank], out_cols=["b"])
     out = ex.bar_aggregate("g", cand_b, "sum")
-    assert out is not None, "pruning miss must rebuild, not return None"
+    assert out is not None, "pruning miss must build a base, not return None"
     got = dict(zip(out["g"], out["SUM(b)"]))
     assert got == {"g0": 760.0, "g1": 800.0}
-    assert "b" in ex._derived_bases[key].columns  # memo now unpruned
+    assert "b" in ex._derived_bases[unpruned].columns
+    assert "b" not in ex._derived_bases[key].columns  # pruned base untouched
+    assert key in ex._persisted
     ex.release()
 
     # scenario 2: extending the chain through _derived_base with a step
-    # whose input was pruned away — the extension itself must rebuild
-    # the prefix unpruned instead of raising, and the child must compute
-    # real values over the rebuilt parent
+    # whose input was pruned away — the extension reads the unpruned
+    # prefix, and the child computes real values over it
     ex2 = Executor(df, sample_cap=10)
     ex2.prefetch(frame_jobs=[], bar_jobs=[("g", cand_a, "sum")])
     assert "a" not in ex2._derived_bases[key].columns
     sub = Step(
         t="sub", i_type="==", i=["rank a", "a"], o_type="append", index=["d"]
     )
-    sib = ex2._derived_base([rank, sub])
-    assert "d" in sib.columns and "a" in ex2._derived_bases[key].columns
+    _sib_key, sib = ex2._derived_base([rank, sub])
+    assert "d" in sib.columns and "a" in ex2._derived_bases[unpruned].columns
+    assert "a" not in ex2._derived_bases[key].columns
     row = sib.orderBy("a").limit(1).collect()[0]
     assert row["d"] == row["rank a"] - row["a"]
     ex2.release()
 
 
-def test_dynamic_selector_over_pruned_prefix_rebuilds(spark):
+def test_dynamic_selector_reads_unpruned_prefix(spark):
     """ADVICE r10: a public-API chain extension whose step uses a
     DYNAMIC input selector (num/all/like) resolves its inputs from the
     parent's columns, so a keep_fn-pruned parent would silently change
-    the computation (no missing-column error). The executor must
-    rebuild the prefix unpruned — the horizontal sum over 'num' must
-    cover ALL ranked columns, identical to a never-pruned executor."""
+    the computation (no missing-column error). The step reads the
+    unpruned prefix instead — the horizontal sum over 'num' must cover
+    ALL ranked columns, identical to a never-pruned executor — and the
+    pruned base stays persisted."""
     from data_transformation_2022_spark.engine import Executor
     from data_transformation_2022_spark.operators.steps import Step
     from data_transformation_2022_spark.plans.search import Candidate
@@ -236,7 +242,7 @@ def test_dynamic_selector_over_pruned_prefix_rebuilds(spark):
     # registration prunes the rank base to the narrow consumer's width
     ex.prefetch(frame_jobs=[], bar_jobs=[("g", narrow, "sum")])
     key = next(iter(ex._persisted))
-    assert key in ex._pruned_base_keys
+    assert key[0][1] is not None  # the key holds the keep set
     assert len([c for c in ex._derived_bases[key].columns
                 if c.startswith("rank ")]) == 1
     # now extend the SAME chain with a dynamic-selector horizontal sum
@@ -252,8 +258,72 @@ def test_dynamic_selector_over_pruned_prefix_rebuilds(spark):
     g = {r["g"]: r["SUM(SUM over num)"] for _, r in got.iterrows()}
     w = {r["g"]: r["SUM(SUM over num)"] for _, r in want.iterrows()}
     assert g == w, (g, w)
+    assert key in ex._persisted
+    assert len([c for c in ex._derived_bases[key].columns
+                if c.startswith("rank ")]) == 1
     ex.release()
     ex2.release()
+
+
+def test_second_registration_builds_its_own_pruned_base(spark, monkeypatch):
+    """A second prefetch whose consumers read ranked columns the first
+    registration pruned away builds a base ranking only those columns:
+    no batched job fails over to the one-aggregate path, nothing is
+    rebuilt at full width, the first base stays persisted, and the sums
+    equal a fresh executor's."""
+    from data_transformation_2022_spark.engine import Executor
+    from data_transformation_2022_spark.operators.steps import Step
+    from data_transformation_2022_spark.plans.search import Candidate
+
+    cols = [f"m{i}" for i in range(6)]
+    df = spark.createDataFrame(
+        [tuple(float((i * 7 + j) % 13) for j in range(6)) + (f"g{i % 3}",)
+         for i in range(30)],
+        ", ".join(f"{c} double" for c in cols) + ", g string",
+    )
+    rank = Step(
+        t="rank", i_type="==", i=list(cols), o_type="append",
+        index=[f"rank {c}" for c in cols],
+    )
+
+    def summing(*names: str) -> Candidate:
+        return Candidate(
+            family="sum_bar", steps=[rank], out_cols=list(names), derived=list(names)
+        )
+
+    first, second = summing("rank m1"), summing("rank m2", "rank m3")
+    ex = Executor(df, sample_cap=10)
+    ex.prefetch([], [("g", first, "sum")])
+    (first_key,) = ex._persisted
+    first_frames = ex._persisted[first_key]
+
+    fallbacks = []
+    one_agg = Executor._bar_aggregate
+
+    def spy(self, *args):
+        fallbacks.append(args)
+        return one_agg(self, *args)
+
+    monkeypatch.setattr(Executor, "_bar_aggregate", spy)
+    ex.prefetch([], [("g", second, "sum")])
+    monkeypatch.undo()
+    truth = Executor(df, sample_cap=10)
+    try:
+        assert fallbacks == []
+        (new_key,) = [k for k in ex._persisted if k != first_key]
+        ranked = sorted(
+            c for c in ex._derived_bases[new_key].columns if c.startswith("rank ")
+        )
+        assert ranked == ["rank m2", "rank m3"]
+        assert ex._persisted[first_key] is first_frames
+        assert all(f.is_cached for f in first_frames)
+        for cand in (first, second):
+            got = ex.bar_aggregate("g", cand, "sum").sort_values("g").reset_index(drop=True)
+            want = truth.bar_aggregate("g", cand, "sum").sort_values("g").reset_index(drop=True)
+            assert got.equals(want), cand.out_cols
+    finally:
+        ex.release()
+        truth.release()
 
 
 def test_bar_prefetch_name_collision_split(spark):
@@ -611,8 +681,9 @@ def test_level0_bars_register_while_rank_levels_register(spark):
             got = ex.bar_aggregate(x, c, agg).sort_values(x).reset_index(drop=True)
             want = truth.bar_aggregate(x, c, agg).sort_values(x).reset_index(drop=True)
             assert got.equals(want), (x, c, agg)
+        chains = {tuple(st for st, _keep in k) for k in ex._derived_bases}
         for c in cands[-2:]:
-            assert steps_key(c.steps) in ex._derived_bases
+            assert steps_key(c.steps) in chains
     finally:
         ex.release()
         truth.release()

@@ -71,6 +71,21 @@ def test_hist2d_and_cdm():
     assert cdm_score(x, y, np.array(["a"] * 4)) == 0.0
 
 
+def test_cdm_drops_non_finite_rows():
+    """A row with a NaN coordinate (a null row's projection) is left out
+    of the bounds and the histograms: the score equals the score of the
+    frame without that row, not a histogram with every point in bin 0."""
+    rng = np.random.RandomState(0)
+    x = np.concatenate([rng.rand(25), rng.rand(25) + 10.0])
+    y = rng.rand(50)
+    cls = np.array(["a"] * 25 + ["b"] * 25)
+    clean = cdm_score(x, y, cls)
+    assert clean == 100.0
+    with_nan = cdm_score(np.append(x, np.nan), np.append(y, 0.5), np.append(cls, "a"))
+    assert with_nan == clean
+    assert hist2d_counts(np.append(x, np.nan), np.append(y, 0.5)).sum() == 50
+
+
 def test_outstanding1_spike_vs_flat():
     spike = sig_outstanding1(np.array([100.0, 2, 2, 2, 2, 2, 2, 2]))
     flat = sig_outstanding1(np.array([2.0] * 8))

@@ -99,22 +99,13 @@ def test_step_args_key_memos_apart(spark, sf_dir):
         s.close()
 
 
-def test_research_matches_fresh_session(spark, monkeypatch):
+def test_research_matches_fresh_session(spark):
     """Re-searching one session — with the clusters it was searched
     with, with changed clusters (whose chains need rank outputs the
-    first search pruned from its persisted base, so the base is rebuilt
-    unpruned), and with another vlist — answers exactly what a fresh
-    session answers; the memo frames it reuses are read-only."""
-    from data_transformation_2022_spark.engine import Executor
-
-    rebuilds = []
-    rebuild = Executor._rebuild_base_unpruned
-
-    def spy(self, derive):
-        rebuilds.append(derive)
-        return rebuild(self, derive)
-
-    monkeypatch.setattr(Executor, "_rebuild_base_unpruned", spy)
+    first search pruned from its persisted base, so they get a pruned
+    base of their own beside it), and with another vlist — answers
+    exactly what a fresh session answers; the memo frames it reuses are
+    read-only."""
     payloads = [
         {"dim_clusters": [["c", "d"]]},
         {"dim_clusters": [["c", "d"]]},
@@ -127,9 +118,14 @@ def test_research_matches_fresh_session(spark, monkeypatch):
         memo = next(f for f in s._ex._frames.values() if f is not None)
         with pytest.raises(ValueError, match="read-only"):
             memo.iloc[0, 0] = -1
+        # base keys hold, per level, the step and the keep set a
+        # rank/nominalize level was pruned to (None: unpruned)
+        keys = list(s._ex._persisted)
+        chains = [tuple(st for st, _keep in k) for k in keys]
+        assert len(set(chains)) < len(chains), "changed clusters must add a base"
+        assert all(keep is not None for k in keys for st, keep in k if st[0] == "rank")
     finally:
         s.close()
-    assert rebuilds, "changed clusters must take the pruned-base rebuild path"
     for p, got in zip(payloads, reused):
         fresh = _table_session(spark)
         try:
