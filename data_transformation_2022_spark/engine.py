@@ -882,13 +882,6 @@ def _split_name_conflicts(by_x: dict[str, list]) -> list[dict[str, list]]:
     return [g for _, g in groups]
 
 
-def _dim_ok(cand: Candidate, t: str, want_dim: int | None) -> bool:
-    sig = CORE_T.get(t)
-    if sig is not None:
-        return want_dim is None or sig.out_dim == want_dim
-    return want_dim is None or len(cand.out_cols) == want_dim
-
-
 def recommend(
     df: DataFrame,
     profile: TableProfile | None = None,

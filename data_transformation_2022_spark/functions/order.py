@@ -371,34 +371,6 @@ def _bucket_counts(
     return pairs_df.groupBy("ci", "b").agg(F.count(F.lit(1)).alias("n")).collect()
 
 
-def attach_global_rank(
-    df: DataFrame,
-    rid_col: str,
-    value_col: str,
-    out_col: str,
-    dense: bool = False,
-) -> DataFrame:
-    """Rank one column and join the result back by row id — the scalable
-    form of ``row_number().over(Window.orderBy(value))`` as a column
-    expression. Shuffle profile: one bucket exchange + one rid join, no
-    single-reducer stage.
-
-    ``dense=False`` ranks by (value, rid) — pandas ``rank(method="first")``
-    tie order (reference Tengine.py:107-108 with searchthread kwargs).
-    ``dense=True`` gives np.unique-sorted dense codes (nominalize,
-    reference Tengine.py:109-114), zero-based.
-    """
-    order = [value_col] if dense else [value_col, rid_col]
-    ranked = global_row_number(
-        df.select(rid_col, value_col),
-        order,
-        out_col,
-        dense=dense,
-        zero_based=dense,
-    ).select(rid_col, out_col)
-    return df.join(ranked, rid_col)
-
-
 def global_running_sum(
     df: DataFrame,
     order_by: list[str],

@@ -38,11 +38,6 @@ def tokens_bpeish(text: Column) -> Column:
     return F.regexp_extract_all(text, F.lit(r"[a-z]+|[0-9]+|[^a-z0-9\s]"), 0)
 
 
-def stopword_count(toks: Column, words: tuple[str, ...] = STOPWORDS) -> Column:
-    lst = ", ".join(f"'{w}'" for w in words)
-    return F.size(F.filter(toks, lambda t: t.isin(*words)))
-
-
 def quality_features(text: Column) -> dict[str, Column]:
     """Quality-scoring features (length / punctuation / stopword ratios).
     Deterministic ratio arithmetic; combine downstream into any score."""

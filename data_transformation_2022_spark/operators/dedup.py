@@ -75,13 +75,6 @@ def shingles_of_tokens(toks: F.Column, n: int = DEFAULT_SHINGLE) -> F.Column:
     return F.array_distinct(F.when(F.size(toks) >= n, sh).otherwise(F.array()))
 
 
-def word_shingles(text: F.Column, n: int = DEFAULT_SHINGLE) -> F.Column:
-    """Distinct n-word shingles of lowercase whitespace tokens. For use
-    on small frames/tests only — operators materialize the token array
-    first and call shingles_of_tokens (see that docstring for why)."""
-    return shingles_of_tokens(tokens_ws(F.lower(text)), n)
-
-
 def _shingle_rows(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     """(id, shingle-string) rows via the two-step tokenize→shingle
     projection that keeps tokenization O(tokens) per document."""

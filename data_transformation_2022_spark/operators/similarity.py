@@ -910,18 +910,6 @@ def lsh_band_signatures(
     )
 
 
-def lsh_bucket_signatures(
-    df: DataFrame, id_col: str, vec_col: str, n_planes: int = 8, seed: int = 42
-) -> DataFrame:
-    """Single-band hyperplane signature per vector (legacy shape): the
-    bands=1 special case of ``lsh_band_signatures`` with the band column
-    dropped. Kept for signature inspection; pair generation should use
-    the banded form."""
-    return lsh_band_signatures(df, id_col, vec_col, bands=1, n_planes=n_planes, seed=seed).drop(
-        "band"
-    )
-
-
 def lsh_neardup_pairs(
     df: DataFrame,
     id_col: str,

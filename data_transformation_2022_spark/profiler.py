@@ -4,13 +4,20 @@ clustering — the Spark re-expression of the reference's
 
 Design for scale:
 
-* **One aggregate pass** computes count / distinct / min / max for every
-  column simultaneously (the reference iterates per column over pandas).
-  Distinct counts use ``approx_count_distinct`` first; only columns whose
-  approximate count is near the row count get an exact confirmation pass
-  (key election must be exact).
+* **Two rounds of concurrent column-group jobs** compute count /
+  distinct / min / max and the quantile sketches of every column (the
+  reference iterates per column over pandas). Distinct counts use
+  ``approx_count_distinct`` first; the second round confirms only the
+  columns whose approximate count is near the row count (exact
+  ``countDistinct``; key election must be exact) or small (a sorted
+  ``collect_set``, which is also the nominal domain). The work splits by
+  column, not by rows: an uploaded single-file table scans as one
+  partition, so one aggregate would run as one task on one core, and the
+  ``percentile_approx`` sketches depend on the partition layout, so the
+  rows stay as they are.
 * **Date inference** trial-parses the reference's format families
-  (``utils.py:44-129``) with ``try_to_date`` over a bounded sample.
+  (``utils.py:44-129``) with ``try_to_date`` over a bounded sample, as
+  one more job of the first round.
 * **Column clustering** (the metadata the path enumerator consumes) runs
   driver-side over O(cols²) statistics: Wasserstein distances from
   ``approxQuantile`` sketches (W1 = mean |q_a − q_b| on a quantile grid),
@@ -102,40 +109,46 @@ def _base_type(t: str) -> str:
     return t.split("(")[0]
 
 
-def _agg_chunked(
-    df: DataFrame,
-    base_aggs: list,
-    per_col: dict[str, list],
-    chunk_cols: int = 32,
-    workers: int = 4,
-) -> dict:
-    """One wide aggregate, split into ≤chunk_cols column groups run as
-    CONCURRENT jobs when the table is wide. Catalyst analysis + janino
-    compile of a single aggregate grows superlinearly in expression
-    count (a 102-column profile pass measured ~30 s of planning on 120
-    rows); splitting restores linearity, and on columnar sources each
-    chunk's scan prunes to its own columns, so no input byte is read
-    twice. Narrow tables keep the original single job."""
-    cols_list = list(per_col)
-    if len(cols_list) <= chunk_cols:
-        aggs = base_aggs + [a for c in cols_list for a in per_col[c]]
-        return df.agg(*aggs).collect()[0].asDict()
+# Catalyst analysis + janino compile of one aggregate grows
+# superlinearly in its expression count (a 102-column profile pass
+# measured ~30 s of planning on 120 rows); column groups of at most
+# this many keep planning linear.
+_GROUP_COLS = 32
+
+
+def _column_groups(cols: list[str], n_groups: int) -> list[list[str]]:
+    """``cols`` dealt round-robin into at most ``n_groups`` groups of at
+    most ``_GROUP_COLS`` each (more groups only when the cap needs them).
+    Callers list their costly columns first, so dealing spreads them."""
+    k = max(min(n_groups, len(cols)), -(-len(cols) // _GROUP_COLS))
+    return [cols[g::k] for g in range(k)]
+
+
+def _collect_aggs(jobs: list[tuple[DataFrame, list]]) -> dict:
+    """Run every ``(frame, aggregates)`` job as its own Spark job, all
+    submitted at once on a pool of ``defaultParallelism`` threads, and
+    merge the jobs' one-row results into one dict (callers give every
+    aggregate a distinct alias).
+
+    The profiler splits its work by COLUMN, never by rows: an uploaded
+    single-file table scans as one partition, so a single aggregate is
+    one task on one core, and repartitioning the rows would move the
+    ``percentile_approx`` sketches (their result depends on the
+    partition layout). Column groups keep every aggregate's input rows
+    where they were wherever the layout does not depend on the columns
+    read: a file scan, a cached frame, a hash partitioning. (A round-robin
+    ``repartition(n)`` sorts each row's bytes before dealing it out, so
+    there the layout follows each job's columns.) On columnar sources
+    each group's scan prunes to its own columns."""
     from concurrent.futures import ThreadPoolExecutor
 
-    groups = [
-        cols_list[i : i + chunk_cols] for i in range(0, len(cols_list), chunk_cols)
-    ]
-
-    def _run(args) -> dict:
-        i, g = args
-        aggs = (base_aggs if i == 0 else []) + [a for c in g for a in per_col[c]]
-        return df.agg(*aggs).collect()[0].asDict()
-
-    with ThreadPoolExecutor(min(workers, len(groups))) as pool:
-        rows = list(pool.map(_run, enumerate(groups)))
     merged: dict = {}
-    for r in rows:
-        merged.update(r)
+    if not jobs:
+        return merged
+    workers = jobs[0][0].sparkSession.sparkContext.defaultParallelism
+    with ThreadPoolExecutor(min(workers, len(jobs))) as pool:
+        for r in pool.map(lambda j: j[0].agg(*j[1]).collect()[0], jobs):
+            merged.update(r.asDict())
     return merged
 
 
@@ -147,8 +160,8 @@ def profile_table(
     date_sample: int = 1000,
     cluster: bool = True,
 ) -> TableProfile:
-    """Profile a table in O(1) aggregate passes (reference: per-column
-    pandas loops over a 400-row frame).
+    """Profile a table in two rounds of concurrent aggregate jobs
+    (reference: per-column pandas loops over a 400-row frame).
 
     Nominal rule: distinct ≤ min(nominal_std·rows, nominal_abs_cap).
     The reference uses the pure percentage (config.py:2) on ≤400 rows;
@@ -157,68 +170,12 @@ def profile_table(
     cols = [c for c, _ in df.dtypes if c != "__rid"]
     dtypes = dict(df.dtypes)
 
-    # ---- pass 1: count + approx distinct + min/max for all columns,
-    # plus the quantile sketches the Wasserstein clustering consumes —
-    # folded into the SAME aggregate job (one table scan instead of a
-    # separate approxQuantile pass; accuracy 100 ≡ the former
-    # relativeError=0.01) ----
-    numeric_typed = [
-        c for c in cols if _base_type(dtypes[c]) in (_NUMERIC | {"decimal"})
-    ]
-    sketch_cols = numeric_typed if cluster else []
-    probs = list(np.linspace(0.0, 1.0, _N_QUANTILES))
-    # ONE probs-literal array Column shared by every sketch: building it
-    # per column is _N_QUANTILES py4j round-trips each (~23 s of pure
-    # driver-side expression construction on a 100-column table)
-    probs_arr = F.array(*[F.lit(p) for p in probs])
-    per_col: dict[str, list[F.Column]] = {}
-    for c in cols:
-        per_col[c] = [
-            F.approx_count_distinct(F.col(c)).alias(f"{c}__ad"),
-            F.min(F.col(c)).alias(f"{c}__min"),
-            F.max(F.col(c)).alias(f"{c}__max"),
-        ]
-        if c in sketch_cols:
-            per_col[c].append(
-                F.percentile_approx(F.col(c), probs_arr, 100).alias(f"{c}__q")
-            )
-    row = _agg_chunked(df, [F.count(F.lit(1)).alias("__n")], per_col)
-    n_rows = row["__n"]
-    quantiles: dict[str, list] = {
-        c: list(row[f"{c}__q"] or []) for c in sketch_cols
-    }
+    workers = df.sparkSession.sparkContext.defaultParallelism
 
-    # ---- exact distinct confirmation where key election needs it ----
-    # approx_count_distinct error ≤ ~5%; near-key columns get an exact
-    # countDistinct, small-cardinality candidates get a sorted collect_set
-    # (their true distinct is bounded by the approx error, so the set is
-    # tiny) — which yields the exact count AND the domain in the SAME
-    # single aggregate job, replacing a per-column distinct query each.
-    nominal_cap = min(nominal_std * n_rows, float(nominal_abs_cap))
-    near_key = [c for c in cols if row[f"{c}__ad"] >= 0.9 * n_rows]
-    small_side = [
-        c for c in cols if c not in near_key and row[f"{c}__ad"] <= nominal_cap * 1.5
-    ]
-    exact: dict[str, int] = {}
-    domains: dict[str, list] = {}
-    if near_key or small_side:
-        per_col2: dict[str, list] = {}
-        for c in near_key:
-            per_col2[c] = [F.countDistinct(F.col(c)).alias(f"{c}__cd")]
-        for c in small_side:
-            per_col2[c] = [
-                F.sort_array(F.collect_set(F.col(c))).alias(f"{c}__dom")
-            ]
-        erow = _agg_chunked(df, [], per_col2)
-        exact = {c: erow[f"{c}__cd"] for c in near_key}
-        for c in small_side:
-            dom = list(erow[f"{c}__dom"])
-            exact[c] = len(dom)
-            domains[c] = dom
-
-    # ---- date-format detection for string columns (bounded sample) ----
-    date_fmt: dict[str, str] = {}
+    # ---- date-format probe for string columns (bounded sample) ----
+    # needs neither pass, so it runs as one more job of pass 1
     str_cols = [c for c in cols if _base_type(dtypes[c]) == "string"]
+    probe: list[tuple[DataFrame, list]] = []
     if str_cols:
         # deterministic sample: a bare limit is partition-order-dependent
         # (format detection could flip run-to-run on a repartitioned
@@ -243,22 +200,93 @@ def profile_table(
                 else:
                     ok = F.expr(f"try_to_date(`{c}`, '{fmt}')").isNotNull()
                 fmt_aggs.append(F.sum(ok.cast("int")).alias(f"{c}__f{i}"))
-        frow = sample.agg(*fmt_aggs).collect()[0]
-        for c in str_cols:
-            nn = frow[f"{c}__nn"] or 0
-            if nn == 0:
-                continue
-            # dominance, not unanimity: the reference types a column
-            # "date" off its FIRST value alone (spreadsheet.py:64-65),
-            # tolerating stragglers in other separators (e.g. Netflix
-            # "October 16. 2019" among "October 16, 2019"). Requiring
-            # every sampled value to parse rejects such columns; ≥95%
-            # keeps the lenient semantics without first-row fragility.
-            need = max(1, _math.ceil(0.95 * nn))
-            for i, fmt in enumerate(DATE_FORMATS):
-                if (frow[f"{c}__f{i}"] or 0) >= need:
-                    date_fmt[c] = fmt
-                    break
+        probe.append((sample, fmt_aggs))
+
+    # ---- pass 1: count + approx distinct + min/max for all columns,
+    # plus the quantile sketches the Wasserstein clustering consumes
+    # (accuracy 100 ≡ the former relativeError=0.01), in column groups
+    # run as concurrent jobs, one per core with the probe (more jobs
+    # than cores only add per-job scan and planning work); the sketched
+    # columns go first so the round-robin deal spreads them ----
+    numeric_typed = [
+        c for c in cols if _base_type(dtypes[c]) in (_NUMERIC | {"decimal"})
+    ]
+    sketch_cols = numeric_typed if cluster else []
+    # plain floats: ``F.lit`` of a numpy scalar adds a cast and an alias
+    # per element, three times the py4j round-trips for the same value
+    probs = np.linspace(0.0, 1.0, _N_QUANTILES).tolist()
+    # ONE probs-literal array Column shared by every sketch: building it
+    # per column is _N_QUANTILES py4j round-trips each (~23 s of pure
+    # driver-side expression construction on a 100-column table)
+    probs_arr = F.array(*[F.lit(p) for p in probs])
+    per_col: dict[str, list[F.Column]] = {}
+    for c in cols:
+        per_col[c] = [
+            F.approx_count_distinct(F.col(c)).alias(f"{c}__ad"),
+            F.min(F.col(c)).alias(f"{c}__min"),
+            F.max(F.col(c)).alias(f"{c}__max"),
+        ]
+        if c in sketch_cols:
+            per_col[c].append(
+                F.percentile_approx(F.col(c), probs_arr, 100).alias(f"{c}__q")
+            )
+    dealt = sketch_cols + [c for c in cols if c not in sketch_cols]
+    pass1 = [
+        (df, [a for c in group for a in per_col[c]])
+        for group in _column_groups(dealt, workers - len(probe))
+    ] or [(df, [])]
+    pass1[0][1].insert(0, F.count(F.lit(1)).alias("__n"))
+    row = _collect_aggs(probe + pass1)
+    n_rows = row["__n"]
+    quantiles: dict[str, list] = {
+        c: list(row[f"{c}__q"] or []) for c in sketch_cols
+    }
+
+    # ---- pass 2: exact distinct confirmation where key election needs it ----
+    # approx_count_distinct error ≤ ~5%; near-key columns get an exact
+    # countDistinct, small-cardinality candidates get a sorted collect_set
+    # (their true distinct is bounded by the approx error, so the set is
+    # tiny), which yields the exact count AND the domain. The two kinds
+    # run as separate jobs: a distinct aggregate sharing one ``agg`` with
+    # other aggregates makes Spark plan an Expand over every row.
+    nominal_cap = min(nominal_std * n_rows, float(nominal_abs_cap))
+    near_key = [c for c in cols if row[f"{c}__ad"] >= 0.9 * n_rows]
+    small_side = [
+        c for c in cols if c not in near_key and row[f"{c}__ad"] <= nominal_cap * 1.5
+    ]
+    erow = _collect_aggs(
+        [
+            (df, [F.countDistinct(F.col(c)).alias(f"{c}__cd") for c in group])
+            for group in _column_groups(near_key, workers)
+        ]
+        + [
+            (df, [F.sort_array(F.collect_set(F.col(c))).alias(f"{c}__dom") for c in group])
+            for group in _column_groups(small_side, workers)
+        ]
+    )
+    exact: dict[str, int] = {c: erow[f"{c}__cd"] for c in near_key}
+    domains: dict[str, list] = {}
+    for c in small_side:
+        dom = list(erow[f"{c}__dom"])
+        exact[c] = len(dom)
+        domains[c] = dom
+
+    date_fmt: dict[str, str] = {}
+    for c in str_cols:
+        nn = row[f"{c}__nn"] or 0
+        if nn == 0:
+            continue
+        # dominance, not unanimity: the reference types a column
+        # "date" off its FIRST value alone (spreadsheet.py:64-65),
+        # tolerating stragglers in other separators (e.g. Netflix
+        # "October 16. 2019" among "October 16, 2019"). Requiring
+        # every sampled value to parse rejects such columns; ≥95%
+        # keeps the lenient semantics without first-row fragility.
+        need = max(1, _math.ceil(0.95 * nn))
+        for i, fmt in enumerate(DATE_FORMATS):
+            if (row[f"{c}__f{i}"] or 0) >= need:
+                date_fmt[c] = fmt
+                break
 
     # ---- semantic typing + key election (reference spreadsheet.py:60-177) --
     profiles: dict[str, ColumnProfile] = {}
@@ -404,22 +432,6 @@ def profile_table_cached(
 
 
 _N_QUANTILES = 33
-
-
-def wasserstein_matrix(
-    df: DataFrame, cols: list[str], n_q: int = _N_QUANTILES
-) -> np.ndarray:
-    """Pairwise W1 distance between min-max-normalized column
-    distributions, from approxQuantile sketches — one sketch pass, then
-    driver-side O(cols²·n_q) numpy (reference: exact scipy Wasserstein
-    over raw 400-row columns, spreadsheet.py:187-190).
-
-    Standalone entry point; ``profile_table`` computes the same sketches
-    inside its main aggregate pass and goes straight to
-    ``wasserstein_from_quantiles`` (one fewer table scan)."""
-    probs = list(np.linspace(0.0, 1.0, n_q))
-    qs = df.stat.approxQuantile(cols, probs, 0.01)
-    return wasserstein_from_quantiles({c: q for c, q in zip(cols, qs)}, cols)
 
 
 def wasserstein_from_quantiles(

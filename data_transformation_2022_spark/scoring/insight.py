@@ -232,17 +232,21 @@ def scagnostics(x: np.ndarray, y: np.ndarray) -> dict[str, float]:
 
     # clumpy: RUNT-style — for each edge, 1 − (max edge length within the
     # smaller component after cutting) / (cut edge length)
+    size, inner, outer, parent = _cut_sides(adj)
     clumpy = 0.0
     order = np.argsort(lens)[::-1]
     for ei in order[: min(len(order), 50)]:
         u, v, w = edges[ei]
         if w <= 0:
             break
-        side = _component_edges(adj, int(u), int(v))
-        other = _component_edges(adj, int(v), int(u))
-        small = side if len(side[0]) <= len(other[0]) else other
-        nodes, max_len = small
-        if len(nodes) < 2:
+        u, v = int(u), int(v)
+        # c: the endpoint on the far side from the root; cutting the
+        # edge leaves c's subtree on one side, the rest on the other
+        c = u if parent[u] == v else v
+        below, above = (size[c], inner[c]), (n - size[c], outer[c])
+        side, other = (below, above) if c == u else (above, below)
+        n_nodes, max_len = side if side[0] <= other[0] else other
+        if n_nodes < 2:
             continue
         clumpy = max(clumpy, 1.0 - (max_len / w if w > 0 else 1.0))
     clumpy = float(min(max(clumpy, 0.0), 1.0))
@@ -272,21 +276,53 @@ def scagnostics(x: np.ndarray, y: np.ndarray) -> dict[str, float]:
     }
 
 
-def _component_edges(adj, start: int, banned: int) -> tuple[set[int], float]:
-    """Nodes + max edge length reachable from start without crossing to
-    ``banned`` (i.e. one side of a cut tree edge)."""
-    seen = {start}
-    stack = [start]
-    max_len = 0.0
-    while stack:
-        u = stack.pop()
+def _cut_sides(adj) -> tuple[list[int], list[float], list[float], list[int]]:
+    """Both sides of every tree edge in two passes over the tree rooted
+    at node 0. For each non-root node c, cutting the edge to its parent
+    leaves ``size[c]`` nodes whose longest edge is ``inner[c]`` (c's
+    subtree) and the other ``n - size[c]`` nodes, whose longest edge is
+    ``outer[c]``; a side without edges reads 0.0. Every ``max`` starts
+    from a 0.0 already held, so a NaN length never wins one, as in a
+    walk that folds ``max`` edge by edge from 0.0."""
+    n = len(adj)
+    parent = [-1] * n
+    up_w = [0.0] * n  # length of the edge to the parent
+    order = [0]  # breadth-first: every parent before its children
+    seen = [False] * n
+    seen[0] = True
+    for u in order:
         for v, w in adj[u]:
-            if (u == start and v == banned) or v in seen:
+            if not seen[v]:
+                seen[v] = True
+                parent[v], up_w[v] = u, w
+                order.append(v)
+    # post-order: subtree sizes and the longest edge inside each subtree
+    size = [1] * n
+    inner = [0.0] * n
+    for c in reversed(order[1:]):
+        p = parent[c]
+        size[p] += size[c]
+        inner[p] = max(inner[p], up_w[c], inner[c])
+    # rerooting: the longest edge outside c's subtree is the longest of
+    # the parent's own outside, the parent's edge upward, and the best
+    # branch among c's siblings (the top two branches cover every c)
+    outer = [0.0] * n
+    for p in order:
+        best = second = 0.0
+        best_c = -1
+        for c, w in adj[p]:
+            if c == parent[p]:
                 continue
-            seen.add(v)
-            max_len = max(max_len, w)
-            stack.append(v)
-    return seen, max_len
+            branch = max(inner[c], w)
+            if branch > best:
+                best, second, best_c = branch, best, c
+            elif branch > second:
+                second = branch
+        above = max(outer[p], up_w[p])
+        for c, _ in adj[p]:
+            if c != parent[p]:
+                outer[c] = max(above, second if c == best_c else best)
+    return size, inner, outer, parent
 
 
 # ---------------------------------------------------------------------------

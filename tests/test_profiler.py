@@ -3,6 +3,10 @@ reference's parsedata semantics (SURVEY §1.2-1.3) on known inputs."""
 
 from __future__ import annotations
 
+import dataclasses
+import os
+
+import numpy as np
 import pandas as pd
 import pytest
 
@@ -10,9 +14,7 @@ from data_transformation_2022_spark.profiler import (
     dbscan_labels,
     profile_table,
 )
-from data_transformation_2022_spark.sources.readers import load_table
-
-import numpy as np
+from data_transformation_2022_spark.sources.readers import load_table, read_csv, with_rid
 
 
 def test_semantic_types_and_key(spark):
@@ -207,3 +209,105 @@ def test_profile_cache_keyed_on_files_and_plan(spark, tmp_path):
     spark.range(50).selectExpr("id", "id % 5 AS g").write.mode("overwrite").parquet(path)
     c = profile_table_cached(spark.read.parquet(path), cluster=False)
     assert c is not a and c.n_rows == 50
+
+
+# ---- the concurrent column-group jobs never change the profile ----
+
+
+def _one_agg_per_frame(jobs):
+    """The plan before the split: every aggregate over one frame in ONE
+    ``agg`` (all of pass 1; all of pass 2, countDistinct and collect_set
+    side by side), run one after another."""
+    by_frame: dict[int, tuple] = {}
+    for frame, aggs in jobs:
+        by_frame.setdefault(id(frame), (frame, []))[1].extend(aggs)
+    merged: dict = {}
+    for frame, aggs in by_frame.values():
+        merged.update(frame.agg(*aggs).collect()[0].asDict())
+    return merged
+
+
+def _wide_frame(spark, sf_dir):
+    rng = np.random.RandomState(3)
+    n = 240
+    cols = {f"x{i}": rng.normal(size=n).tolist() for i in range(16)}  # near-key reals
+    cols |= {f"k{i}": rng.randint(0, 4, n).tolist() for i in range(12)}  # small ints
+    cols |= {f"s{i}": [f"v{v}" for v in rng.randint(0, 3, n)] for i in range(8)}
+    cols |= {"id": [f"row{i}" for i in range(n)], "big": rng.randint(0, 80, n).tolist()}
+    return spark.createDataFrame(pd.DataFrame(cols))
+
+
+def _nulls_and_dates(spark, sf_dir):
+    rows = [
+        (
+            i,
+            None if i % 7 == 0 else float(i % 13) * 1.5,
+            None if i % 5 == 0 else f"2021-{1 + i % 12}-{1 + i % 28}",
+            None if i % 3 == 0 else ["a", "b", "c"][i % 3],
+            None if i % 11 == 0 else float(i) ** 1.5,
+        )
+        for i in range(300)
+    ]
+    return spark.createDataFrame(rows, "n bigint, q double, d string, cat string, r double")
+
+
+# "repartitioned" is hash-partitioned on purpose. A round-robin
+# ``repartition(3)`` sorts the rows' bytes before dealing them out
+# (spark.sql.execution.sortBeforeRepartition), and column pruning puts
+# each job's projection below that exchange, so which row lands in which
+# partition follows the columns a job reads. The percentile sketches
+# depend on that layout: any column split of such a frame moves them.
+_SPLIT_INPUTS = {
+    "lineitem": lambda spark, sf_dir: load_table(spark, sf_dir, "lineitem", rid=True),
+    "collide_temp": lambda spark, sf_dir: with_rid(
+        read_csv(spark, os.path.join(os.path.dirname(__file__), "fixtures", "collide_temp.csv"))
+    ),
+    "wider_than_32": _wide_frame,
+    "nulls_and_dates": _nulls_and_dates,
+    "repartitioned": lambda spark, sf_dir: _nulls_and_dates(spark, sf_dir).repartition(3, "n"),
+}
+
+
+@pytest.mark.parametrize("name", list(_SPLIT_INPUTS))
+def test_column_group_jobs_equal_single_aggregates(spark, sf_dir, monkeypatch, name):
+    """``profile_table`` over concurrent column-group jobs equals, field
+    by field, the profile built from one aggregate per pass; and no job
+    mixes a distinct aggregate with other aggregates."""
+    from data_transformation_2022_spark import profiler
+
+    df = _SPLIT_INPUTS[name](spark, sf_dir)
+    rounds = []
+    real = profiler._collect_aggs
+
+    def spy(jobs):
+        rounds.append(jobs)
+        return real(jobs)
+
+    monkeypatch.setattr(profiler, "_collect_aggs", spy)
+    got = profile_table(df)
+    monkeypatch.setattr(profiler, "_collect_aggs", _one_agg_per_frame)
+    want = profile_table(df)
+
+    assert list(got.columns) == list(want.columns)
+    for c, cp in want.columns.items():
+        g = got.columns[c]
+        assert (g.n_distinct, g.domain, g.min_val, g.max_val) == (
+            cp.n_distinct, cp.domain, cp.min_val, cp.max_val
+        ), c
+        assert g == cp, c
+    assert got.quantiles == want.quantiles
+    for f in dataclasses.fields(profiler.TableProfile):
+        assert getattr(got, f.name) == getattr(want, f.name), f.name
+
+    # the split really happened: one job per core in the first round
+    # (more only when a group would pass 32 columns), groups ≤ 32 columns
+    n_cols = len([c for c in df.columns if c != "__rid"])
+    workers = spark.sparkContext.defaultParallelism
+    pass1 = [aggs for frame, aggs in rounds[0] if frame is df]
+    assert len(rounds[0]) <= max(workers, -(-n_cols // 32) + 1)
+    assert len(pass1) > 1 or workers <= 2
+    assert all(sum("__ad" in str(a) for a in aggs) <= 32 for aggs in pass1)
+    for jobs in rounds:
+        for _, aggs in jobs:
+            distinct = [str(a).endswith("__cd'>") for a in aggs]  # countDistinct
+            assert all(distinct) or not any(distinct)
